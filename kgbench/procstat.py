@@ -29,12 +29,15 @@ def _children(pid: int) -> list[int]:
     return out
 
 
-def tree(root: int | None = None) -> list[int]:
-    """``root`` (default: this process) and all its live descendants."""
+def tree(root: int | None = None, skip: int | None = None) -> list[int]:
+    """``root`` (default: this process) and all its live descendants,
+    leaving out ``skip`` and everything below it."""
     todo = [root or os.getpid()]
     seen: list[int] = []
     while todo:
         pid = todo.pop()
+        if pid == skip:
+            continue
         seen.append(pid)
         todo.extend(_children(pid))
     return seen
@@ -77,17 +80,32 @@ def cpu_s(pids: list[int]) -> float:
     return total / _CLK_TCK
 
 
-def jit_cpu_s(jvm: int) -> float:
-    """User + system CPU seconds of the JVM's JIT compiler threads."""
-    total = 0
+def jit_cpu_s(jvm: int) -> dict[str, float]:
+    """User + system CPU seconds of each live JIT compiler thread of the
+    JVM, by thread id. The JVM starts and ends compiler threads as the
+    compile queue grows and shrinks, so compare two readings with
+    ``jit_cpu_delta``."""
+    out = {}
     for tid in os.listdir(f"/proc/{jvm}/task"):
         try:
             comm, fields = _stat(f"/proc/{jvm}/task/{tid}/stat")
         except OSError:
             continue
         if comm.startswith(("C1 CompilerThre", "C2 CompilerThre")):
-            total += int(fields[11]) + int(fields[12])
-    return total / _CLK_TCK
+            out[tid] = (int(fields[11]) + int(fields[12])) / _CLK_TCK
+    return out
+
+
+def jit_cpu_delta(before: dict[str, float], after: dict[str, float]) -> float:
+    """Compiler-thread CPU seconds between two ``jit_cpu_s`` readings,
+    over the threads alive at the second one (the CPU of a thread that
+    ended in between is not counted; a thread id that reads lower than
+    before was reused by a new thread and counts in full)."""
+    total = 0.0
+    for tid, s in after.items():
+        s0 = before.get(tid, 0.0)
+        total += s - s0 if s >= s0 else s
+    return total
 
 
 def steal_s() -> float:

@@ -87,27 +87,31 @@ class Bench:
     # -- set-up outside the session ---------------------------------------
 
     def prepare(self) -> None:
-        from kgbench import gen, oracle
+        """Start the checker process (``checker.py``); it writes the inputs
+        and replays the oracle over them."""
+        self.checker = subprocess.Popen(
+            [sys.executable, "-m", "kgbench.checker"],
+            cwd=ROOT, stdin=subprocess.PIPE, stdout=subprocess.PIPE, text=True,
+        )
+        r = self.ask(
+            op="prepare", work=str(self.work), turns=self.wl.turns, seed=self.seed,
+            variant_share=self.wl.variant_share, merged=self.wl.use_model,
+            threads=self.cores,
+        )
+        self.paths = r["paths"]
+        self.bench_s.update(gen_s=r["gen_s"], oracle_s=r["oracle_s"])
 
-        t0 = time.perf_counter()
-        inp = self.work / "input"
-        inp.mkdir(parents=True)
-        self.paths = gen.write_inputs(str(inp), self.wl.turns, self.seed, self.wl.variant_share)
-        self.bench_s["gen_s"] = time.perf_counter() - t0
-
-        t0 = time.perf_counter()
-        (self.work / "duckdb").mkdir()
-        con = oracle.connect(self.cores, str(self.work / "duckdb"))
-        try:
-            sql = oracle.oracle_sql(
-                self.wl.use_model, self.paths["transcripts"], self.paths["dictionary"]
-            )
-            self.expected = oracle.expected(con, sql)
-        finally:
-            con.close()
-        self.bench_s["oracle_s"] = time.perf_counter() - t0
-        # written outputs are checked one at a time, single-threaded
-        self.check_con = oracle.connect(1, str(self.work / "duckdb"))
+    def ask(self, **request):
+        """One request to the checker process; returns its reply."""
+        self.checker.stdin.write(json.dumps(request) + "\n")
+        self.checker.stdin.flush()
+        line = self.checker.stdout.readline()
+        if not line:
+            raise RuntimeError("the checker process ended")
+        reply = json.loads(line)
+        if "error" in reply:
+            raise RuntimeError("checker: " + reply["error"])
+        return reply
 
     # -- the session --------------------------------------------------------
 
@@ -120,13 +124,8 @@ class Bench:
             "spark.local.dir": str(self.work / "spark-local"),
             "spark.sql.warehouse.dir": str(self.work / "warehouse"),
             "spark.driver.memory": DRIVER_MEMORY,
-            # a fixed set of JIT compiler threads, so their CPU can be told
-            # apart from the build's (procstat.jit_cpu_s); no hsperfdata
-            # file in the system temp dir
-            "spark.driver.extraJavaOptions": (
-                f"-Djava.io.tmpdir={tmp} -XX:-UseDynamicNumberOfCompilerThreads"
-                " -XX:-UsePerfData"
-            ),
+            # no hsperfdata file in the system temp dir
+            "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData",
             "spark.ui.showConsoleProgress": "false",
         }
         if self.trace:
@@ -142,12 +141,19 @@ class Bench:
         return self.spark
 
     def close(self) -> None:
-        """Close the check connection, stop the session and wait for the
-        JVM and every process below this one to end."""
+        """End the checker process, stop the session and wait for the JVM
+        and every process below this one to end."""
         from kgbench import procstat
 
-        if hasattr(self, "check_con"):
-            self.check_con.close()
+        checker = getattr(self, "checker", None)
+        if checker is not None:
+            checker.stdin.close()  # the checker exits when its stdin closes
+            try:
+                checker.wait(timeout=30)
+            except subprocess.TimeoutExpired:
+                checker.kill()
+                checker.wait()
+            self.checker = None
         spark = getattr(self, "spark", None)
         if spark is None:
             return
@@ -200,11 +206,7 @@ class Bench:
         return json.loads(buf.getvalue().strip().splitlines()[-1])["counts"]
 
     def check(self, out: str, counts: dict[str, int]) -> list[str]:
-        from kgbench import oracle
-
-        return oracle.mismatches(
-            self.expected, counts, oracle.written(self.check_con, os.path.join(out, "triples"))
-        )
+        return self.ask(op="check", triples_dir=os.path.join(out, "triples"), counts=counts)["bad"]
 
     def build(self, run, timed: bool) -> dict[str, float] | None:
         """One checked build through ``run(staging, out) -> counts``; returns
@@ -217,8 +219,11 @@ class Bench:
         self.attempted += 1
         self.timed += timed
         try:
+            # the measured tree: this driver, the JVM and its Python
+            # workers; the idle checker process is not part of it
+            skip = self.checker.pid
             jvm = procstat.jvm_pid()
-            pids = procstat.tree()
+            pids = procstat.tree(skip=skip)
             procstat.reset_peaks(pids)
             cpu0, jvm0 = procstat.cpu_s(pids), self.jvm_counters()
             jit0, steal0 = procstat.jit_cpu_s(jvm), procstat.steal_s()
@@ -226,12 +231,12 @@ class Bench:
             counts = run(staging, out)
             wall = time.perf_counter() - t0
             steal = procstat.steal_s() - steal0
-            jit_cpu = procstat.jit_cpu_s(jvm) - jit0
-            pids = procstat.tree()
+            jit_cpu = procstat.jit_cpu_delta(jit0, procstat.jit_cpu_s(jvm))
+            pids = procstat.tree(skip=skip)
             python = [p for p in pids if p != jvm]
             m = {
                 "build_s": wall,
-                "cpu_s": procstat.cpu_s(pids) - cpu0 - jit_cpu,
+                "cpu_s": procstat.cpu_s(pids) - cpu0,
                 "jit_cpu_s": jit_cpu,
                 "steal_s": steal,
                 "peak_rss_mb": procstat.peak_rss_mb(python),
