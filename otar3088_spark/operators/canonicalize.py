@@ -1,6 +1,6 @@
 """Canonicalization — stage P5: label resolution + surface-form clustering.
 
-Two kernels:
+Three kernels:
 
 * ``resolve_labels`` — the reference's mode-label-with-priority resolution
   (cellfinder_clean.ipynb cell 16 ``get_mode_label``): per surface term, the
@@ -10,18 +10,24 @@ Two kernels:
   ``row_number`` over a (count desc, priority asc) window + broadcast join
   back — the canonical Spark shape for argmax-per-group.
 
-* ``connected_components`` — min-label propagation over an edge DataFrame,
-  the graph step the north rule requires (the reference's seed of this is
-  canonicalization-by-grouping, cellfinder_clean.ipynb cell 16). Iterative
-  DataFrame self-joins with per-iteration ``localCheckpoint`` to cut lineage;
-  converges in O(diameter) rounds. Alias clusters have tiny diameters (≤3);
+* ``alias_clusters`` — dictionary alias clustering (the reference's
+  canonicalization-by-grouping, cellfinder_clean.ipynb cell 16): union-find
+  on the driver over the alias keys that ``PreparedDictionary.build``
+  collects in its one pass over the broadcast-scale dictionary. No Spark
+  job and no checkpointed lineage; ``entity_clusters`` hands the result on
+  as a DataFrame.
+
+* ``connected_components`` — min-label propagation over a data-scale edge
+  DataFrame, the graph step the north rule requires. Iterative DataFrame
+  self-joins with per-iteration ``localCheckpoint`` to cut lineage;
+  converges in O(log diameter) rounds with pointer jumping;
   ``connected_components_star`` below is the adversarial-graph path
   (alternating large-star/small-star, O(log² n) rounds on any shape).
 """
 
 from __future__ import annotations
 
-from collections import OrderedDict
+from collections.abc import Iterable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -91,24 +97,33 @@ def alias_key_expr(term_col) -> Column:
     return F.regexp_replace(F.concat_ws("", kept), r"[^a-z0-9]", "")
 
 
-def alias_edges(dictionary: DataFrame) -> DataFrame:
-    """Star edges (ent_id -> min ent_id per alias key). Keeps edge count
-    linear in |dict| instead of quadratic per key group."""
-    keyed = dictionary.select(
-        F.col("ent_id"), alias_key_expr(F.col("term")).alias("akey")
-    ).filter(F.length("akey") > 0)
-    reps = keyed.groupBy("akey").agg(F.min("ent_id").alias("rep"))
-    return (
-        keyed.join(reps, "akey")
-        .select(F.col("ent_id").alias("src"), F.col("rep").alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
+def alias_clusters(ent_akeys: Iterable[tuple]) -> list[tuple]:
+    """Driver-side alias clustering: ``(ent_id, alias_key)`` rows in,
+    ``(ent_id, cluster_id)`` for every distinct non-NULL ent_id out, where
+    entities sharing a non-empty alias key are connected and cluster_id is
+    the min ent_id of the connected component (singletons map to
+    themselves). Union-find with path halving, root = component min."""
+    parent: dict = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    first_of_key: dict = {}
+    for ent, akey in ent_akeys:
+        if ent is None:
+            continue
+        ra = find(ent)
+        if akey:
+            rb = find(first_of_key.setdefault(akey, ent))
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+    return sorted((e, find(e)) for e in parent)
 
 
-def connected_components(
-    edges: DataFrame, max_iter: int = 20, small_graph_threshold: int = 100_000
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     """Min-label propagation + pointer jumping over ``edges(src, dst)`` ->
     ``(node, component)``.
 
@@ -119,44 +134,13 @@ def connected_components(
     O(diameter). ``localCheckpoint`` truncates lineage each round; shuffles
     hash on ``node``; AQE splits skewed hubs. For adversarial giant
     components use ``connected_components_star`` (implemented below).
+    Dictionary-scale alias graphs never come here: they are clustered on
+    the driver by ``alias_clusters``.
     """
     sym = edges.select("src", "dst").union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct()
     sym = sym.localCheckpoint(eager=True)
-
-    # Small-graph fast path: dictionary-derived alias graphs are broadcast-
-    # scale (the dim table fits on the driver by design). The iterative loop
-    # costs O(rounds) serial Spark jobs — pure fixed overhead for a graph
-    # this size — so collect + union-find and return. The DataFrame loop
-    # below is the path for data-scale graphs (mention co-occurrence etc.).
-    n_edges = sym.count()
-    if n_edges <= small_graph_threshold:
-        parent: dict = {}
-
-        def find(x):
-            while parent.setdefault(x, x) != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        rows = sym.collect()
-        for r in rows:
-            ra, rb = find(r["src"]), find(r["dst"])
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        out = sorted({(n, find(n)) for n in parent})
-        spark = edges.sparkSession
-        # explicit schema derived from the edge key type: createDataFrame
-        # cannot infer a schema from an empty list, and a dictionary with no
-        # alias collisions legitimately produces zero edges.
-        from pyspark.sql import types as T
-
-        node_type = edges.schema["src"].dataType
-        schema = T.StructType(
-            [T.StructField("node", node_type), T.StructField("component", node_type)]
-        )
-        return spark.createDataFrame(out, schema)
 
     comps = (
         sym.select(F.col("src").alias("node"))
@@ -298,36 +282,12 @@ def connected_components_star(edges: DataFrame, max_iter: int = 50) -> DataFrame
     )
 
 
-# identity-keyed per-dictionary memo, same pattern and staleness contract as
-# tagging's _PREP_MEMO/_ANCHOR_MEMO: the dictionary is a broadcast dim by
-# contract, so the eager driver-side alias-clustering work below (a
-# localCheckpoint job + the small-graph union-find collect inside
-# connected_components) is legitimate plan-time work over the dim — but it
-# is IDENTICAL for the same dictionary DataFrame object and was re-run on
-# every pipeline build (measured 0.7 s of a 2.0 s warm build_kg, round 7).
-_CLUSTER_MEMO: OrderedDict[int, tuple[DataFrame, DataFrame]] = OrderedDict()
-_CLUSTER_MEMO_MAX = 8
+def entity_clusters(dictionary) -> DataFrame:
+    """``(ent_id, cluster_id)`` for every prepared dictionary entity;
+    singletons map to themselves, cluster_id = min ent_id of the alias
+    component. ``dictionary`` is a ``PreparedDictionary`` (its clusters are
+    returned as built, no Spark job) or a ``prepare_dictionary`` DataFrame
+    (built into one first: one Spark collect)."""
+    from otar3088_spark.operators.tagging import as_prepared
 
-
-def entity_clusters(dictionary: DataFrame) -> DataFrame:
-    """``(ent_id, cluster_id)`` for every dictionary entity; singletons map to
-    themselves. cluster_id = min ent_id of the connected component.
-
-    Memoized per dictionary DataFrame object (see _CLUSTER_MEMO above): a
-    re-read of changed dictionary data is a new object -> miss."""
-    hit = _CLUSTER_MEMO.get(id(dictionary))
-    if hit is not None and hit[0] is dictionary:
-        _CLUSTER_MEMO.move_to_end(id(dictionary))
-        return hit[1]
-    edges = alias_edges(dictionary)
-    comps = connected_components(edges)
-    all_ents = dictionary.select("ent_id").distinct()
-    out = all_ents.join(
-        comps.withColumnRenamed("node", "ent_id"), "ent_id", "left"
-    ).select(
-        "ent_id", F.coalesce(F.col("component"), F.col("ent_id")).alias("cluster_id")
-    )
-    _CLUSTER_MEMO[id(dictionary)] = (dictionary, out)
-    while len(_CLUSTER_MEMO) > _CLUSTER_MEMO_MAX:
-        _CLUSTER_MEMO.popitem(last=False)
-    return out
+    return as_prepared(dictionary).clusters

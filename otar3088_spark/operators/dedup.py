@@ -98,8 +98,7 @@ def _md5_sig_udf(num_hashes: int, shingle_k: int):
     ``normalized_text_expr`` (so the locale/regex-sensitive steps stay in
     one engine): the text is single-spaced and trimmed, tokens can be
     neither empty nor contain spaces, hence adjacent k-gram joins replicate
-    ``shingles_expr`` exactly (including its exactly-k-tokens filter), and
-    only |docs| short strings cross the Arrow boundary instead of the
+    ``shingles_expr`` exactly, and only |docs| short strings cross the Arrow boundary instead of the
     |docs| x shingles/doc exploded table. C-level ``min`` over ASCII hex
     strings is the same binary ordering as UTF8String / DuckDB ``min``, so
     signature values are bit-identical to the expression form. This is the

@@ -345,7 +345,7 @@ def stand_in_subwords_expr(tokens_col, piece: int = 4):
 
 def link_model_mentions(
     model_spans: DataFrame,
-    dictionary: DataFrame,
+    dictionary,
     lemma_overrides: dict[str, str] | None = None,
 ) -> DataFrame:
     """Entity-link candidate generation for model-scored mentions — the
@@ -388,6 +388,11 @@ def link_model_mentions(
     BroadcastHashJoin. The rank column both namespaces the keys (lemma keys
     never collide with alias keys) and feeds the same min-(rank, ent_id)
     disambiguation. The plan is hash-joinable and linear in candidates.
+
+    ``dictionary`` is a ``PreparedDictionary`` (its prepared plan and its
+    override map are used) or a ``prepare_dictionary`` DataFrame. The link
+    dim is a lazy projection of the prepared plan either way, so no Spark
+    job runs here.
     """
     from pyspark.sql import functions as F
 
@@ -398,6 +403,11 @@ def link_model_mentions(
     )
     from otar3088_spark.operators.canonicalize import alias_key_expr
 
+    from otar3088_spark.operators.tagging import PreparedDictionary, as_prepared
+
+    if isinstance(dictionary, PreparedDictionary):
+        lemma_overrides = as_prepared(dictionary, lemma_overrides).lemma_overrides
+        dictionary = dictionary.prepared
     ov = dict(lemma_overrides or {})
     toks = F.split(F.col("surface"), " ")
     cores = F.transform(toks, token_core_expr)

@@ -30,10 +30,12 @@ output is pruned immediately by the broadcast hash join.
 
 from __future__ import annotations
 
-from collections import OrderedDict
+from collections import Counter
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from otar3088_spark.functions.text import (
     sql_str_array,
@@ -43,36 +45,11 @@ from otar3088_spark.functions.text import (
     token_core_expr,
     token_lead_expr,
 )
+from otar3088_spark.operators.canonicalize import alias_clusters, alias_key_expr
 
 # P7 red-list: Anatomy terms with these suffixes are dictionary noise
 # (cellfinder_clean.ipynb cell 8).
 REDLIST_SUFFIX = r"(?:genesis|cytic|ial|yal)$"
-
-
-# --- per-dictionary plan/anchor memoization --------------------------------
-# Repeated calls with the SAME dictionary DataFrame object (bench repeats,
-# mentions_rollup / iob_roundtrip reusing the tagging subquery, resumed
-# pipelines) pay the dictionary-side plan construction and the plan-time
-# anchor-collect job once, not per invocation. Measured (round-5 repro,
-# tools/battery_repro.py): the anchor collect is 3.3-3.9s on first touch in
-# a battery-loaded JVM (cold whole-stage-codegen compile of a tiny job) and
-# ~0.5s every repeat after — all of it identical work on an identical dim.
-# Keys are (object identity, overrides, prefilter cap); the value pins the
-# key DataFrame so an id() can never be reused while its entry lives. A
-# re-read of changed source data is a NEW DataFrame object -> memo miss, so
-# staleness is impossible by construction — under the standard Spark
-# contract that the files UNDER a held DataFrame are immutable (mutating
-# them in place already invalidates broadcast reuse, cached plans and AQE
-# statistics engine-wide; refresh = re-read, which is a new object). The
-# one memo-specific consequence of breaking that contract: the collected
-# anchor IN-set would lag the lazily-re-scanned dim, silently dropping
-# mentions of terms appended in place. LRU-bounded: plans and <=50k
-# anchor strings per entry.
-_MEMO_MAX = 8
-_PREP_MEMO: OrderedDict[int, tuple[DataFrame, DataFrame]] = OrderedDict()
-_ANCHOR_MEMO: OrderedDict[
-    tuple, tuple[DataFrame, DataFrame, list[str] | None, bool]
-] = OrderedDict()
 
 
 def prepare_dictionary(dict_df: DataFrame) -> DataFrame:
@@ -84,28 +61,214 @@ def prepare_dictionary(dict_df: DataFrame) -> DataFrame:
     (PhraseMatcher attr="LOWER"). Output columns:
     ``ent_id, label, term, term_tokens(array<string>), n(int), first(string)``.
 
-    Memoized per input DataFrame object (see _PREP_MEMO above) so repeated
-    pipeline builds over one dictionary share one prepared plan — which in
-    turn lets tag_mentions' anchor memo hit.
+    A lazy plan: no Spark job runs here. ``PreparedDictionary.build`` turns
+    it into the value the tagging, linking and clustering layers share.
     """
-    hit = _PREP_MEMO.get(id(dict_df))
-    if hit is not None and hit[0] is dict_df:
-        _PREP_MEMO.move_to_end(id(dict_df))
-        return hit[1]
     d = dict_df.filter(F.length("term") > 2).filter(
         ~((F.col("label") == "Anatomy") & F.lower(F.col("term")).rlike(REDLIST_SUFFIX))
     )
     d = d.withColumn("term_tokens", F.split(F.lower(F.trim(F.col("term"))), r"\s+"))
-    prepared = (
+    return (
         d.withColumn("n", F.size("term_tokens").cast("int"))
         .withColumn("first_tok", F.element_at("term_tokens", 1))
         .dropDuplicates(["ent_id", "label", "term_tokens"])
         .select("ent_id", "label", "term", "term_tokens", "n", "first_tok")
     )
-    _PREP_MEMO[id(dict_df)] = (dict_df, prepared)
-    while len(_PREP_MEMO) > _MEMO_MAX:
-        _PREP_MEMO.popitem(last=False)
-    return prepared
+
+
+@dataclass(frozen=True, eq=False)
+class PreparedDictionary:
+    """The gazetteer as the KG layers consume it: the small side of every
+    dictionary join, materialized ONCE and passed around explicitly.
+
+    * ``prepared`` — the ``prepare_dictionary`` plan (lazy); the link dim of
+      ``link_model_mentions`` is a projection of it;
+    * ``lemma_overrides`` — the override map every dim-side normalization
+      below was built with;
+    * ``d0`` — the exploded-anchor broadcast dim ``tag_mentions`` joins on
+      (lazy);
+    * ``anchors`` — the plan-time anchor IN-set, ``None`` above
+      ``max_prefilter_terms`` distinct keys;
+    * ``pair_mode`` — whether any ``d0`` row keys on a (first, second) pair,
+      i.e. whether the corpus side must emit pair keys;
+    * ``clusters`` — ``(ent_id, cluster_id)`` alias clusters, a DataFrame
+      over a driver-side list (no checkpointed lineage to lose).
+
+    Build it with :meth:`build`: ONE Spark pass collects the dictionary at
+    the prepared grain, and everything eager is derived on the driver from
+    those rows.
+    """
+
+    prepared: DataFrame
+    lemma_overrides: dict[str, str]
+    d0: DataFrame
+    anchors: list[str] | None
+    pair_mode: bool
+    clusters: DataFrame
+
+    @classmethod
+    def build(
+        cls,
+        prepared: DataFrame,
+        lemma_overrides: dict[str, str] | None = None,
+        max_prefilter_terms: int = 50_000,
+        bigram_anchor: bool | None = None,
+        bigram_anchor_threshold: int = 64,
+    ) -> PreparedDictionary:
+        """Build the value from a ``prepare_dictionary`` DataFrame with ONE
+        Spark action (the Arrow collect below). The options are
+        ``tag_mentions``'s: none of them changes which spans are found."""
+        ov = dict(lemma_overrides or {})
+        # --- dictionary-side normalization + preimage enumeration ------------
+        # Every dictionary token is normalized with the FULL lemma function;
+        # rows whose normalized token sequences collide within (ent_id, label)
+        # merge to one row keeping the lexicographically smallest surface
+        # term (deterministic output). Then, PER POSITION, the finite
+        # norm-PREIMAGE is enumerated as an ``allowed`` surface-form array:
+        #
+        #   norm(k) == t  ⟺  k ∈ { t                 if norm(t) == t,
+        #                          t+"s"  (len>=3),  t+"'s"   — the two destem
+        #                                  preimages, minus override keys/values,
+        #                          every irregular plural p with override[p]==t }
+        #
+        # so window matching is plain set membership against <=5 literals —
+        # no normalization of corpus tokens ANYWHERE, not even destem. Round 2
+        # measured that any conditional around destem in the fused per-token
+        # stage costs 15-40% (codegen CSE excludes conditional branches);
+        # round 4 initially re-normalized per candidate window token, which
+        # interpreted the override CASE chain per (candidate x position) and
+        # cost 2x on the tagging stage. Enumerating the preimage on the
+        # broadcast dim removes both costs: the hot path is one lower(core)
+        # expression per token, and validation is array_contains on tiny
+        # arrays.
+        normed = prepared.withColumn(
+            "nd_tokens", F.transform(F.col("term_tokens"), lambda t: norm_key_expr(t, ov))
+        )
+        allowed = F.transform(F.col("nd_tokens"), lambda t: _allowed_forms_expr(t, ov))
+
+        # --- the single pass -------------------------------------------------
+        # Collected at the PREPARED grain, not the (ent_id, label, nd_tokens)
+        # grain of d_norm: two terms of one group can carry different alias
+        # keys ("mice model" / "mouse model"), and the clusters need both.
+        # Normalization stays in Spark (no Python twin of norm_key_expr or
+        # alias_key_expr); Arrow keeps the transfer columnar.
+        tbl = normed.select(
+            "ent_id",
+            "label",
+            "nd_tokens",
+            allowed.alias("allowed"),
+            alias_key_expr(F.col("term")).alias("akey"),
+        ).toArrow()
+        ent_ids = tbl.column("ent_id").to_pylist()
+        groups = {
+            (e, lab, tuple(nd)): al
+            for e, lab, nd, al in zip(
+                ent_ids,
+                tbl.column("label").to_pylist(),
+                tbl.column("nd_tokens").to_pylist(),
+                tbl.column("allowed").to_pylist(),
+            )
+        }
+
+        # --- anchor-mode resolution (auto skew detection) --------------------
+        # AUTO: count n>=2 terms per first-position allowed surface form;
+        # forms anchoring more than the threshold are "oversized groups"
+        # whose unigram amplification would be |corpus occurrences of the
+        # form| x |group size|. Only those forms switch to pair keys. The
+        # oversized set is a driver literal: it is bounded by |dictionary| /
+        # threshold, and the dictionary is a broadcast dim by contract.
+        oversized: list[str] = []
+        if bigram_anchor is None:
+            per_form = Counter(f1 for al in groups.values() if len(al) >= 2 for f1 in al[0])
+            oversized = sorted(f for f, c in per_form.items() if c > bigram_anchor_threshold)
+        big = set(oversized)
+
+        # anchor join key: one dim row per allowed FIRST-position surface form
+        # (<=5 per term) — the broadcast equi-join key for raw corpus keys.
+        # Bigram mode: n>=2 terms key on every (first, second) allowed pair
+        # (<=25 per term) joined by one space — corpus tokens are split ON
+        # space, so pair keys and unigram keys can never collide. Auto mode
+        # is SELECTIVE: only (term, first-form) combinations in an oversized
+        # group take pair keys; everything else stays unigram.
+        d_norm = (
+            normed.groupBy("ent_id", "label", "nd_tokens")
+            .agg(F.min("term").alias("term"))
+            .withColumn("n", F.size("nd_tokens").cast("int"))
+            .withColumn("allowed", allowed)
+        )
+        pair_with = lambda f1: F.transform(  # noqa: E731
+            F.element_at(F.col("allowed"), 2), lambda f2: F.concat(f1, F.lit(" "), f2)
+        )
+        if bigram_anchor:
+            anchor_keys = F.when(
+                F.col("n") >= 2,
+                F.flatten(F.transform(F.element_at("allowed", 1), pair_with)),
+            ).otherwise(F.element_at("allowed", 1))
+            d0 = d_norm.withColumn("first_tok", F.explode(anchor_keys))
+        elif oversized:
+            d0 = (
+                d_norm.withColumn("f1", F.explode(F.element_at("allowed", 1)))
+                .withColumn(
+                    "_keys",
+                    F.when(
+                        (F.col("n") >= 2) & F.col("f1").isin(oversized), pair_with(F.col("f1"))
+                    ).otherwise(F.array(F.col("f1"))),
+                )
+                .withColumn("first_tok", F.explode("_keys"))
+                .drop("f1", "_keys")
+            )
+        else:
+            d0 = d_norm.withColumn("first_tok", F.explode(F.element_at("allowed", 1)))
+
+        # --- plan-time anchor IN-set ------------------------------------------
+        # The distinct first_tok values of d0, derived from the collected rows
+        # by the same rule as the d0 plan above. Above ``max_prefilter_terms``
+        # distinct keys the pre-filter is skipped (the broadcast hash join
+        # prunes non-anchors just as correctly, one narrow stage later).
+        keys = {
+            k
+            for al in groups.values()
+            for f1 in al[0]
+            for k in (
+                [f"{f1} {f2}" for f2 in al[1]]
+                if len(al) >= 2 and (bigram_anchor or f1 in big)
+                else [f1]
+            )
+        }
+        anchors = sorted(keys) if len(keys) <= max_prefilter_terms else None
+
+        key_type = prepared.schema["ent_id"].dataType
+        clusters = prepared.sparkSession.createDataFrame(
+            alias_clusters(zip(ent_ids, tbl.column("akey").to_pylist())),
+            T.StructType(
+                [T.StructField("ent_id", key_type), T.StructField("cluster_id", key_type)]
+            ),
+        )
+        return cls(
+            prepared=prepared,
+            lemma_overrides=ov,
+            d0=d0,
+            anchors=anchors,
+            # the corpus side must emit pair keys iff ANY dim row keys on a pair
+            pair_mode=bool(bigram_anchor) or bool(oversized),
+            clusters=clusters,
+        )
+
+
+def as_prepared(
+    dictionary: DataFrame | PreparedDictionary,
+    lemma_overrides: dict[str, str] | None = None,
+    **options,
+) -> PreparedDictionary:
+    """The adapter behind every dictionary-consuming layer: a
+    ``PreparedDictionary`` passes through, a ``prepare_dictionary``
+    DataFrame is built into one (``options`` go to ``build``). Overrides
+    that contradict a passed value's own are an error, not a silent pick."""
+    if not isinstance(dictionary, PreparedDictionary):
+        return PreparedDictionary.build(dictionary, lemma_overrides, **options)
+    if lemma_overrides is not None and dict(lemma_overrides) != dictionary.lemma_overrides:
+        raise ValueError("lemma_overrides differ from the PreparedDictionary's own")
+    return dictionary
 
 
 def tokenize_sentences(sentences: DataFrame) -> DataFrame:
@@ -196,7 +359,7 @@ def _allowed_forms_expr(t, ov: dict[str, str]):
 
 def tag_mentions(
     sentences: DataFrame,
-    dictionary: DataFrame,
+    dictionary: DataFrame | PreparedDictionary,
     max_prefilter_terms: int = 50_000,
     lemma_overrides: dict[str, str] | None = None,
     precompute_offsets: bool = False,
@@ -235,9 +398,9 @@ def tag_mentions(
     reference-shaped gazetteers (<=5k entities/type, small first-token
     groups) never repay.
 
-    Default ``None`` = AUTO: the skew statistic is computed dim-side at
-    prepare time (one tiny memoized job over the broadcast dictionary) —
-    any first-position surface form anchoring more than
+    Default ``None`` = AUTO: the skew statistic is computed dim-side by
+    ``PreparedDictionary.build`` from its one collect of the broadcast
+    dictionary — any first-position surface form anchoring more than
     ``bigram_anchor_threshold`` n>=2 terms is an oversized group, and ONLY
     those groups switch to pair keys (n==1 terms and small groups keep
     unigram anchors, bounding their amplification at the threshold). With
@@ -248,146 +411,28 @@ def tag_mentions(
     validation unchanged; pinned by ``test_bigram_anchor_path_is_identical``
     and ``test_auto_bigram_anchor``).
 
-    CALLER CONTRACT: this function runs bounded **eager Spark jobs at plan
-    time** (dim-side skew stats under AUTO, plus the anchor IN-set probe) —
-    plan construction can block on, and fail from, a live Spark job. Both
-    jobs scan only the broadcast-scale dictionary and are memoized per
-    (dictionary, overrides, cap, anchor mode), so repeat calls are free.
+    CALLER CONTRACT: ``dictionary`` is a ``PreparedDictionary`` or a
+    ``prepare_dictionary`` DataFrame. A value is used as built (its own
+    overrides and anchor options) and costs no Spark job here. A DataFrame
+    is built into a value first (``as_prepared``), which runs **one eager
+    Spark collect at plan time** over the broadcast-scale dictionary — plan
+    construction can block on, and fail from, that collect. Callers that tag,
+    link or cluster against one dictionary more than once (``build_kg``)
+    build the value once and pass it.
     """
-    ov = dict(lemma_overrides or {})
-
-    # memo hit: same dictionary object + same overrides + same cap + same
-    # anchor mode means the dim subplan AND the plan-time anchor IN-set are
-    # byte-identical — skip straight to the corpus-side plan (see
-    # _ANCHOR_MEMO note above)
-    mkey = (
-        id(dictionary),
-        tuple(sorted(ov.items())),
-        max_prefilter_terms,
-        bigram_anchor,
-        bigram_anchor_threshold,
+    pdict = as_prepared(
+        dictionary,
+        lemma_overrides,
+        max_prefilter_terms=max_prefilter_terms,
+        bigram_anchor=bigram_anchor,
+        bigram_anchor_threshold=bigram_anchor_threshold,
     )
-    hit = _ANCHOR_MEMO.get(mkey)
-    if hit is not None and hit[0] is dictionary:
-        _ANCHOR_MEMO.move_to_end(mkey)
-        d0, firsts, pair_mode = hit[1], hit[2], hit[3]
-        return _tag_with_dim(
-            sentences, d0, firsts, precompute_offsets, pair_mode, _grouped_output
-        )
-
-    # --- dictionary-side normalization + preimage enumeration ----------------
-    # Every dictionary token is normalized with the FULL lemma function; rows
-    # whose normalized token sequences collide within (ent_id, label) merge
-    # to one row keeping the lexicographically smallest surface term
-    # (deterministic output). Then, PER POSITION, the finite norm-PREIMAGE is
-    # enumerated as an ``allowed`` surface-form array:
-    #
-    #   norm(k) == t  ⟺  k ∈ { t                 if norm(t) == t,
-    #                          t+"s"  (len>=3),  t+"'s"   — the two destem
-    #                                  preimages, minus override keys/values,
-    #                          every irregular plural p with override[p]==t }
-    #
-    # so window matching is plain set membership against <=5 literals — no
-    # normalization of corpus tokens ANYWHERE, not even destem. Round 2
-    # measured that any conditional around destem in the fused per-token
-    # stage costs 15-40% (codegen CSE excludes conditional branches); round
-    # 4 initially re-normalized per candidate window token, which
-    # interpreted the override CASE chain per (candidate x position) and
-    # cost 2x on the tagging stage. Enumerating the preimage on the
-    # broadcast dim removes both costs: the hot path is one lower(core)
-    # expression per token, and validation is array_contains on tiny arrays.
-    d_norm = (
-        dictionary.withColumn(
-            "nd_tokens", F.transform(F.col("term_tokens"), lambda t: norm_key_expr(t, ov))
-        )
-        .groupBy("ent_id", "label", "nd_tokens")
-        .agg(F.min("term").alias("term"))
-        .withColumn("n", F.size("nd_tokens").cast("int"))
-        .withColumn(
-            "allowed",
-            F.transform(F.col("nd_tokens"), lambda t: _allowed_forms_expr(t, ov)),
-        )
-    )
-
-    # --- anchor-mode resolution (auto skew detection) ------------------------
-    # AUTO: one tiny dim-side job (memoized with the dim) — count n>=2 terms
-    # per first-position allowed surface form; forms anchoring more than the
-    # threshold are "oversized groups" whose unigram amplification would be
-    # |corpus occurrences of the form| x |group size|. Only those forms
-    # switch to pair keys. The oversized set is a driver literal: it is
-    # bounded by |dictionary| / threshold, and the dictionary is a broadcast
-    # dim by contract.
-    if bigram_anchor is None:
-        oversized = [
-            r["f1"]
-            for r in d_norm.filter(F.col("n") >= 2)
-            .select(F.explode(F.element_at("allowed", 1)).alias("f1"))
-            .groupBy("f1")
-            .count()
-            .filter(F.col("count") > bigram_anchor_threshold)
-            .select("f1")
-            .collect()
-        ]
-    else:
-        oversized = []
-
-    # anchor join key: one dim row per allowed FIRST-position surface form
-    # (<=5 per term) — the broadcast equi-join key for raw corpus keys.
-    # Bigram mode: n>=2 terms key on every (first, second) allowed pair
-    # (<=25 per term) joined by one space — corpus tokens are split ON
-    # space, so pair keys and unigram keys can never collide. Auto mode is
-    # SELECTIVE: only (term, first-form) combinations in an oversized group
-    # take pair keys; everything else stays unigram.
-    pair_with = lambda f1: F.transform(  # noqa: E731
-        F.element_at(F.col("allowed"), 2), lambda f2: F.concat(f1, F.lit(" "), f2)
-    )
-    if bigram_anchor:
-        anchor_keys = F.when(
-            F.col("n") >= 2,
-            F.flatten(F.transform(F.element_at("allowed", 1), pair_with)),
-        ).otherwise(F.element_at("allowed", 1))
-        d0 = d_norm.withColumn("first_tok", F.explode(anchor_keys))
-    elif oversized:
-        d0 = (
-            d_norm.withColumn("f1", F.explode(F.element_at("allowed", 1)))
-            .withColumn(
-                "_keys",
-                F.when((F.col("n") >= 2) & F.col("f1").isin(oversized), pair_with(F.col("f1")))
-                .otherwise(F.array(F.col("f1"))),
-            )
-            .withColumn("first_tok", F.explode("_keys"))
-            .drop("f1", "_keys")
-        )
-    else:
-        d0 = d_norm.withColumn("first_tok", F.explode(F.element_at("allowed", 1)))
-    # the corpus side must emit pair keys iff ANY dim row keys on a pair
-    pair_mode = bool(bigram_anchor) or bool(oversized)
-
-    # --- plan-time anchor IN-set --------------------------------------------
-    # The dictionary is a broadcast dim by design, so collecting its distinct
-    # anchor tokens at plan time is legitimate driver work — but only up to a
-    # point: above ``max_prefilter_terms`` distinct tokens the pre-filter is
-    # skipped automatically (the broadcast hash join prunes non-anchors just
-    # as correctly, one narrow stage later). ONE bounded job decides and
-    # fetches: limit(max+1) caps driver memory.
-    firsts: list[str] | None = sorted(
-        r["first_tok"]
-        for r in d0.select("first_tok").distinct().limit(max_prefilter_terms + 1).collect()
-    )
-    if len(firsts) > max_prefilter_terms:
-        firsts = None
-
-    _ANCHOR_MEMO[mkey] = (dictionary, d0, firsts, pair_mode)
-    while len(_ANCHOR_MEMO) > _MEMO_MAX:
-        _ANCHOR_MEMO.popitem(last=False)
-    return _tag_with_dim(
-        sentences, d0, firsts, precompute_offsets, pair_mode, _grouped_output
-    )
+    return _tag_with_dim(sentences, pdict, precompute_offsets, _grouped_output)
 
 
 def tag_mentions_grouped(
     sentences: DataFrame,
-    dictionary: DataFrame,
+    dictionary: DataFrame | PreparedDictionary,
     max_prefilter_terms: int = 50_000,
     lemma_overrides: dict[str, str] | None = None,
     bigram_anchor: bool | None = None,
@@ -412,8 +457,8 @@ def tag_mentions_grouped(
 
     Always runs the per-sentence array formulation (the grouped shape IS
     that path's intermediate), so it shares ``tag_mentions``'s
-    ``precompute_offsets=True`` scaling profile and memoized anchor dim.
-    Same eager plan-time jobs contract as ``tag_mentions``.
+    ``precompute_offsets=True`` scaling profile. Same ``dictionary``
+    contract as ``tag_mentions``.
     """
     return tag_mentions(
         sentences,
@@ -429,15 +474,14 @@ def tag_mentions_grouped(
 
 def _tag_with_dim(
     sentences: DataFrame,
-    d0: DataFrame,
-    firsts: list[str] | None,
+    pdict: PreparedDictionary,
     precompute_offsets: bool = False,
-    bigram_anchor: bool = False,
     grouped_output: bool = False,
 ) -> DataFrame:
     """Corpus side of tag_mentions: anchor detection, window validation and
-    containment dedup against an already-prepared (possibly memoized)
-    exploded-anchor dim ``d0`` + plan-time anchor IN-set ``firsts``."""
+    containment dedup against the value's exploded-anchor dim ``d0`` and
+    plan-time anchor IN-set."""
+    d0, firsts, bigram_anchor = pdict.d0, pdict.anchors, pdict.pair_mode
     # --- stage 1: anchor detection (allocation-lean) ------------------------
     # The hot path is ALLOCATION-BANDWIDTH bound, not CPU bound: explode bare
     # tokens (ONE array per sentence), derive the single RAW anchor key as a

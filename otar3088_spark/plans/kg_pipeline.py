@@ -4,7 +4,7 @@ transcripts(conv_id, turn_idx, role, text, tool, ts)
   -> P0 normalize (dedup/null/header filters + clean_text exprs)
   -> P1 sentencize (lookbehind split + aggregate offset scan, no UDF)
   -> P2 mention detection (token-blocked broadcast dictionary join)
-  -> P4/P5 disambiguation + canonicalization (mode/priority + CC clusters)
+  -> P4/P5 disambiguation + canonicalization (mode/priority + alias clusters)
   -> P6 triples + node/edge graph tables
 
 One linear declarative DAG: Catalyst sees the whole plan, pushes filters into
@@ -12,6 +12,13 @@ the scan, prunes columns, broadcasts the dictionary, and AQE right-sizes the
 two real shuffles (term-count groupBy; triple dedup). The span table is
 persisted once because it feeds both the label-resolution aggregate and the
 triple projection (deliberate reuse point, SURVEY.md §4 caching row).
+
+The dictionary side is prepared ONCE per build: ``PreparedDictionary.build``
+collects the gazetteer in one Spark action and derives the anchor IN-set, the
+anchor mode and the alias clusters from those rows on the driver. That
+collect (two jobs under AQE: the dedup shuffle and the result) is all
+``build_kg`` runs at plan time without ``staging_dir``;
+with it, the fingerprint aggregate and the snapshot write follow.
 """
 
 from __future__ import annotations
@@ -21,9 +28,13 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from otar3088_spark.operators.canonicalize import entity_clusters, resolve_labels
+from otar3088_spark.operators.canonicalize import resolve_labels
 from otar3088_spark.operators.sentencize import normalize_turns, sentencize
-from otar3088_spark.operators.tagging import prepare_dictionary, tag_mentions
+from otar3088_spark.operators.tagging import (
+    PreparedDictionary,
+    prepare_dictionary,
+    tag_mentions,
+)
 from otar3088_spark.operators.triples import causes_triples, graph_tables, mention_triples
 
 
@@ -113,21 +124,10 @@ def build_kg(
         lemma_overrides = IRREGULAR_PLURALS
     normalized = normalize_turns(transcripts, salt_partitions=salt_partitions)
     sentences = sentencize(normalized)
-    # Merged path: the sentence subtree feeds BOTH the gazetteer tagging
-    # branch and the model-scoring branch, and Spark only reuses subplans at
-    # exchange boundaries — the narrow sentencize work above the normalize
-    # exchange would execute once per branch (measured 1.4 s of the 6.6 s
-    # 200k-turn kg_full, round 7). Persist it for the duration of THIS
-    # build's span-snapshot materialization only: the staging write is the
-    # one action inside this function, after which no span consumer reads
-    # sentences again, so the cache is dropped before returning — each
-    # bench/pipeline invocation still computes sentences from its inputs
-    # exactly once (no cross-run reuse; the unpersist is unconditional).
-    _sent_cache = None
-    if (use_model or model_scorer is not None) and staging_dir is not None:
-        _sent_cache = sentences.persist()
-    dict_prepared = prepare_dictionary(dictionary)
-    spans = tag_mentions(sentences, dict_prepared, lemma_overrides=lemma_overrides)
+    # the dictionary side, once: one Spark collect, then tagging, linking and
+    # clustering all read this value
+    pdict = PreparedDictionary.build(prepare_dictionary(dictionary), lemma_overrides)
+    spans = tag_mentions(sentences, pdict)
     if use_model or model_scorer is not None:
         # North-star transformer branch: batched model inference
         # (mapInPandas, per-executor singleton — a real HF scorer plugs in
@@ -143,9 +143,7 @@ def build_kg(
         )
 
         model_sp = model_mentions(sentences, scorer=model_scorer)
-        linked = link_model_mentions(
-            model_sp, dict_prepared, lemma_overrides=lemma_overrides
-        )
+        linked = link_model_mentions(model_sp, pdict)
         spans = merge_spans_with_model(spans, linked)
     if staging_dir is not None:
         # Stage boundary through the snapshot store: parquet data + atomic
@@ -167,18 +165,30 @@ def build_kg(
             "spans-"
             + _span_stage_fingerprint(dictionary, use_model, model_scorer, lemma_overrides)
         )
-        spans = store.get_or_compute(
-            _spans_df.sparkSession, stage, lambda: _spans_df
+        # Merged path: the sentence subtree feeds BOTH the gazetteer tagging
+        # branch and the model-scoring branch, and Spark only reuses
+        # subplans at exchange boundaries — the narrow sentencize work above
+        # the normalize exchange would execute once per branch (measured
+        # 1.4 s of the 6.6 s 200k-turn kg_full, round 7). Persist it for
+        # the span-snapshot write only (cached data is looked up when the
+        # write is planned): no span consumer reads sentences after it, so
+        # the cache is dropped in ``finally`` — on success, resume or a
+        # failed write alike — and each invocation still computes sentences
+        # from its inputs exactly once (no cross-run reuse).
+        _sent_cache = (
+            sentences.persist() if (use_model or model_scorer is not None) else None
         )
-        if _sent_cache is not None:
-            # snapshot committed (or resumed) -> nothing downstream reads
-            # the sentence subtree again; free the cache so repeated
-            # builds in one session never serve stale-by-timing data
-            _sent_cache.unpersist()
+        try:
+            spans = store.get_or_compute(
+                _spans_df.sparkSession, stage, lambda: _spans_df
+            )
+        finally:
+            if _sent_cache is not None:
+                _sent_cache.unpersist()
     elif persist_spans:
         spans = spans.persist()
     resolved = resolve_labels(spans)
-    clusters = entity_clusters(dict_prepared)
+    clusters = pdict.clusters
     triples = mention_triples(resolved, clusters)
     if events is not None:
         triples = triples.unionByName(causes_triples(events))

@@ -546,48 +546,133 @@ def test_write_iceberg_seam(spark):
     assert not iceberg_catalog_configured(spark)
 
 
-def test_tagging_dim_memoization_identity_semantics(spark):
-    """Round-5 perf fix: repeated tag_mentions calls with the SAME prepared
-    dictionary object reuse the dim subplan + plan-time anchor IN-set
-    (tagging._ANCHOR_MEMO) — and the memo can never serve stale data because
-    it keys on object identity: an equivalent-but-new DataFrame misses."""
-    from otar3088_spark.operators import tagging
+def _job_count(spark, fn):
+    """(result, number of Spark jobs ``fn()`` ran), counted by job group."""
+    sc = spark.sparkContext
+    group = f"job-count-{id(fn)}"
+    sc.setJobGroup(group, "counted")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
-    dict_pd = [("T1", "mouse model", "Obj"), ("T2", "spark", "Sys")]
-    raw1 = spark.createDataFrame(
-        dict_pd, ["ent_id", "term", "label"]
-    ).withColumn("canonical_id", F.col("ent_id"))
+
+def _persistent_rdd_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_prepared_dictionary_value_semantics(spark, tmp_path):
+    """The dictionary side is one explicit value: built once, reused by
+    every tagging call at no Spark job, bound to the override map it was
+    built with, and never stale — a re-read dictionary is a new value that
+    sees the new rows."""
+    from otar3088_spark.operators.tagging import PreparedDictionary
+
+    dict_rows = [("T1", "mouse model", "Obj"), ("T2", "spark", "Sys")]
+    cols = ["ent_id", "term", "label"]
     sents = spark.createDataFrame(
         [("c0", 0, 0, "the mice models run on spark today")],
         ["conv_id", "turn_idx", "sent_idx", "sent_text"],
     )
-
-    tagging._PREP_MEMO.clear()
-    tagging._ANCHOR_MEMO.clear()
-    d1 = tagging.prepare_dictionary(raw1)
-    assert tagging.prepare_dictionary(raw1) is d1  # prep memo: same object in -> same plan out
+    path = str(tmp_path / "dict")
+    spark.createDataFrame(dict_rows, cols).write.parquet(path)
 
     ov = {"mice": "mouse"}
-    r1 = {tuple(r) for r in tagging.tag_mentions(sents, d1, lemma_overrides=ov).collect()}
-    assert len(tagging._ANCHOR_MEMO) == 1
-    (key1,) = tagging._ANCHOR_MEMO
-    r2 = {tuple(r) for r in tagging.tag_mentions(sents, d1, lemma_overrides=ov).collect()}
-    assert r1 == r2 and ("mouse model" in {t[5] for t in r1})
-    assert len(tagging._ANCHOR_MEMO) == 1  # second call was a hit, not a new entry
+    v1 = PreparedDictionary.build(prepare_dictionary(spark.read.parquet(path)), ov)
+    tagged, jobs = _job_count(spark, lambda: tag_mentions(sents, v1))
+    assert jobs == 0  # a built value costs no plan-time job
+    r1 = {tuple(r) for r in tagged.collect()}
+    r2 = {tuple(r) for r in tag_mentions(sents, v1).collect()}
+    assert r1 == r2 and "mouse model" in {t[5] for t in r1}
 
-    # different overrides -> different key (no false sharing)
-    tagging.tag_mentions(sents, d1, lemma_overrides={}).collect()
-    assert len(tagging._ANCHOR_MEMO) == 2
+    # the value is bound to its overrides: a different map is a different
+    # value (no false sharing), and contradicting the value is an error
+    v0 = PreparedDictionary.build(prepare_dictionary(spark.read.parquet(path)), {})
+    assert "mouse model" not in {r["term"] for r in tag_mentions(sents, v0).collect()}
+    try:
+        tag_mentions(sents, v1, lemma_overrides={})
+        raise AssertionError("contradicting overrides were accepted")
+    except ValueError:
+        pass
 
-    # an equivalent dictionary built as a NEW DataFrame object must MISS:
-    # re-read/changed sources can never be served a stale dim
-    raw2 = spark.createDataFrame(
-        dict_pd, ["ent_id", "term", "label"]
-    ).withColumn("canonical_id", F.col("ent_id"))
-    d2 = tagging.prepare_dictionary(raw2)
-    assert d2 is not d1
-    tagging.tag_mentions(sents, d2, lemma_overrides=ov).collect()
-    assert len(tagging._ANCHOR_MEMO) == 3
+    # a re-read of changed source data is a new value that sees the new row
+    spark.createDataFrame(dict_rows + [("T3", "today", "Time")], cols).write.mode(
+        "overwrite"
+    ).parquet(path)
+    v2 = PreparedDictionary.build(prepare_dictionary(spark.read.parquet(path)), ov)
+    r3 = {tuple(r) for r in tag_mentions(sents, v2).collect()}
+    assert r3 - r1 and "today" in {t[5] for t in r3}
+    assert {r["ent_id"] for r in v2.clusters.collect()} == {"T1", "T2", "T3"}
+
+
+def test_build_kg_plan_time_job_budget(spark, transcripts_df, dictionary_pd):
+    """Without staging, every Spark job build_kg runs is plan-time
+    dictionary work — one collect of the prepared dictionary. The
+    dictionary is a fresh DataFrame, as in a one-shot kg_submit."""
+    dictionary = spark.createDataFrame(dictionary_pd)
+    _, jobs = _job_count(spark, lambda: build_kg(transcripts_df, dictionary))
+    assert jobs <= 3, jobs
+
+
+def _clusters_vs_oracle(spark, rows):
+    """Engine clusters, built with build_kg's override map, vs the oracle."""
+    from otar3088_spark.functions.text import IRREGULAR_PLURALS
+    from otar3088_spark.operators.canonicalize import entity_clusters
+    from otar3088_spark.operators.tagging import PreparedDictionary
+
+    dict_pd = pd.DataFrame(rows, columns=["ent_id", "term", "label"])
+    pdict = PreparedDictionary.build(
+        prepare_dictionary(spark.createDataFrame(dict_pd)), IRREGULAR_PLURALS
+    )
+    got = {(r.ent_id, r.cluster_id) for r in entity_clusters(pdict).collect()}
+    assert got == set(oracle.entity_clusters(dict_pd).items())
+    return got
+
+
+def test_clusters_keep_prepared_grain(spark):
+    """Alias keys come from every prepared term, not one term per
+    normalized-token group: under the irregular-plural overrides "mice
+    model" and "mouse model" of one entity share the normalized tokens
+    ["mouse", "model"] but carry different alias keys, and each key links
+    a different entity."""
+    got = _clusters_vs_oracle(
+        spark,
+        [
+            ("E1", "mice model", "Obj"),
+            ("E1", "mouse model", "Obj"),
+            ("E2", "Mice-Model", "Obj"),   # alias key "micemodel"
+            ("E3", "Mouse-Model", "Obj"),  # alias key "mousemodel"
+            ("E4", "rat model", "Obj"),
+        ],
+    )
+    assert got == {("E1", "E1"), ("E2", "E1"), ("E3", "E1"), ("E4", "E4")}
+
+
+def test_clusters_without_alias_collisions_are_singletons(spark):
+    rows = [(f"Z{i}", t, "Obj") for i, t in enumerate(["alpha", "beta gamma", "delta cells"])]
+    got = _clusters_vs_oracle(spark, rows)
+    assert got == {(e, e) for e, _, _ in rows}
+
+
+def test_build_kg_failed_snapshot_leaves_no_cache(spark, transcripts_df, dictionary_df, tmp_path):
+    """The merged path persists the sentence subtree for the snapshot
+    write; a failing write must not leave that cache behind."""
+    import pytest
+
+    from otar3088_spark.functions.text import IRREGULAR_PLURALS
+    from otar3088_spark.plans.kg_pipeline import _span_stage_fingerprint
+
+    staging = tmp_path / "staging"
+    staging.mkdir()
+    fp = _span_stage_fingerprint(dictionary_df, True, None, IRREGULAR_PLURALS)
+    (staging / f"spans-{fp}").write_text("a file where the stage directory goes")
+    transcripts_df.count()  # the fixture's own cache is registered before the baseline
+    before = _persistent_rdd_ids(spark)
+    with pytest.raises(Exception):
+        build_kg(transcripts_df, dictionary_df, staging_dir=str(staging), use_model=True)
+    assert _persistent_rdd_ids(spark) == before
 
 
 def test_precompute_offsets_path_is_identical(spark, transcripts_df, dictionary_df):
@@ -791,19 +876,18 @@ def test_auto_bigram_anchor(spark, transcripts_df, dictionary_df):
     dictionary's own skew statistic: first-position forms anchoring more
     multi-token terms than the threshold switch to pair keys — WITHOUT any
     flag — while unskewed dictionaries resolve to the exact unigram plan."""
-    from otar3088_spark.operators import tagging
+    from otar3088_spark.operators.tagging import PreparedDictionary
 
     sents = sentencize(normalize_turns(transcripts_df))
 
-    # unskewed: auto must resolve to unigram (pair_mode False in the memo)
+    # unskewed: auto must resolve to unigram (pair_mode False on the value)
     d_small = prepare_dictionary(dictionary_df)
     auto_small = {tuple(r) for r in tag_mentions(sents, d_small).collect()}
     uni_small = {
         tuple(r) for r in tag_mentions(sents, d_small, bigram_anchor=False).collect()
     }
     assert auto_small == uni_small and len(auto_small) > 100
-    key_auto = (id(d_small), (), 50_000, None, 64)
-    assert tagging._ANCHOR_MEMO[key_auto][3] is False
+    assert PreparedDictionary.build(d_small).pair_mode is False
 
     # skewed: one first token shared by > threshold multi-token terms
     skew_rows = [(f"S{i:04d}", f"alpha variant{i}", "Sys") for i in range(80)]
@@ -826,10 +910,13 @@ def test_auto_bigram_anchor(spark, transcripts_df, dictionary_df):
     surfaces = {r[-1] for r in auto}
     assert {"alpha variant7", "alpha variant63", "alpha", "beta stream"} <= surfaces
     # auto resolved to pair mode for the oversized group
-    assert tagging._ANCHOR_MEMO[(id(d_skew), (), 50_000, None, 64)][3] is True
+    skew_auto = PreparedDictionary.build(d_skew)
+    assert skew_auto.pair_mode is True
+    assert {tuple(r) for r in tag_mentions(corpus, skew_auto).collect()} == auto
     # threshold override: raise it above the group size -> unigram again
-    tag_mentions(corpus, d_skew, bigram_anchor_threshold=500).collect()
-    assert tagging._ANCHOR_MEMO[(id(d_skew), (), 50_000, None, 500)][3] is False
+    assert PreparedDictionary.build(d_skew, bigram_anchor_threshold=500).pair_mode is False
+    hi = {tuple(r) for r in tag_mentions(corpus, d_skew, bigram_anchor_threshold=500).collect()}
+    assert hi == auto
 
 
 def test_recorded_hf_ner_output_first_strategy_links(spark):

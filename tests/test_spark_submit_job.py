@@ -18,10 +18,7 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 
 
-def test_is_table_routing():
-    """Dotted identifiers route to the catalog; slashes, .parquet suffixes,
-    and bare undotted names (natural relative dirs like `kg_out`) route to
-    the filesystem."""
+def _load_kg_submit():
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
@@ -29,12 +26,53 @@ def test_is_table_routing():
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
+    return mod
+
+
+def test_is_table_routing():
+    """Dotted identifiers route to the catalog; slashes, .parquet suffixes,
+    and bare undotted names (natural relative dirs like `kg_out`) route to
+    the filesystem."""
+    mod = _load_kg_submit()
     assert mod._is_table("lake.kg")
     assert mod._is_table("lake.raw.transcripts")
     assert not mod._is_table("kg_out")
     assert not mod._is_table("data/transcripts.parquet")
     assert not mod._is_table("transcripts.parquet")
     assert not mod._is_table("/abs/dir")
+
+
+def test_kg_submit_outputs_from_persisted_triples(spark, transcripts_df, dictionary_df, tmp_path):
+    """``main`` in-process: the written node and edge tables are exactly
+    ``graph_tables`` over the written triples (they are derived from the
+    one persisted triple frame), and no persisted RDD outlives ``main``."""
+    import contextlib
+    import io
+
+    from otar3088_spark.operators.triples import graph_tables
+
+    tin, din, out = tmp_path / "t.parquet", tmp_path / "d.parquet", tmp_path / "kg"
+    transcripts_df.write.parquet(str(tin))
+    dictionary_df.write.parquet(str(din))  # (the write registers the fixture's cache)
+    persisted = lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keySet())  # noqa: E731
+    before = persisted()
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        rc = _load_kg_submit().main([
+            "--transcripts", str(tin), "--dictionary", str(din),
+            "--output", str(out), "--output-format", "path",
+            "--staging", str(tmp_path / "staging"),
+        ])
+    assert rc == 0
+    assert persisted() == before
+    counts = json.loads(buf.getvalue().strip().splitlines()[-1])["counts"]
+
+    triples = spark.read.parquet(str(out / "triples"))
+    nodes, edges = graph_tables(triples)
+    for part, want in (("triples", triples), ("nodes", nodes), ("edges", edges)):
+        got = sorted(map(tuple, spark.read.parquet(str(out / part)).collect()))
+        assert got == sorted(map(tuple, want.collect())), part
+        assert len(got) == counts[part] > 0, part
 
 
 def test_spark_submit_pyfiles_job(spark, transcripts_df, dictionary_df, tmp_path):
