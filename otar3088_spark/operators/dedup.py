@@ -1,10 +1,17 @@
 """Large-scale deduplication operators (training-data pipeline battery).
 
-All signatures are JVM-side: shingling via ``split``/``zip_with``/``slice``,
+Production signatures are JVM-side: shingling via ``split``/``transform``,
 hashing via ``xxhash64(seed, shingle)``, min-hash via ``min`` aggregates,
-banding via ``concat_ws`` + groupBy. No Python UDFs anywhere — at 100 TB the
-cost is one scan + one groupBy per stage, and candidate verification only
-touches bucket-collision pairs (LSH), never the quadratic cross product.
+banding via ``concat_ws`` + groupBy — at 100 TB the cost is one scan + one
+groupBy per stage, and candidate verification only touches bucket-collision
+pairs (LSH), never the quadratic cross product.
+
+Hash-family regime table (the one kept twin pair; same schemas, different
+values):
+
+  ``hash_fn``            | use                          | execution
+  ``xxhash64`` (default) | production dedup             | JVM explode + min/sum aggregates
+  ``md5str`` / ``md5``   | DuckDB-oracle-checkable runs | Arrow UDF over normalized text
 
 Operators:
 * exact_dedup        — hash-groupBy on normalized text (first/min wins)
@@ -22,6 +29,8 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from otar3088_spark.functions.text import let_expr
 
 
 def normalized_text_expr(col: Column) -> Column:
@@ -75,7 +84,7 @@ def shingles_expr(text_col: Column, k: int = 3) -> Column:
             .otherwise(F.array().cast("array<string>"))
         )
 
-    return F.element_at(F.transform(F.array(toks), sh_of), 1)
+    return let_expr(toks, sh_of)
 
 
 def _md5_sig_udf(num_hashes: int, shingle_k: int):
@@ -308,13 +317,9 @@ def jaccard_pairs(
     # let-bind the intersection size via a lambda variable so it is computed
     # once per pair (CollapseProject inlines withColumn aliases into every
     # use site — the round-6 spans.py lesson)
-    jac = F.element_at(
-        F.transform(
-            F.array(F.size(F.array_intersect(F.col("d1.sh_arr"), F.col("d2.sh_arr")))),
-            lambda i: i
-            / (F.size(F.col("d1.sh_arr")) + F.size(F.col("d2.sh_arr")) - i),
-        ),
-        1,
+    jac = let_expr(
+        F.size(F.array_intersect(F.col("d1.sh_arr"), F.col("d2.sh_arr"))),
+        lambda i: i / (F.size(F.col("d1.sh_arr")) + F.size(F.col("d2.sh_arr")) - i),
     )
     return j.select("id1", "id2", jac.alias("jaccard"))
 

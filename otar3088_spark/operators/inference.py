@@ -535,9 +535,11 @@ def link_model_mentions(
 
 def merge_spans_with_model(dict_spans: DataFrame, linked_model: DataFrame) -> DataFrame:
     """Union gazetteer spans with dictionary-linked model spans, dictionary
-    precedence on exact (sentence, start, end) collision — merge_mentions
-    semantics, but keeping the dictionary columns (term, ent_id) the
-    downstream resolution/triple stages need, and with ONE shuffle: union →
+    precedence on exact (sentence, start, end) collision: a colliding
+    model row is dropped, a non-colliding one survives (the reference's
+    source precedence, entity_processor.py:86-101). Keeps the dictionary
+    columns (term, ent_id) the downstream resolution/triple stages need,
+    with ONE shuffle: union →
     groupBy span key → array filter (a left-anti join would consume — and at
     plan level recompute — the tagging DAG twice)."""
     from pyspark.sql import functions as F
@@ -567,25 +569,3 @@ def merge_spans_with_model(dict_spans: DataFrame, linked_model: DataFrame) -> Da
             F.col("s")["surface"].alias("surface"),
         )
     )
-
-
-def merge_mentions(dict_spans: DataFrame, model_spans: DataFrame) -> DataFrame:
-    """U1 union of dictionary + model mentions with dictionary priority on
-    exact (start, end) collision (reference resolves conflicts by source
-    precedence, entity_processor.py:86-101)."""
-    from pyspark.sql import functions as F
-
-    d = dict_spans.select(
-        "conv_id", "turn_idx", "sent_idx", "start", "end", "surface", "label",
-        F.lit("dict").alias("source"), F.lit(1.0).alias("score"),
-    )
-    m = model_spans.select(
-        "conv_id", "turn_idx", "sent_idx", "start", "end", "surface", "label",
-        F.lit("model").alias("source"), F.col("score"),
-    )
-    overlap_free_model = m.join(
-        d.select("conv_id", "turn_idx", "sent_idx", "start", "end"),
-        ["conv_id", "turn_idx", "sent_idx", "start", "end"],
-        "left_anti",
-    )
-    return d.unionByName(overlap_free_model)

@@ -3,10 +3,10 @@
 * ``cosine_topk``      — exact brute-force top-k for a (small, broadcast)
   probe set: `zip_with` dot products, all JVM, norms hoisted to one column
   per side (never recomputed per pair). The baseline; O(|probes|·|corpus|).
-* ``rp_lsh_signatures_expr`` — ALL ``num_tables`` random-hyperplane
-  signatures of a vector in ONE expression: the hyperplane matrix is a
-  constant-folded literal, the projections run as nested index-based folds
-  (no per-plane array allocation, plan size independent of tables × bits).
+* ``rp_lsh_signatures_udf`` — ALL ``num_tables`` random-hyperplane
+  signatures of a vector from one Arrow UDF: one numpy matmul per batch, the
+  hyperplane matrix in the UDF closure rather than in the plan. The only
+  signature path (index build and probes alike).
 * ``build_lsh_index`` — the materialized ANN index: one pass over the corpus
   producing the exploded ``(vec_id, tbl, sig, c_emb, c_norm)`` table. At
   100 TB this is written once (parquet/Iceberg, partitioned by (tbl, sig))
@@ -94,59 +94,15 @@ def _hyperplanes(n_planes: int, dim: int, seed: int):
     return (rng.randint(0, 2, size=(n_planes, dim)) * 2 - 1).astype(float).tolist()
 
 
-def rp_lsh_signatures_expr(
-    vec: Column, bits: int, num_tables: int, seed: int = 42, dim: int = 64
-) -> Column:
-    """``array<int>`` of ``num_tables`` LSH signatures for one vector.
-
-    The (num_tables·bits) × dim hyperplane matrix is embedded as one literal
-    (constant-folded by Catalyst); signatures are packed with nested
-    index-based folds — element_at reads, no intermediate arrays per plane.
-    Plan node count is CONSTANT in tables × bits (the round-1 version built
-    tables × bits separate aggregate trees and spent its time in plan
-    compilation + per-plane allocations)."""
-    planes = _hyperplanes(num_tables * bits, dim, seed)
-    planes_lit = F.array(*[F.array(*[F.lit(x) for x in row]) for row in planes])
-
-    def dot_plane(pidx):
-        # pidx: 1-based plane index Column
-        h = F.element_at(planes_lit, pidx)
-        return F.aggregate(
-            F.sequence(F.lit(1), F.lit(dim)),
-            F.lit(0.0),
-            lambda acc, i: acc + F.element_at(vec, i).cast("double") * F.element_at(h, i),
-        )
-
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_tables - 1)),
-        lambda t: F.aggregate(
-            F.sequence(F.lit(0), F.lit(bits - 1)),
-            F.lit(0),
-            lambda acc, b: acc
-            + F.when(
-                dot_plane(t * F.lit(bits) + b + 1) >= 0,
-                F.pow(F.lit(2.0), b).cast("int"),
-            ).otherwise(F.lit(0)),
-        ),
-    )
-
-
-def rp_lsh_buckets(
-    df: DataFrame, bits: int = 12, seed: int = 42, vec_col: str = "embedding", dim: int = 64
-) -> DataFrame:
-    """Single-table signature column (kept for bucketing use cases)."""
-    sig = F.element_at(rp_lsh_signatures_expr(F.col(vec_col), bits, 1, seed, dim), 1)
-    return df.withColumn("lsh", sig)
-
-
 def rp_lsh_signatures_udf(
     bits: int, num_tables: int, seed: int = 42, dim: int = 64
 ):
-    """Arrow-vectorized signature computation — the DEFAULT path.
+    """Arrow-vectorized signature computation: ``array<int>`` of
+    ``num_tables`` signatures per vector.
 
     One numpy matmul per Arrow batch: X(batch×dim) @ H(dim×planes), sign,
     bit-pack per table. The hyperplane matrix lives in the UDF closure, NOT
-    in the plan (the pure-expression variant embeds a tables·bits·dim
+    in the plan (a pure-expression variant would embed a tables·bits·dim
     literal whose driver-side analysis + interpreted HOF eval dominated
     round-1 cost). This is batch-vectorized Arrow — not per-row Python — and
     is the same sanctioned surface as model inference (SURVEY.md §2.9).
@@ -161,10 +117,9 @@ def rp_lsh_signatures_udf(
         if emb.empty:
             return pd.Series([], dtype=object)
         vals = emb.to_numpy()
-        # degrade dirty vectors (NULL / wrong dimension) to NULL signatures
-        # — same semantics as the pure-expression path; one ragged row must
-        # not abort an index build over the whole corpus (np.vstack would
-        # raise inside the Arrow batch and fail the task)
+        # degrade dirty vectors (NULL / wrong dimension) to NULL signatures:
+        # one ragged row must not abort an index build over the whole corpus
+        # (np.vstack would raise inside the Arrow batch and fail the task)
         ok = np.fromiter(
             (v is not None and len(v) == dim for v in vals), bool, len(vals)
         )
@@ -214,19 +169,13 @@ def build_lsh_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = 64,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """The ANN index: ``(vec_id, tbl, sig, c_emb, c_norm)`` — one narrow pass
     over the corpus (signatures + norm computed once per vector), exploded to
     one row per (vector, table). Persist or write this ONCE per corpus
     snapshot; every query batch joins against it. On a cluster, write
-    partitioned/bucketed by (tbl, sig) so probe joins prune partitions.
-    ``use_arrow=False`` switches to the pure-Catalyst signature expression
-    (zero Python, but tables·bits·dim literal in the plan)."""
-    if use_arrow:
-        sigs = rp_lsh_signatures_udf(bits, num_tables, seed, dim)(F.col(vec_col))
-    else:
-        sigs = rp_lsh_signatures_expr(F.col(vec_col), bits, num_tables, seed, dim)
+    partitioned/bucketed by (tbl, sig) so probe joins prune partitions."""
+    sigs = rp_lsh_signatures_udf(bits, num_tables, seed, dim)(F.col(vec_col))
     out = corpus.select(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).alias("c_emb"),
@@ -255,7 +204,6 @@ def embedding_near_dups(
     index: DataFrame | None = None,
     persist_index: bool = True,
     index_out: list | None = None,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs — the dedup-family scale path.
 
@@ -282,9 +230,7 @@ def embedding_near_dups(
         _check_index_params(index, bits=bits, num_tables=num_tables, seed=seed, dim=dim)
         c = index
     else:
-        c = build_lsh_index(
-            corpus, bits, num_tables, seed, id_col, vec_col, dim, use_arrow
-        )
+        c = build_lsh_index(corpus, bits, num_tables, seed, id_col, vec_col, dim)
     if index is None and persist_index:
         c = c.persist()
         if index_out is not None:
@@ -315,7 +261,6 @@ def ann_lsh_topk(
     dim: int = 64,
     index: DataFrame | None = None,
     persist_index: bool = False,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Approximate top-k: multi-table LSH bucket join -> exact verify ->
     window top-k.
@@ -337,16 +282,11 @@ def ann_lsh_topk(
         _check_index_params(index, bits=bits, num_tables=num_tables, seed=seed, dim=dim)
         c = index
     else:
-        c = build_lsh_index(
-            corpus, bits, num_tables, seed, id_col, vec_col, dim, use_arrow
-        )
+        c = build_lsh_index(corpus, bits, num_tables, seed, id_col, vec_col, dim)
     if index is None and persist_index:
         c = c.persist()
 
-    if use_arrow:
-        q_sigs = rp_lsh_signatures_udf(bits, num_tables, seed, dim)(F.col(vec_col))
-    else:
-        q_sigs = rp_lsh_signatures_expr(F.col(vec_col), bits, num_tables, seed, dim)
+    q_sigs = rp_lsh_signatures_udf(bits, num_tables, seed, dim)(F.col(vec_col))
     p = probes.select(
         F.col(id_col).alias("q_id"),
         F.col(vec_col).alias("q_emb"),

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from otar3088_spark.functions.text import offsets_expr
+from otar3088_spark.functions.text import let_expr, offsets_expr
 
 
 def assign_spans_to_sentences(doc_spans: DataFrame, sentences: DataFrame) -> DataFrame:
@@ -148,10 +148,7 @@ def _iob_from_joined(j: DataFrame) -> DataFrame:
     # 1-element array): HOF lambda bodies never enter whole-stage codegen,
     # and withColumn hoists get re-inlined by CollapseProject into every
     # use site (measured 450s vs 16s at sf0.1, round 6) — the let-binding
-    # is the only hoist the optimizer cannot undo.
-    bind = lambda val, body: F.element_at(  # noqa: E731 — let-binding helper
-        F.transform(F.array(val), body), 1
-    )
+    # is the only hoist the optimizer cannot undo (functions/text.py let_expr).
     toks_c, starts_c, sp_c = F.col("toks"), F.col("starts"), F.col("sp")
     seqn = F.sequence(F.lit(1), F.size(toks_c))
     cl_arr = F.transform(toks_c, lambda t: F.length(token_core_expr(t)))
@@ -180,7 +177,7 @@ def _iob_from_joined(j: DataFrame) -> DataFrame:
             ivals = F.filter(
                 F.transform(
                     sp_c,
-                    lambda p: bind(
+                    lambda p: let_expr(
                         F.filter(
                             idx0,
                             lambda i: (F.element_at(cs_b, i + 1) >= p["start"])
@@ -218,9 +215,9 @@ def _iob_from_joined(j: DataFrame) -> DataFrame:
 
                 return F.transform(toks_c, per_token)
 
-            return bind(ivals, tag_at)
+            return let_expr(ivals, tag_at)
 
-        return bind(cs, lambda cs_b: bind(ce, lambda ce_b: with_extents(cs_b, ce_b)))
+        return let_expr(cs, lambda cs_b: let_expr(ce, lambda ce_b: with_extents(cs_b, ce_b)))
 
     # OPERATOR-LEVEL evaluate-once barrier (round 7): downstream filters on
     # the computed columns — iob_to_spans' size(tags) > 0, filter_all_o's
@@ -236,7 +233,7 @@ def _iob_from_joined(j: DataFrame) -> DataFrame:
     # evaluated exactly ONCE regardless of what the consumer filters on.
     row = F.struct(
         F.col("toks").alias("tokens"),
-        bind(cl_arr, lambda cl: bind(ld_arr, lambda ld: tags_expr(cl, ld))).alias(
+        let_expr(cl_arr, lambda cl: let_expr(ld_arr, lambda ld: tags_expr(cl, ld))).alias(
             "tags"
         ),
     )

@@ -22,6 +22,13 @@ declarative join:
   5. longest-match containment dedup via a per-sentence array filter (one
      groupBy, no recomputation of the upstream DAG).
 
+Stage-2 regime table (the one kept twin pair; identical spans, opposite
+scaling — BENCH/TAGGING_STRESS.md):
+
+  ``precompute_offsets`` | regime                                  | shape
+  ``False`` (default)    | short sentences, ~1 candidate (KG path) | per-candidate fold + drop_contained
+  ``True``               | whole documents, dense candidates       | per-sentence array path, offsets array
+
 Zero Python anywhere; the dictionary side is explicitly ``F.broadcast`` so
 skewed head entities ("HeLa"-type, cell_line_papers.py:56) never shuffle.
 At 100 TB the cost is one narrow pass over sentences + an explode whose
@@ -40,6 +47,7 @@ from pyspark.sql import types as T
 from otar3088_spark.functions.text import (
     sql_str_array,
     destem_expr,
+    let_expr,
     norm_key_expr,
     offsets_expr,
     token_core_expr,
@@ -271,25 +279,6 @@ def as_prepared(
     return dictionary
 
 
-def tokenize_sentences(sentences: DataFrame) -> DataFrame:
-    """Attach token arrays + offset arrays to sentence rows (all per-row JVM).
-
-    Columns added: ``toks`` raw tokens, ``starts`` char offsets of each raw
-    token, ``cores`` punctuation-stripped tokens, ``leads`` leading-strip
-    widths, ``keys`` lowercase match keys, ``keys_ds`` destemmed keys (NULL
-    where no plural/possessive suffix applies).
-
-    Used by IOB conversion (spans_to_iob); the tagging hot path below builds
-    leaner per-token projections instead (allocation-bandwidth matters there).
-    """
-    df = sentences.withColumn("toks", F.split(F.col("sent_text"), " "))
-    df = df.withColumn("starts", offsets_expr(F.col("toks")))
-    df = df.withColumn("cores", F.transform(F.col("toks"), token_core_expr))
-    df = df.withColumn("leads", F.transform(F.col("toks"), token_lead_expr))
-    df = df.withColumn("keys", F.transform(F.col("cores"), F.lower))
-    return df.withColumn("keys_ds", F.transform(F.col("keys"), destem_expr))
-
-
 def _allowed_forms_expr(t, ov: dict[str, str]):
     """Finite norm-PREIMAGE of a normalized dictionary token ``t``: the array
     of corpus surface forms k with ``norm(k) == t`` (norm = override map /
@@ -510,32 +499,27 @@ def _tag_with_dim(
         # exploded rows and the whole-battery gap between the bigram and
         # unigram queries). The keys array is bound as a lambda variable so
         # the next-token lookup does not re-derive it per element.
-        pair_structs = F.element_at(
+        pair_structs = let_expr(
             F.transform(
-                F.array(
-                    F.transform(
-                        F.split(F.col("sent_text"), " "),
-                        lambda t: F.lower(token_core_expr(t)),
-                    )
-                ),
-                lambda ks: F.filter(
-                    F.transform(
-                        ks,
-                        lambda k, i: F.when(
-                            k.isin(heads)
-                            & F.try_element_at(ks, i + 2).isNotNull(),
-                            F.struct(
-                                i.alias("pos0"),
-                                F.concat(
-                                    k, F.lit(" "), F.try_element_at(ks, i + 2)
-                                ).alias("key"),
-                            ),
+                F.split(F.col("sent_text"), " "),
+                lambda t: F.lower(token_core_expr(t)),
+            ),
+            lambda ks: F.filter(
+                F.transform(
+                    ks,
+                    lambda k, i: F.when(
+                        k.isin(heads)
+                        & F.try_element_at(ks, i + 2).isNotNull(),
+                        F.struct(
+                            i.alias("pos0"),
+                            F.concat(
+                                k, F.lit(" "), F.try_element_at(ks, i + 2)
+                            ).alias("key"),
                         ),
                     ),
-                    lambda s: s.isNotNull(),
                 ),
+                lambda s: s.isNotNull(),
             ),
-            1,
         )
         pair_keyed = sentences.select(
             *key3, F.explode(pair_structs).alias("_s")
@@ -712,7 +696,8 @@ def _tag_with_dim(
     #   starts = offsets_expr(toks)            (char offsets, once/sentence)
     #   arr    = validated span structs        (per candidate, when(match))
     #   dd     = per-(start,end,label) min-ent_id dedup over arr
-    #   kept   = longest-match containment filter over dd
+    #            (_dedup_homonyms)
+    #   kept   = longest-match containment filter over dd (_keep_longest)
     # Offsets are computed per MATCHED sentence only (sentences without
     # anchors never reach this join).
     def build_span(c, toks, starts):
@@ -804,45 +789,13 @@ def _tag_with_dim(
             )
         )
 
-    def dedup_ent(a):
-        # homonym-id dedup: per (start, end, label) keep the min ent_id —
-        # downstream label resolution needs no span-level aggregate (winner
-        # filter is per-label, so pre-picking the min ent within each label
-        # commutes with it)
-        return F.filter(
-            a,
-            lambda x: ~F.exists(
-                a,
-                lambda y: (y["start"] == x["start"])
-                & (y["end"] == x["end"])
-                & (y["label"] == x["label"])
-                & (y["ent_id"] < x["ent_id"]),
-            ),
-        )
-
-    def keep_longest(dd):
-        # longest-match preference (PhraseMatcher semantics): drop spans
-        # strictly contained in a longer span of the same sentence
-        return F.filter(
-            dd,
-            lambda x: ~F.exists(
-                dd,
-                lambda y: (y["start"] <= x["start"])
-                & (x["end"] <= y["end"])
-                & ((y["end"] - y["start"]) > (x["end"] - x["start"])),
-            ),
-        )
-
-    bind = lambda val, body: F.element_at(  # noqa: E731 — let-binding helper
-        F.transform(F.array(val), body), 1
-    )
-    final = bind(
+    final = let_expr(
         F.split(F.col("sent_text"), " "),
-        lambda toks: bind(
+        lambda toks: let_expr(
             offsets_expr(toks),
-            lambda starts: bind(
+            lambda starts: let_expr(
                 valid_arr(toks, starts),
-                lambda a: bind(dedup_ent(a), keep_longest),
+                lambda a: let_expr(_dedup_homonyms(a), _keep_longest),
             ),
         ),
     )
@@ -865,6 +818,38 @@ def _tag_with_dim(
     )
 
 
+def _dedup_homonyms(arr):
+    """Homonym-id dedup of a span-struct array: per (start, end, label) keep
+    the min ent_id — array-side, so downstream label resolution needs no
+    span-level aggregate (its winner filter is per-label, so pre-picking
+    the min ent within each label commutes with it)."""
+    return F.filter(
+        arr,
+        lambda x: ~F.exists(
+            arr,
+            lambda y: (y["start"] == x["start"])
+            & (y["end"] == x["end"])
+            & (y["label"] == x["label"])
+            & (y["ent_id"] < x["ent_id"]),
+        ),
+    )
+
+
+def _keep_longest(arr):
+    """Longest-match preference (PhraseMatcher semantics) over a span-struct
+    array: drop spans strictly contained in a longer span of the same
+    sentence."""
+    return F.filter(
+        arr,
+        lambda x: ~F.exists(
+            arr,
+            lambda y: (y["start"] <= x["start"])
+            & (x["end"] <= y["end"])
+            & ((y["end"] - y["start"]) > (x["end"] - x["start"])),
+        ),
+    )
+
+
 def drop_contained(spans: DataFrame) -> DataFrame:
     """Longest-match preference: drop spans strictly contained in a longer
     span of the same sentence (PhraseMatcher longest-match semantics).
@@ -880,30 +865,10 @@ def drop_contained(spans: DataFrame) -> DataFrame:
     g = spans.groupBy("conv_id", "turn_idx", "sent_idx").agg(
         F.array_distinct(F.collect_list(payload)).alias("arr")
     )
-    # (a) homonym-id dedup: per (start, end, label) keep the min ent_id —
-    # array-side, so downstream label resolution needs no span-level
-    # aggregate at all (winner filter is per-label, so pre-picking the min
-    # ent within each label commutes with it);
-    # (b) longest-match containment drop.
-    deduped = F.filter(
-        F.col("arr"),
-        lambda a: ~F.exists(
-            F.col("arr"),
-            lambda b: (b["start"] == a["start"])
-            & (b["end"] == a["end"])
-            & (b["label"] == a["label"])
-            & (b["ent_id"] < a["ent_id"]),
-        ),
-    )
-    kept = F.filter(
-        deduped,
-        lambda a: ~F.exists(
-            deduped,
-            lambda b: (b["start"] <= a["start"])
-            & (a["end"] <= b["end"])
-            & ((b["end"] - b["start"]) > (a["end"] - a["start"])),
-        ),
-    )
+    # homonym-id dedup, then the longest-match containment drop. The deduped
+    # array is inlined into both sides of the containment filter, not
+    # let-bound: this is the KG path's plan shape.
+    kept = _keep_longest(_dedup_homonyms(F.col("arr")))
     return (
         g.select("conv_id", "turn_idx", "sent_idx", F.explode(kept).alias("s"))
         .select(

@@ -153,7 +153,7 @@ def test_segment_turns_respects_entities(spark):
 
 
 def test_model_mentions_deterministic_and_merged(spark, sent_df):
-    from otar3088_spark.operators.inference import merge_mentions, model_mentions
+    from otar3088_spark.operators.inference import merge_spans_with_model, model_mentions
 
     m1 = model_mentions(sent_df).collect()
     m2 = model_mentions(sent_df).collect()
@@ -161,14 +161,19 @@ def test_model_mentions_deterministic_and_merged(spark, sent_df):
     for r in m1:
         assert r["surface"] == r["sent_text"][r["start"] : r["end"]] if "sent_text" in r else True
 
-    dict_spans = spark.createDataFrame(
-        [("c1", 0, 0, 0, 10, "HeLa cells", "CellLine")],
-        ["conv_id", "turn_idx", "sent_idx", "start", "end", "surface", "label"],
-    )
-    model_spans = model_mentions(sent_df)
-    merged = merge_mentions(dict_spans, model_spans)
-    src = {r["source"] for r in merged.collect()}
-    assert "dict" in src
+    # planted exact (sentence, start, end) collision: the dictionary row wins
+    # with its own term/ent_id, the colliding model row is dropped, and a
+    # linked model row elsewhere in the sentence survives
+    cols = ["conv_id", "turn_idx", "sent_idx", "start", "end",
+            "term", "label", "ent_id", "surface"]
+    dict_row = ("c1", 0, 0, 0, 10, "HeLa", "CellLine", "E1", "HeLa cells")
+    collide = ("c1", 0, 0, 0, 10, "hela cells", "CellType", "E9", "HeLa cells")
+    free = ("c1", 0, 0, 20, 24, "A549", "CellLine", "E2", "A549")
+    dict_spans = spark.createDataFrame([dict_row], cols)
+    linked_model = spark.createDataFrame([collide, free], cols)
+    merged = merge_spans_with_model(dict_spans, linked_model)
+    assert merged.columns == cols
+    assert sorted(tuple(r) for r in merged.collect()) == [dict_row, free]
 
 
 # ---------------------------------------------------------------- multimodal
@@ -505,16 +510,16 @@ def test_tagging_prefilter_fallback_equivalence(spark):
     assert a == b and len(a) > 0
 
 
-# ------------------------------------------------- large-star/small-star CC
+# ------------------------------------------------------- connected components
 
 
-def test_star_cc_matches_union_find(spark):
-    """Alternating large/small-star CC vs a trusted union-find on seeded
-    random graphs + a 60-node chain (the worst case for plain label
+def test_cc_matches_union_find(spark):
+    """Min-label propagation + pointer jumping vs a trusted union-find on
+    seeded random graphs + a 60-node chain (the worst case for plain label
     propagation)."""
     import random
 
-    from otar3088_spark.operators.canonicalize import connected_components_star
+    from otar3088_spark.operators.canonicalize import connected_components
 
     def union_find(pairs):
         parent = {}
@@ -542,7 +547,7 @@ def test_star_cc_matches_union_find(spark):
 
     for pairs in cases:
         edges = spark.createDataFrame(pairs, "src string, dst string")
-        got = {(r["node"], r["component"]) for r in connected_components_star(edges).collect()}
+        got = {(r["node"], r["component"]) for r in connected_components(edges).collect()}
         want = set(union_find(pairs).items())
         assert got == want, f"mismatch: extra={sorted(got-want)[:5]} missing={sorted(want-got)[:5]}"
 
@@ -586,14 +591,27 @@ def test_embedding_near_dups_lsh_vs_exact(spark):
     assert recall >= 0.95, f"LSH near-dup recall too low: {recall}"
 
 
-def test_star_cc_keeps_self_loop_nodes(spark):
-    from otar3088_spark.operators.canonicalize import connected_components_star
+def test_cc_keeps_self_loop_nodes(spark):
+    from otar3088_spark.operators.canonicalize import connected_components
 
     edges = spark.createDataFrame(
         [("a", "a"), ("b", "c")], "src string, dst string"
     )
-    got = {(r["node"], r["component"]) for r in connected_components_star(edges).collect()}
+    got = {(r["node"], r["component"]) for r in connected_components(edges).collect()}
     assert got == {("a", "a"), ("b", "b"), ("c", "b")}
+
+
+def test_cc_non_convergence_raises(spark):
+    """A 60-node chain needs several rounds even with pointer jumping: one
+    round leaves labels moving, and returning them would split the chain
+    into several components — the operator must raise instead."""
+    from otar3088_spark.operators.canonicalize import connected_components
+
+    edges = spark.createDataFrame(
+        [(f"c{i:03d}", f"c{i+1:03d}") for i in range(59)], "src string, dst string"
+    )
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        connected_components(edges, max_iter=1)
 
 
 def test_spans_to_iob_midtoken_span_start(spark):
