@@ -26,13 +26,18 @@ out). The reference's deployment analogue is the SLURM batch submission
 (`sample_slurm_job.batch:1-26`); here the unit of deployment is one zip +
 one job file.
 
-Spark jobs, in order: one collect of the dictionary (``PreparedDictionary``:
-anchor IN-set, anchor mode and alias clusters, derived on the driver), with
-``--staging`` the dictionary fingerprint and the span-snapshot write, then
-the three output writes. The triple table feeds all three outputs, so it is
-persisted once, written from the cache, and the node and edge tables are
-derived from that persisted frame instead of recomputing the triple tail;
-the cache is dropped before ``main`` returns, on success or failure.
+Spark jobs, in order: the schema reads of the two inputs, one collect of
+the dictionary (``PreparedDictionary``: anchor IN-set, anchor mode, alias
+clusters and the content digest, derived on the driver), with ``--staging``
+the span-snapshot write, then the three output writes. Nothing else runs a
+job: the snapshot's stage name hashes the collected dictionary rows, the
+snapshot is read back with the schema its manifest stores, and the output
+counts of a local directory are summed from the written files' parquet
+footers (a Spark count for tables and non-local paths). The triple table
+feeds all three outputs, so it is persisted once, written from the cache,
+and the node and edge tables are derived from that persisted frame instead
+of recomputing the triple tail; the cache is dropped before ``main``
+returns, on success or failure.
 
 Prints ONE JSON metrics line (counts, timings, effective config) on
 success — the same contract as bench.py.
@@ -101,7 +106,11 @@ def main(argv: list[str] | None = None) -> int:
                          "(default: 2x defaultParallelism)")
     args = ap.parse_args(argv)
 
-    from otar3088_spark.io.checkpoint import iceberg_catalog_configured, write_iceberg
+    from otar3088_spark.io.checkpoint import (
+        SnapshotStore,
+        iceberg_catalog_configured,
+        write_iceberg,
+    )
     from otar3088_spark.operators.triples import graph_tables
     from otar3088_spark.plans.kg_pipeline import build_kg
     from otar3088_spark.session import submit_spark
@@ -160,8 +169,14 @@ def main(argv: list[str] | None = None) -> int:
             for part, df in outputs.items():
                 dest = os.path.join(args.output, part)
                 df.write.mode("overwrite").parquet(dest)
-                # footer-only count of what was actually committed
-                counts[part] = spark.read.parquet(dest).count()
+                # the count of what was committed: summed from the written
+                # files' parquet footers on a local directory (no Spark
+                # job), a Spark count elsewhere
+                counts[part] = (
+                    sum(f["rows"] for f in SnapshotStore._file_lineage(spark, dest))
+                    if os.path.isdir(dest)
+                    else spark.read.parquet(dest).count()
+                )
     finally:
         triples.unpersist()
     elapsed = time.perf_counter() - t0

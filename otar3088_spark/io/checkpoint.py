@@ -10,9 +10,11 @@ committed (manifest present, data immutable) or ignored — re-running a
 pipeline skips committed stages and recomputes the rest, which is exactly the
 Iceberg-snapshot resume semantics at the granularity we checkpoint.
 
-Lineage: ``spark_partition_id()`` + row counts per partition are captured in
-one extra aggregation per committed stage and stored in the manifest — the
+Lineage: row counts per written file, read from the parquet footers (a Spark
+aggregation only on non-local paths), are stored in the manifest — the
 per-partition lineage rows the north rule asks for, without a second scan.
+The manifest also stores the read-back schema, so a committed stage is read
+without schema inference.
 """
 
 from __future__ import annotations
@@ -24,8 +26,24 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 MANIFEST = "_MANIFEST.json"
+
+
+def _as_nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every struct field, array element and map value made
+    nullable — the schema a parquet file source reads back. Parquet footers
+    keep the writer's nullability; the reader drops it."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
 
 
 class SnapshotStore:
@@ -43,7 +61,10 @@ class SnapshotStore:
         return os.path.exists(os.path.join(self._stage_dir(stage), MANIFEST))
 
     def read(self, spark: SparkSession, stage: str) -> DataFrame:
-        return spark.read.parquet(os.path.join(self._stage_dir(stage), "data"))
+        """The committed stage, read with the schema its manifest stores:
+        no schema inference, so no Spark job runs before the first action."""
+        schema = T.StructType.fromJson(self.manifest(stage)["schema"])
+        return spark.read.schema(schema).parquet(os.path.join(self._stage_dir(stage), "data"))
 
     def manifest(self, stage: str) -> dict:
         with open(os.path.join(self._stage_dir(stage), MANIFEST)) as f:
@@ -68,7 +89,6 @@ class SnapshotStore:
         df.write.mode(mode).parquet(data_dir)
 
         spark = df.sparkSession
-        written = spark.read.parquet(data_dir)
         lineage = self._file_lineage(spark, data_dir)
         man = {
             "stage": stage,
@@ -78,7 +98,9 @@ class SnapshotStore:
             "total_rows": sum(p["rows"] for p in lineage),
             "n_partitions": len(lineage),
             "partition_lineage": lineage,
-            "schema": written.schema.jsonValue(),
+            # what spark.read.parquet(data_dir) infers: the written schema
+            # with every field nullable (file sources read all-nullable)
+            "schema": _as_nullable(df.schema).jsonValue(),
         }
         tmp = os.path.join(d, f".{MANIFEST}.tmp")
         with open(tmp, "w") as f:
@@ -88,15 +110,15 @@ class SnapshotStore:
 
     @staticmethod
     def _file_lineage(spark: SparkSession, data_dir: str) -> list[dict]:
-        """Per-file row counts for the manifest.
+        """Per-file row counts of a committed parquet directory: the
+        manifest's lineage, and ``jobs/kg_submit.py``'s output counts (the
+        sum over files).
 
         Fast path: local directories read ONLY the parquet footers
         (pyarrow metadata — KBs per file), because the row count per file
-        is already durable parquet metadata; the previous implementation
-        re-scanned the full written data with a groupBy(input_file_name())
-        aggregation, a second read of the whole snapshot per committed
-        stage. Non-local paths (e.g. object stores under a real cluster)
-        keep the Spark aggregation fallback. Identical manifest content
+        is already durable parquet metadata — no Spark job, no re-scan of
+        the written data. Non-local paths (e.g. object stores under a real
+        cluster) keep the Spark aggregation fallback. Identical content
         either way — same files, same counts."""
         if os.path.isdir(data_dir):
             import pyarrow.parquet as pq

@@ -37,6 +37,7 @@ output is pruned immediately by the broadcast hash join.
 
 from __future__ import annotations
 
+import hashlib
 from collections import Counter
 from dataclasses import dataclass
 
@@ -100,7 +101,11 @@ class PreparedDictionary:
     * ``pair_mode`` — whether any ``d0`` row keys on a (first, second) pair,
       i.e. whether the corpus side must emit pair keys;
     * ``clusters`` — ``(ent_id, cluster_id)`` alias clusters, a DataFrame
-      over a driver-side list (no checkpointed lineage to lose).
+      over a driver-side Arrow table (no checkpointed lineage to lose, no
+      Python worker to read it);
+    * ``digest`` — an order-insensitive hash of the collected rows at the
+      prepared grain ``(ent_id, label, term, term_tokens)``, the dictionary
+      part of the span-stage fingerprint.
 
     Build it with :meth:`build`: ONE Spark pass collects the dictionary at
     the prepared grain, and everything eager is derived on the driver from
@@ -113,6 +118,7 @@ class PreparedDictionary:
     anchors: list[str] | None
     pair_mode: bool
     clusters: DataFrame
+    digest: str
 
     @classmethod
     def build(
@@ -126,6 +132,8 @@ class PreparedDictionary:
         """Build the value from a ``prepare_dictionary`` DataFrame with ONE
         Spark action (the Arrow collect below). The options are
         ``tag_mentions``'s: none of them changes which spans are found."""
+        import pyarrow as pa
+
         ov = dict(lemma_overrides or {})
         # --- dictionary-side normalization + preimage enumeration ------------
         # Every dictionary token is normalized with the FULL lemma function;
@@ -163,11 +171,18 @@ class PreparedDictionary:
         tbl = normed.select(
             "ent_id",
             "label",
+            "term",
+            "term_tokens",
             "nd_tokens",
             allowed.alias("allowed"),
             alias_key_expr(F.col("term")).alias("akey"),
         ).toArrow()
         ent_ids = tbl.column("ent_id").to_pylist()
+        # order-insensitive digest of the prepared grain (ent_id, label, term,
+        # term_tokens): everything below is a function of these rows, ``ov``
+        # and the options (kg_pipeline._span_stage_fingerprint)
+        grain = zip(ent_ids, *(tbl.column(c).to_pylist() for c in ("label", "term", "term_tokens")))
+        digest = hashlib.sha1("\n".join(sorted(map(repr, grain))).encode()).hexdigest()
         groups = {
             (e, lab, tuple(nd)): al
             for e, lab, nd, al in zip(
@@ -245,9 +260,19 @@ class PreparedDictionary:
         }
         anchors = sorted(keys) if len(keys) <= max_prefilter_terms else None
 
+        # the clusters go to the JVM as an Arrow table: a Python list would
+        # be pickled through a PythonRDD, the only Python worker the
+        # gazetteer path would start
         key_type = prepared.schema["ent_id"].dataType
+        pairs = alias_clusters(zip(ent_ids, tbl.column("akey").to_pylist()))
+        arrow_key = tbl.schema.field("ent_id").type
         clusters = prepared.sparkSession.createDataFrame(
-            alias_clusters(zip(ent_ids, tbl.column("akey").to_pylist())),
+            pa.table(
+                {
+                    "ent_id": pa.array([e for e, _ in pairs], arrow_key),
+                    "cluster_id": pa.array([c for _, c in pairs], arrow_key),
+                }
+            ),
             T.StructType(
                 [T.StructField("ent_id", key_type), T.StructField("cluster_id", key_type)]
             ),
@@ -260,6 +285,7 @@ class PreparedDictionary:
             # the corpus side must emit pair keys iff ANY dim row keys on a pair
             pair_mode=bool(bigram_anchor) or bool(oversized),
             clusters=clusters,
+            digest=digest,
         )
 
 

@@ -15,10 +15,11 @@ triple projection (deliberate reuse point, SURVEY.md §4 caching row).
 
 The dictionary side is prepared ONCE per build: ``PreparedDictionary.build``
 collects the gazetteer in one Spark action and derives the anchor IN-set, the
-anchor mode and the alias clusters from those rows on the driver. That
-collect (two jobs under AQE: the dedup shuffle and the result) is all
-``build_kg`` runs at plan time without ``staging_dir``;
-with it, the fingerprint aggregate and the snapshot write follow.
+anchor mode, the alias clusters and the content digest from those rows on the
+driver. That collect (two jobs under AQE: the dedup shuffle and the result) is
+all ``build_kg`` runs at plan time without ``staging_dir``; with it, only the
+snapshot write follows (the stage fingerprint hashes the collected rows, and
+the snapshot is read back with the schema its manifest stores).
 """
 
 from __future__ import annotations
@@ -32,6 +33,7 @@ from otar3088_spark.operators.canonicalize import resolve_labels
 from otar3088_spark.operators.sentencize import normalize_turns, sentencize
 from otar3088_spark.operators.tagging import (
     PreparedDictionary,
+    as_prepared,
     prepare_dictionary,
     tag_mentions,
 )
@@ -39,24 +41,32 @@ from otar3088_spark.operators.triples import causes_triples, graph_tables, menti
 
 
 def _span_stage_fingerprint(
-    dictionary: DataFrame, use_model: bool, scorer, lemma_overrides=None
+    dictionary: DataFrame | PreparedDictionary, use_model: bool, scorer, lemma_overrides=None
 ) -> str:
     """Hex fingerprint of everything the span stage's output depends on
-    besides the transcripts: the model toggle, the scorer identity, and an
-    order-insensitive content hash of the dictionary (SUM of per-row
-    xxhash64 plus the row count over the JSON-serialized rows — one
-    aggregate over the broadcast dim, negligible next to the pipeline).
-    Sum+count, not bit_xor: xor cancels rows with even multiplicity, so a
-    raw input {A, A, B} would fingerprint identically to {B} and could
-    silently resume a stale span snapshot."""
+    besides the transcripts: the model toggle, the scorer identity, the
+    lemma overrides and the dictionary's ``PreparedDictionary.digest``.
+
+    The prepared grain is enough. The span stage reads the dictionary only
+    through the ``PreparedDictionary``: ``tag_mentions`` joins its ``d0``
+    and filters on its ``anchors``/``pair_mode``, ``link_model_mentions``
+    projects its ``prepared`` plan. Each of those is a function of the
+    prepared rows ``(ent_id, label, term, term_tokens)`` (``n`` and
+    ``first_tok`` derive from ``term_tokens``), the override map and
+    ``build``'s options, which ``build_kg`` leaves at their defaults. So a
+    raw row that ``prepare_dictionary`` drops, or a raw column it does not
+    keep, cannot change a span, and the digest — hashed from the rows
+    ``build`` already collected — costs no Spark job. The rows are sorted
+    before hashing, so their order does not matter.
+
+    ``dictionary`` is a ``PreparedDictionary`` or a raw dictionary
+    DataFrame; the latter is prepared and built exactly as ``build_kg``
+    does (one collect), so both give the stage name ``build_kg`` writes."""
     import hashlib
 
-    row = dictionary.select(
-        # decimal(38,0) accumulator: ANSI mode (Spark 4 default) would raise
-        # on bigint sum overflow for large dictionaries
-        F.sum(F.xxhash64(F.to_json(F.struct(*dictionary.columns))).cast("decimal(38,0)")).alias("h"),
-        F.count(F.lit(1)).alias("c"),
-    ).first()
+    if not isinstance(dictionary, PreparedDictionary):
+        dictionary = prepare_dictionary(dictionary)
+    pdict = as_prepared(dictionary, lemma_overrides)
     # Custom scorers fingerprint by OBJECT identity (qualname + id), not
     # qualname alone: two differently-configured same-qualname closures must
     # never share a snapshot (stale-config reuse). Consequence: a custom-
@@ -69,12 +79,10 @@ def _span_stage_fingerprint(
         from otar3088_spark.operators.inference import _scorer_cache_key
 
         scorer_id = _scorer_cache_key("fp", scorer)
-    lemma_fp = hashlib.sha1(
-        repr(sorted((lemma_overrides or {}).items())).encode()
-    ).hexdigest()[:8]
+    lemma_fp = hashlib.sha1(repr(sorted(pdict.lemma_overrides.items())).encode()).hexdigest()[:8]
     key = (
         f"model={bool(use_model or scorer is not None)};scorer={scorer_id};"
-        f"dict={row['h']}:{row['c']};lemma={lemma_fp}"
+        f"dict={pdict.digest};lemma={lemma_fp}"
     )
     return hashlib.sha1(key.encode()).hexdigest()[:12]
 
@@ -152,18 +160,18 @@ def build_kg(
         # snapshot and recomputes only the downstream tail.
         #
         # The stage name carries a CONFIG FINGERPRINT (use_model, scorer
-        # identity, content hash of the dictionary snapshot): re-running
+        # identity, content hash of the prepared dictionary): re-running
         # against the same staging_dir with a different configuration gets a
         # different stage name and recomputes, instead of silently serving a
         # stale span snapshot built under the old config. The dictionary
-        # hash is one tiny job (the dictionary is the broadcast dim).
+        # hash comes from the rows ``pdict`` already collected: no job.
         from otar3088_spark.io.checkpoint import SnapshotStore
 
         store = SnapshotStore(staging_dir)
         _spans_df = spans
         stage = (
             "spans-"
-            + _span_stage_fingerprint(dictionary, use_model, model_scorer, lemma_overrides)
+            + _span_stage_fingerprint(pdict, use_model, model_scorer, lemma_overrides)
         )
         # Merged path: the sentence subtree feeds BOTH the gazetteer tagging
         # branch and the model-scoring branch, and Spark only reuses

@@ -15,6 +15,28 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def job_count(spark):
+    """``job_count(fn) -> (fn(), number of Spark jobs fn() ran)``, counted by
+    job group."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def count(fn):
+        # a fresh group per call: id(fn) can repeat once a lambda is freed
+        group = f"job-count-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "counted")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
+
+
 @pytest.fixture(scope="session")
 def transcripts_pd():
     from otar3088_spark.synth import transcripts_pandas

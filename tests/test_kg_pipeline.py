@@ -546,24 +546,11 @@ def test_write_iceberg_seam(spark):
     assert not iceberg_catalog_configured(spark)
 
 
-def _job_count(spark, fn):
-    """(result, number of Spark jobs ``fn()`` ran), counted by job group."""
-    sc = spark.sparkContext
-    group = f"job-count-{id(fn)}"
-    sc.setJobGroup(group, "counted")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _persistent_rdd_ids(spark) -> set[int]:
     return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
-def test_prepared_dictionary_value_semantics(spark, tmp_path):
+def test_prepared_dictionary_value_semantics(spark, tmp_path, job_count):
     """The dictionary side is one explicit value: built once, reused by
     every tagging call at no Spark job, bound to the override map it was
     built with, and never stale — a re-read dictionary is a new value that
@@ -581,7 +568,7 @@ def test_prepared_dictionary_value_semantics(spark, tmp_path):
 
     ov = {"mice": "mouse"}
     v1 = PreparedDictionary.build(prepare_dictionary(spark.read.parquet(path)), ov)
-    tagged, jobs = _job_count(spark, lambda: tag_mentions(sents, v1))
+    tagged, jobs = job_count(lambda: tag_mentions(sents, v1))
     assert jobs == 0  # a built value costs no plan-time job
     r1 = {tuple(r) for r in tagged.collect()}
     r2 = {tuple(r) for r in tag_mentions(sents, v1).collect()}
@@ -607,12 +594,12 @@ def test_prepared_dictionary_value_semantics(spark, tmp_path):
     assert {r["ent_id"] for r in v2.clusters.collect()} == {"T1", "T2", "T3"}
 
 
-def test_build_kg_plan_time_job_budget(spark, transcripts_df, dictionary_pd):
+def test_build_kg_plan_time_job_budget(spark, transcripts_df, dictionary_pd, job_count):
     """Without staging, every Spark job build_kg runs is plan-time
     dictionary work — one collect of the prepared dictionary. The
     dictionary is a fresh DataFrame, as in a one-shot kg_submit."""
     dictionary = spark.createDataFrame(dictionary_pd)
-    _, jobs = _job_count(spark, lambda: build_kg(transcripts_df, dictionary))
+    _, jobs = job_count(lambda: build_kg(transcripts_df, dictionary))
     assert jobs <= 3, jobs
 
 
@@ -654,6 +641,85 @@ def test_clusters_without_alias_collisions_are_singletons(spark):
     rows = [(f"Z{i}", t, "Obj") for i, t in enumerate(["alpha", "beta gamma", "delta cells"])]
     got = _clusters_vs_oracle(spark, rows)
     assert got == {(e, e) for e, _, _ in rows}
+
+
+def test_span_stage_fingerprint_tracks_prepared_grain(
+    spark, transcripts_df, dictionary_pd, tmp_path
+):
+    """The span-stage name hashes the dictionary at the PREPARED grain
+    ``(ent_id, label, term, term_tokens)``. That grain is enough because the
+    span stage reads the dictionary only through the ``PreparedDictionary``
+    (``d0``, ``anchors``, ``pair_mode`` and the ``prepared`` link dim), and
+    each of those is a function of the prepared rows and the override map.
+    So every change that survives ``prepare_dictionary`` renames the stage
+    and forces a recompute, and a row it drops keeps the name. A raw
+    dictionary argument (the call ``kgbench/trace.py`` makes) names the
+    stage ``build_kg`` writes."""
+    import os
+
+    from otar3088_spark.functions.text import IRREGULAR_PLURALS
+    from otar3088_spark.plans.kg_pipeline import _span_stage_fingerprint
+
+    cols = ["ent_id", "term", "label"]
+    base = [("E1", "mouse model", "Obj"), ("E2", "spark", "Sys")]
+
+    def fp(rows):
+        d = spark.createDataFrame(pd.DataFrame(rows, columns=cols))
+        return _span_stage_fingerprint(d, False, None, IRREGULAR_PLURALS)
+
+    name = fp(base)
+    assert fp(list(reversed(base))) == name  # row order does not matter
+    renamed = {
+        "term": [("E1", "mouse model", "Obj"), ("E2", "sparks", "Sys")],
+        # same term_tokens, but spans carry the dictionary term
+        "term case": [("E1", "mouse model", "Obj"), ("E2", "Spark", "Sys")],
+        "label": [("E1", "mouse model", "Obj"), ("E2", "spark", "Tool")],
+        "kept row": base + [("E3", "rat model", "Obj")],
+    }
+    for what, rows in renamed.items():
+        assert fp(rows) != name, what
+    dropped = {
+        "short term": base + [("E4", "ab", "Obj")],
+        "red-list suffix": base + [("E5", "angiogenesis", "Anatomy")],
+    }
+    for what, rows in dropped.items():
+        assert fp(rows) == name, what
+
+    dictionary = spark.createDataFrame(dictionary_pd)
+    staging = str(tmp_path / "staging")
+    build_kg(transcripts_df, dictionary, staging_dir=staging)
+    want = "spans-" + _span_stage_fingerprint(dictionary, False, None, IRREGULAR_PLURALS)
+    assert os.listdir(staging) == [want]
+
+
+def test_clusters_have_no_python_worker(spark):
+    """The alias clusters reach the JVM as an Arrow table: reading them
+    runs no PythonRDD (a pickled driver list would start a Python worker
+    pool for a handful of rows). Integer entity ids stay integers."""
+    from pyspark.sql import types as T
+
+    from otar3088_spark.functions.text import IRREGULAR_PLURALS
+    from otar3088_spark.operators.tagging import PreparedDictionary
+
+    dict_pd = pd.DataFrame(
+        [
+            (1, "mouse model", "Obj"),
+            (2, "Mouse-Model", "Obj"),
+            (3, "rat model", "Obj"),
+            (4, "cortex", "Anatomy"),
+        ],
+        columns=["ent_id", "term", "label"],
+    )
+    pdict = PreparedDictionary.build(
+        prepare_dictionary(spark.createDataFrame(dict_pd)), IRREGULAR_PLURALS
+    )
+    lineage = pdict.clusters._jdf.queryExecution().toRdd().toDebugString()
+    assert "PythonRDD" not in lineage, lineage
+    assert pdict.clusters.schema["cluster_id"].dataType == T.LongType()
+    got = {(r.ent_id, r.cluster_id) for r in pdict.clusters.collect()}
+    assert all(isinstance(c, int) for _, c in got)
+    assert got == set(oracle.entity_clusters(dict_pd).items())
+    assert got == {(1, 1), (2, 1), (3, 3), (4, 4)}
 
 
 def test_build_kg_failed_snapshot_leaves_no_cache(spark, transcripts_df, dictionary_df, tmp_path):

@@ -255,23 +255,39 @@ def test_span_and_triple_prf(spark):
 # ---------------------------------------------------------------- checkpoint
 
 
-def test_snapshot_resume(spark, tmp_path):
+def test_snapshot_resume(spark, tmp_path, job_count):
+    """A committed stage resumes without recomputing. The manifest stores
+    exactly the schema a parquet read infers (all nullable, nested types
+    included, although the written frame has non-nullable columns), and the
+    resumed read uses it: same rows, and no Spark job before its first
+    action."""
     from otar3088_spark.io.checkpoint import SnapshotStore
 
     store = SnapshotStore(str(tmp_path / "ckpt"))
     calls = {"n": 0}
 
+    frame = spark.range(10).select(
+        "id",  # non-nullable
+        (F.col("id") * 2).alias("v"),
+        F.array(F.struct(F.col("id").alias("a"), F.lit("x").alias("b"))).alias("arr"),
+        F.create_map(F.lit("k"), F.col("id")).alias("m"),
+    )
+    assert not frame.schema["id"].nullable
+
     def compute():
         calls["n"] += 1
-        return spark.range(10).withColumn("v", F.col("id") * 2)
-
+        return frame
     df1 = store.get_or_compute(spark, "stage1", compute)
     assert df1.count() == 10 and calls["n"] == 1
-    df2 = store.get_or_compute(spark, "stage1", compute)
-    assert df2.count() == 10 and calls["n"] == 1  # resumed, not recomputed
+    df2, jobs = job_count(lambda: store.get_or_compute(spark, "stage1", compute))
+    assert jobs == 0 and calls["n"] == 1  # resumed, not recomputed
+    assert sorted(map(str, df2.collect())) == sorted(map(str, frame.collect()))
     man = store.manifest("stage1")
     assert man["total_rows"] == 10
     assert sum(p["rows"] for p in man["partition_lineage"]) == 10
+    inferred = spark.read.parquet(str(tmp_path / "ckpt" / "stage1" / "data")).schema
+    assert man["schema"] == inferred.jsonValue()
+    assert df2.schema == inferred
 
 
 # ---------------------------------------------------------------- similarity

@@ -75,6 +75,34 @@ def test_kg_submit_outputs_from_persisted_triples(spark, transcripts_df, diction
         assert len(got) == counts[part] > 0, part
 
 
+def test_kg_submit_job_budget(spark, transcripts_df, dictionary_df, tmp_path, job_count):
+    """``main`` in-process with ``--staging``, with and without
+    ``--use-model``, runs a fixed number of Spark jobs, counted by job
+    group. Per build: the two input schema reads, the dictionary collect,
+    the span-snapshot write and the three output writes. The output counts
+    come from parquet footers, the stage fingerprint from the collected
+    dictionary rows, and the snapshot is read back with its manifest
+    schema: none of them runs a job. A new per-build job fails here."""
+    import contextlib
+    import io
+
+    tin, din = tmp_path / "t.parquet", tmp_path / "d.parquet"
+    transcripts_df.write.parquet(str(tin))
+    dictionary_df.write.parquet(str(din))
+    main = _load_kg_submit().main
+    for extra, budget in (([], 22), (["--use-model"], 29)):
+        tag = "model" if extra else "gazetteer"
+        argv = [
+            "--transcripts", str(tin), "--dictionary", str(din),
+            "--output", str(tmp_path / f"kg-{tag}"), "--output-format", "path",
+            "--staging", str(tmp_path / f"staging-{tag}"), *extra,
+        ]
+        with contextlib.redirect_stdout(io.StringIO()):
+            rc, jobs = job_count(lambda: main(argv))
+        assert rc == 0
+        assert jobs <= budget, (tag, jobs)
+
+
 def test_spark_submit_pyfiles_job(spark, transcripts_df, dictionary_df, tmp_path):
     import pyspark
 
