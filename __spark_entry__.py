@@ -52,8 +52,8 @@ def entry(spark: SparkSession) -> DataFrame:
     dictionary = spark.createDataFrame(entity_dictionary_pandas())
     events = spark.createDataFrame(events_pandas(n=200))
     # persist_spans: resolve_labels consumes the span table twice; without
-    # the persist the whole tagging+model subtree executes twice (round-2
-    # judge finding). The persist makes the second consumption a cache scan.
+    # materializing it the whole tagging+model subtree executes twice. With
+    # it, both consumers scan this build's materialized spans.
     res = build_kg(
         transcripts, dictionary, events=events, use_model=True, persist_spans=True
     )

@@ -49,9 +49,8 @@ def _as_nullable(dt: T.DataType) -> T.DataType:
 class SnapshotStore:
     """Directory-per-stage checkpoint store with atomic manifest commit."""
 
-    def __init__(self, root: str, run_id: str | None = None):
+    def __init__(self, root: str):
         self.root = root
-        self.run_id = run_id or "run"
         os.makedirs(root, exist_ok=True)
 
     def _stage_dir(self, stage: str) -> str:
@@ -70,8 +69,9 @@ class SnapshotStore:
         with open(os.path.join(self._stage_dir(stage), MANIFEST)) as f:
             return json.load(f)
 
-    def write(self, df: DataFrame, stage: str, mode: str = "error") -> dict:
-        """Write a stage: parquet data + per-partition lineage + manifest.
+    def write(self, df: DataFrame, stage: str) -> dict:
+        """Write (or overwrite) a stage: parquet data + per-partition
+        lineage + manifest.
 
         The lineage aggregation runs over the *written* files so counts
         reflect durable state, not the pre-write plan — and it is keyed by
@@ -86,13 +86,12 @@ class SnapshotStore:
         """
         d = self._stage_dir(stage)
         data_dir = os.path.join(d, "data")
-        df.write.mode(mode).parquet(data_dir)
+        df.write.mode("overwrite").parquet(data_dir)
 
         spark = df.sparkSession
         lineage = self._file_lineage(spark, data_dir)
         man = {
             "stage": stage,
-            "run_id": self.run_id,
             "snapshot_id": uuid.uuid4().hex,
             "committed_at_unix": time.time(),
             "total_rows": sum(p["rows"] for p in lineage),
@@ -146,19 +145,16 @@ class SnapshotStore:
             key=lambda p: p["file"],
         )
 
-    def get_or_compute(
-        self, spark: SparkSession, stage: str, compute, force: bool = False
-    ) -> DataFrame:
+    def get_or_compute(self, spark: SparkSession, stage: str, compute) -> DataFrame:
         """Resume point: return the committed snapshot, or compute+commit.
 
         ``compute() -> DataFrame``. This is the idempotent-resume primitive:
         a re-run after a crash re-reads every committed stage and recomputes
         only the uncommitted tail.
         """
-        if self.is_committed(stage) and not force:
+        if self.is_committed(stage):
             return self.read(spark, stage)
-        df = compute()
-        self.write(df, stage, mode="overwrite")
+        self.write(compute(), stage)
         return self.read(spark, stage)
 
 
@@ -195,7 +191,7 @@ def write_iceberg(
     the full correspondence is documented in BENCH/ICEBERG_READINESS.md:
 
     * ``replace_partitions`` → ``overwritePartitions()`` (dynamic overwrite;
-      SnapshotStore ``write(mode="overwrite")`` of a stage dir),
+      SnapshotStore ``write`` of a stage dir),
     * ``append`` → ``append()``,
     * ``create_or_replace`` → ``createOrReplace()`` (first commit of a stage).
 

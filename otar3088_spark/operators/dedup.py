@@ -211,9 +211,8 @@ def banded_signatures(
 ) -> DataFrame:
     """(id, band_idx, band_hash) — one row per (doc, band): the signature
     sliced into ``bands`` runs of ``rows_per_band`` values, each run packed
-    into a single bucket-key string. Shared by the candidate join and the
-    bucket-histogram diagnostics (tools/dedup_scale.py) so measurement can
-    never drift from the production banding."""
+    into a single bucket-key string — the bucket key of the candidate
+    join."""
     assert bands * rows_per_band <= 1 << 10
     return signatures.select(
         "id",

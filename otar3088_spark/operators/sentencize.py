@@ -28,7 +28,6 @@ from otar3088_spark.functions.text import (
 
 def normalize_turns(
     transcripts: DataFrame,
-    drop_headers: bool = True,
     salt_partitions: int | None = None,
 ) -> DataFrame:
     """P0: dedup, null-filter, header-filter, clean text.
@@ -53,9 +52,9 @@ def normalize_turns(
         & F.col("conv_id").isNotNull()
         & F.col("turn_idx").isNotNull()
     )
-    if drop_headers:
-        # before the dedup aggregate so header rows never enter the shuffle
-        filtered = filtered.filter(~is_header_expr(F.col("text")))
+    # header filter before the dedup aggregate so header rows never enter
+    # the shuffle
+    filtered = filtered.filter(~is_header_expr(F.col("text")))
     # key-dedup via collect_list+element_at rather than dropDuplicates:
     # dropDuplicates keeps whole rows with First() aggregates, and string
     # buffers force SortAggregate (full sort of every partition). collect_list

@@ -60,6 +60,14 @@ from otar3088_spark.operators.canonicalize import alias_clusters, alias_key_expr
 # (cellfinder_clean.ipynb cell 8).
 REDLIST_SUFFIX = r"(?:genesis|cytic|ial|yal)$"
 
+# Plan-time anchor IN-set cap: above this many distinct anchor keys the
+# pre-filter is skipped and the broadcast hash join alone prunes
+# non-anchors (a literal IN-list that size bloats every plan).
+MAX_PREFILTER_TERMS = 50_000
+# Auto anchor mode: a first-position surface form anchoring more than this
+# many n>=2 terms is an oversized group and switches to pair keys.
+BIGRAM_ANCHOR_THRESHOLD = 64
+
 
 def prepare_dictionary(dict_df: DataFrame) -> DataFrame:
     """Normalize the gazetteer for matching.
@@ -97,7 +105,7 @@ class PreparedDictionary:
     * ``d0`` — the exploded-anchor broadcast dim ``tag_mentions`` joins on
       (lazy);
     * ``anchors`` — the plan-time anchor IN-set, ``None`` above
-      ``max_prefilter_terms`` distinct keys;
+      ``MAX_PREFILTER_TERMS`` distinct keys;
     * ``pair_mode`` — whether any ``d0`` row keys on a (first, second) pair,
       i.e. whether the corpus side must emit pair keys;
     * ``clusters`` — ``(ent_id, cluster_id)`` alias clusters, a DataFrame
@@ -125,13 +133,13 @@ class PreparedDictionary:
         cls,
         prepared: DataFrame,
         lemma_overrides: dict[str, str] | None = None,
-        max_prefilter_terms: int = 50_000,
         bigram_anchor: bool | None = None,
-        bigram_anchor_threshold: int = 64,
     ) -> PreparedDictionary:
         """Build the value from a ``prepare_dictionary`` DataFrame with ONE
-        Spark action (the Arrow collect below). The options are
-        ``tag_mentions``'s: none of them changes which spans are found."""
+        Spark action (the Arrow collect below). ``bigram_anchor`` is
+        ``tag_mentions``'s option: it changes the candidate blocking, never
+        which spans are found. Whether the anchor IN-set is kept follows
+        from the dictionary's size (``MAX_PREFILTER_TERMS``)."""
         import pyarrow as pa
 
         ov = dict(lemma_overrides or {})
@@ -180,7 +188,7 @@ class PreparedDictionary:
         ent_ids = tbl.column("ent_id").to_pylist()
         # order-insensitive digest of the prepared grain (ent_id, label, term,
         # term_tokens): everything below is a function of these rows, ``ov``
-        # and the options (kg_pipeline._span_stage_fingerprint)
+        # and ``bigram_anchor`` (kg_pipeline._span_stage_fingerprint)
         grain = zip(ent_ids, *(tbl.column(c).to_pylist() for c in ("label", "term", "term_tokens")))
         digest = hashlib.sha1("\n".join(sorted(map(repr, grain))).encode()).hexdigest()
         groups = {
@@ -203,7 +211,7 @@ class PreparedDictionary:
         oversized: list[str] = []
         if bigram_anchor is None:
             per_form = Counter(f1 for al in groups.values() if len(al) >= 2 for f1 in al[0])
-            oversized = sorted(f for f, c in per_form.items() if c > bigram_anchor_threshold)
+            oversized = sorted(f for f, c in per_form.items() if c > BIGRAM_ANCHOR_THRESHOLD)
         big = set(oversized)
 
         # anchor join key: one dim row per allowed FIRST-position surface form
@@ -245,7 +253,7 @@ class PreparedDictionary:
 
         # --- plan-time anchor IN-set ------------------------------------------
         # The distinct first_tok values of d0, derived from the collected rows
-        # by the same rule as the d0 plan above. Above ``max_prefilter_terms``
+        # by the same rule as the d0 plan above. Above ``MAX_PREFILTER_TERMS``
         # distinct keys the pre-filter is skipped (the broadcast hash join
         # prunes non-anchors just as correctly, one narrow stage later).
         keys = {
@@ -258,7 +266,7 @@ class PreparedDictionary:
                 else [f1]
             )
         }
-        anchors = sorted(keys) if len(keys) <= max_prefilter_terms else None
+        anchors = sorted(keys) if len(keys) <= MAX_PREFILTER_TERMS else None
 
         # the clusters go to the JVM as an Arrow table: a Python list would
         # be pickled through a PythonRDD, the only Python worker the
@@ -292,14 +300,15 @@ class PreparedDictionary:
 def as_prepared(
     dictionary: DataFrame | PreparedDictionary,
     lemma_overrides: dict[str, str] | None = None,
-    **options,
+    bigram_anchor: bool | None = None,
 ) -> PreparedDictionary:
     """The adapter behind every dictionary-consuming layer: a
     ``PreparedDictionary`` passes through, a ``prepare_dictionary``
-    DataFrame is built into one (``options`` go to ``build``). Overrides
-    that contradict a passed value's own are an error, not a silent pick."""
+    DataFrame is built into one (``bigram_anchor`` goes to ``build``).
+    Overrides that contradict a passed value's own are an error, not a
+    silent pick."""
     if not isinstance(dictionary, PreparedDictionary):
-        return PreparedDictionary.build(dictionary, lemma_overrides, **options)
+        return PreparedDictionary.build(dictionary, lemma_overrides, bigram_anchor)
     if lemma_overrides is not None and dict(lemma_overrides) != dictionary.lemma_overrides:
         raise ValueError("lemma_overrides differ from the PreparedDictionary's own")
     return dictionary
@@ -375,12 +384,9 @@ def _allowed_forms_expr(t, ov: dict[str, str]):
 def tag_mentions(
     sentences: DataFrame,
     dictionary: DataFrame | PreparedDictionary,
-    max_prefilter_terms: int = 50_000,
     lemma_overrides: dict[str, str] | None = None,
     precompute_offsets: bool = False,
     bigram_anchor: bool | None = None,
-    bigram_anchor_threshold: int = 64,
-    _grouped_output: bool = False,
 ) -> DataFrame:
     """Detect dictionary mentions in sentences; returns one row per span.
 
@@ -416,7 +422,7 @@ def tag_mentions(
     Default ``None`` = AUTO: the skew statistic is computed dim-side by
     ``PreparedDictionary.build`` from its one collect of the broadcast
     dictionary — any first-position surface form anchoring more than
-    ``bigram_anchor_threshold`` n>=2 terms is an oversized group, and ONLY
+    ``BIGRAM_ANCHOR_THRESHOLD`` n>=2 terms is an oversized group, and ONLY
     those groups switch to pair keys (n==1 terms and small groups keep
     unigram anchors, bounding their amplification at the threshold). With
     no oversized group the plan is byte-identical to ``False``; with one,
@@ -435,23 +441,12 @@ def tag_mentions(
     link or cluster against one dictionary more than once (``build_kg``)
     build the value once and pass it.
     """
-    pdict = as_prepared(
-        dictionary,
-        lemma_overrides,
-        max_prefilter_terms=max_prefilter_terms,
-        bigram_anchor=bigram_anchor,
-        bigram_anchor_threshold=bigram_anchor_threshold,
-    )
-    return _tag_with_dim(sentences, pdict, precompute_offsets, _grouped_output)
+    pdict = as_prepared(dictionary, lemma_overrides, bigram_anchor=bigram_anchor)
+    return _tag_with_dim(sentences, pdict, precompute_offsets)
 
 
 def tag_mentions_grouped(
-    sentences: DataFrame,
-    dictionary: DataFrame | PreparedDictionary,
-    max_prefilter_terms: int = 50_000,
-    lemma_overrides: dict[str, str] | None = None,
-    bigram_anchor: bool | None = None,
-    bigram_anchor_threshold: int = 64,
+    sentences: DataFrame, dictionary: DataFrame | PreparedDictionary
 ) -> DataFrame:
     """``tag_mentions`` without the final explode: one row per MATCHED
     sentence, ``(conv_id, turn_idx, sent_idx, sent_text, spans)`` where
@@ -473,18 +468,11 @@ def tag_mentions_grouped(
     Always runs the per-sentence array formulation (the grouped shape IS
     that path's intermediate), so it shares ``tag_mentions``'s
     ``precompute_offsets=True`` scaling profile. Same ``dictionary``
-    contract as ``tag_mentions``.
+    contract as ``tag_mentions``; a DataFrame is built with the default
+    options (no lemma overrides, auto anchor mode) — pass a
+    ``PreparedDictionary`` for anything else.
     """
-    return tag_mentions(
-        sentences,
-        dictionary,
-        max_prefilter_terms=max_prefilter_terms,
-        lemma_overrides=lemma_overrides,
-        precompute_offsets=True,
-        bigram_anchor=bigram_anchor,
-        bigram_anchor_threshold=bigram_anchor_threshold,
-        _grouped_output=True,
-    )
+    return _tag_with_dim(sentences, as_prepared(dictionary), True, True)
 
 
 def _tag_with_dim(
@@ -625,11 +613,6 @@ def _tag_with_dim(
     #   documents (54-token docs, ~14 candidates each) this removed the
     #   per-candidate copies of the sentence arrays and one shuffle:
     #   9.3s -> ~4s.
-    if grouped_output and not precompute_offsets:
-        raise ValueError(
-            "grouped_output requires the per-sentence array path "
-            "(precompute_offsets=True); use tag_mentions_grouped()"
-        )
     if not precompute_offsets:
         sent_proj = sentences.select(*key3, "sent_text")
         withs = cand.join(sent_proj, key3, "inner")

@@ -10,8 +10,10 @@ transcripts(conv_id, turn_idx, role, text, tool, ts)
 One linear declarative DAG: Catalyst sees the whole plan, pushes filters into
 the scan, prunes columns, broadcasts the dictionary, and AQE right-sizes the
 two real shuffles (term-count groupBy; triple dedup). The span table is
-persisted once because it feeds both the label-resolution aggregate and the
-triple projection (deliberate reuse point, SURVEY.md §4 caching row).
+materialized once per build (``staging_dir`` or ``persist_spans``) because
+it feeds both the label-resolution aggregate and the triple projection
+(deliberate reuse point, SURVEY.md §4 caching row); no build reads
+another's.
 
 The dictionary side is prepared ONCE per build: ``PreparedDictionary.build``
 collects the gazetteer in one Spark action and derives the anchor IN-set, the
@@ -122,6 +124,10 @@ def build_kg(
     executes twice. A parquet snapshot makes the second pass a pruned
     two-column scan — and doubles as the north-rule per-stage checkpoint
     (on a cluster this is the Iceberg table boundary).
+
+    ``persist_spans`` (without ``staging_dir``): the same single execution
+    of the span stage, materialized in memory for this build only. The span
+    stage then runs eagerly, inside this call.
     """
     # F8 lemmatization: the public irregular-plural table is the DEFAULT
     # override map (reference lemma-dict linking generalizes beyond the
@@ -194,7 +200,13 @@ def build_kg(
             if _sent_cache is not None:
                 _sent_cache.unpersist()
     elif persist_spans:
-        spans = spans.persist()
+        # An eager local checkpoint, not persist(): the cache manager serves
+        # a persisted plan's data to any later plan with the same result,
+        # so a later build over the same inputs (same paths, even freshly
+        # read) would scan this build's spans instead of computing its own.
+        # The checkpoint is an RDD of this call alone; its blocks go when
+        # its plans are dropped.
+        spans = spans.localCheckpoint()
     resolved = resolve_labels(spans)
     clusters = pdict.clusters
     triples = mention_triples(resolved, clusters)

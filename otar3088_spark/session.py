@@ -103,12 +103,6 @@ def get_spark(
         scratch = "/dev/shm/spark-local"
         os.makedirs(scratch, exist_ok=True)
         builder = builder.config("spark.local.dir", scratch)
-    # Driver-JVM flag passthrough (GC probes, tools/gc_probe.py): only takes
-    # effect when the session LAUNCHES the JVM — a getOrCreate against a
-    # live gateway cannot change launch-time flags, same as driver.memory.
-    java_opts = os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS")
-    if java_opts:
-        builder = builder.config("spark.driver.extraJavaOptions", java_opts)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -256,17 +256,14 @@ def events_pandas(n: int = 200, seed: int = SEED) -> pd.DataFrame:
     return df
 
 
-def transcripts_spark(spark, n_turns: int, turns_per_conv: int = 20, skew_frac: float = 0.0):
+def transcripts_spark(spark, n_turns: int):
     """Bench-scale transcript generator: pure column expressions over
     ``spark.range`` — distributed, deterministic, zero per-row Python.
 
     Text is assembled by indexing small literal vocab arrays with hash-derived
-    ints; ~3 sentences/turn, ~1 dictionary mention per sentence. At 10^9 rows
-    this parallelizes across all executors (range is an evenly-split source).
-
-    ``skew_frac``: fraction of all turns assigned to ONE giant conversation
-    (head-conversation skew — the shape the north rule's salted
-    repartitioning exists for). 0.0 = uniform.
+    ints; ~3 sentences/turn, ~1 dictionary mention per sentence, 20 turns per
+    conversation. At 10^9 rows this parallelizes across all executors (range
+    is an evenly-split source).
     """
     from pyspark.sql import functions as F
 
@@ -275,18 +272,12 @@ def transcripts_spark(spark, n_turns: int, turns_per_conv: int = 20, skew_frac: 
     term_arr = F.array(*[F.lit(t) for t in terms])
     n_f, n_t = len(FILLER), len(terms)
 
-    head_n = int(n_turns * skew_frac)
-    conv = F.when(
-        F.col("id") < head_n, F.lit("conv_head")
-    ).otherwise(
-        F.concat(F.lit("conv_"), F.lpad((F.col("id") / turns_per_conv).cast("long").cast("string"), 9, "0"))
-    )
-    tidx = F.when(F.col("id") < head_n, F.col("id")).otherwise(
-        F.col("id") % turns_per_conv
+    conv = F.concat(
+        F.lit("conv_"), F.lpad((F.col("id") / 20).cast("long").cast("string"), 9, "0")
     )
     df = spark.range(n_turns).select(
         conv.alias("conv_id"),
-        tidx.cast("int").alias("turn_idx"),
+        (F.col("id") % 20).cast("int").alias("turn_idx"),
         F.element_at(F.array(F.lit("user"), F.lit("assistant"), F.lit("tool")), (F.col("id") % 3 + 1).cast("int")).alias("role"),
         F.col("id").alias("_id"),
     )
@@ -314,55 +305,3 @@ def transcripts_spark(spark, n_turns: int, turns_per_conv: int = 20, skew_frac: 
         (F.lit("2024-01-01 00:00:00").cast("timestamp") + F.make_interval(secs=F.col("_id") % 86400)).alias("ts"),
     )
 
-
-def _dup_threshold(dup_frac: float) -> int:
-    # round, don't truncate: int(0.3 * 1000) == 299 under IEEE-754, which
-    # would silently shift the planted count off the advertised fraction
-    return int(round(dup_frac * 1_000))
-
-
-def planted_dup_pairs(n_docs: int, dup_frac: float = 0.2) -> int:
-    """EXACT number of near-dup twin pairs documents_spark(n, dup_frac)
-    plants — the recall denominator for scale harnesses. Counts odd ids i
-    with i % 1000 < threshold (each twin pair is (i-1, i))."""
-    t = _dup_threshold(dup_frac)
-    odd_per_k = len(range(1, min(t, 1000), 2))
-    full, rem = divmod(n_docs, 1_000)
-    return full * odd_per_k + len([r for r in range(1, min(t, rem), 2)])
-
-
-def documents_spark(spark, n_docs: int, dup_frac: float = 0.2, doc_tokens: int = 24):
-    """Bench-scale document generator with PLANTED near-duplicate structure:
-    pure column expressions over ``spark.range`` — distributed,
-    deterministic, zero per-row Python (same design as transcripts_spark).
-
-    Near-dup pairs are planted as (even id, even id + 1) twins: an odd id in
-    the dup range regenerates its even predecessor's text and appends one
-    extra token, giving 3-shingle Jaccard ≈ (T-2-k)/T ≈ 0.9 at the default
-    length — above any standard near-dup threshold, below 1.0 (exact-dedup
-    must NOT collapse them). ``dup_frac`` of all docs are such twins; all
-    other docs are hash-unique, so the true-pair count is exactly
-    ``planted_dup_pairs(n_docs, dup_frac)`` and LSH bucket sizes stay O(cluster),
-    never corpus-wide — the property that keeps the band join linear.
-    """
-    from pyspark.sql import functions as F
-
-    filler_arr = F.array(*[F.lit(w) for w in FILLER])
-    n_f = len(FILLER)
-    # odd ids inside the dup range are twins of id-1; planted deterministically
-    # by id arithmetic so ANY subset of ids still has a well-defined corpus
-    is_dup = (F.col("id") % 2 == 1) & (
-        (F.col("id") % 1_000) < _dup_threshold(dup_frac)
-    )
-    text_seed = F.when(is_dup, F.col("id") - 1).otherwise(F.col("id"))
-
-    def pick(salt):
-        h = F.xxhash64(text_seed, F.lit(salt))
-        return F.element_at(filler_arr, ((h % n_f + n_f) % n_f + 1).cast("int"))
-
-    # every doc gets a unique token derived from text_seed so non-twin docs
-    # can never be accidental near-dups of each other
-    uniq = F.concat(F.lit("u"), F.conv(F.xxhash64(text_seed, F.lit(999)).cast("string"), 10, 16))
-    body = F.concat_ws(" ", *[pick(s) for s in range(doc_tokens - 1)], uniq)
-    text = F.when(is_dup, F.concat(body, F.lit(" extradup"))).otherwise(body)
-    return spark.range(n_docs).select(F.col("id").alias("doc_id"), text.alias("text"))

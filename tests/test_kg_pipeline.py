@@ -603,6 +603,29 @@ def test_build_kg_plan_time_job_budget(spark, transcripts_df, dictionary_pd, job
     assert jobs <= 3, jobs
 
 
+def test_persist_spans_is_per_build(spark, transcripts_pd, dictionary_pd, tmp_path, job_count):
+    """``persist_spans`` materializes the spans for its own build only. A
+    second build over the same parquet inputs, read afresh in the same
+    session, computes its spans again: it runs as many Spark jobs as the
+    first. A cache found by plan match would serve it the first build's
+    spans, so a best-of-N over repeated builds would time a cache read."""
+    spark.createDataFrame(transcripts_pd).write.parquet(str(tmp_path / "t"))
+    spark.createDataFrame(dictionary_pd).write.parquet(str(tmp_path / "d"))
+
+    def build():
+        res = build_kg(
+            spark.read.parquet(str(tmp_path / "t")),
+            spark.read.parquet(str(tmp_path / "d")),
+            persist_spans=True,
+        )
+        return {tuple(r) for r in res.triples.collect()}
+
+    first, jobs_first = job_count(build)
+    second, jobs_second = job_count(build)
+    assert second == first and len(first) > 100
+    assert jobs_second == jobs_first, (jobs_first, jobs_second)
+
+
 def _clusters_vs_oracle(spark, rows):
     """Engine clusters, built with build_kg's override map, vs the oracle."""
     from otar3088_spark.functions.text import IRREGULAR_PLURALS
@@ -937,11 +960,12 @@ def test_bigram_anchor_path_is_identical(spark, transcripts_df, dictionary_df):
     assert uni == bi
 
 
-def test_auto_bigram_anchor(spark, transcripts_df, dictionary_df):
+def test_auto_bigram_anchor(spark, transcripts_df, dictionary_df, monkeypatch):
     """Default (bigram_anchor=None) auto-selects the blocking key from the
     dictionary's own skew statistic: first-position forms anchoring more
     multi-token terms than the threshold switch to pair keys — WITHOUT any
     flag — while unskewed dictionaries resolve to the exact unigram plan."""
+    from otar3088_spark.operators import tagging
     from otar3088_spark.operators.tagging import PreparedDictionary
 
     sents = sentencize(normalize_turns(transcripts_df))
@@ -979,9 +1003,10 @@ def test_auto_bigram_anchor(spark, transcripts_df, dictionary_df):
     skew_auto = PreparedDictionary.build(d_skew)
     assert skew_auto.pair_mode is True
     assert {tuple(r) for r in tag_mentions(corpus, skew_auto).collect()} == auto
-    # threshold override: raise it above the group size -> unigram again
-    assert PreparedDictionary.build(d_skew, bigram_anchor_threshold=500).pair_mode is False
-    hi = {tuple(r) for r in tag_mentions(corpus, d_skew, bigram_anchor_threshold=500).collect()}
+    # threshold above the group size -> unigram again
+    monkeypatch.setattr(tagging, "BIGRAM_ANCHOR_THRESHOLD", 500)
+    assert PreparedDictionary.build(d_skew).pair_mode is False
+    hi = {tuple(r) for r in tag_mentions(corpus, d_skew).collect()}
     assert hi == auto
 
 

@@ -511,7 +511,7 @@ def test_snapshot_manifest_per_file_lineage(spark, tmp_path):
 
     store = SnapshotStore(str(tmp_path / "snap"))
     df = spark.range(100).selectExpr("cast(id as string) as conv_id", "id as turn_idx")
-    man = store.write(df.repartition(4), "stage1", mode="overwrite")
+    man = store.write(df.repartition(4), "stage1")
     assert man["total_rows"] == 100
     assert man["n_partitions"] == len(man["partition_lineage"]) > 0
     data = tmp_path / "snap" / "stage1" / "data"

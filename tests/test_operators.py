@@ -299,7 +299,7 @@ def test_ann_lsh_recall_vs_bruteforce(spark):
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     probes = emb.filter(F.col("vec_id") < 5)
     exact = cosine_topk(emb, probes, k=5)
-    approx = ann_lsh_topk(emb, probes, k=5, bits=6, num_tables=16, multiprobe=True)
+    approx = ann_lsh_topk(emb, probes, k=5, bits=6, num_tables=16)
     ex = {(r["q_id"], r["vec_id"]) for r in exact.collect()}
     ap = {(r["q_id"], r["vec_id"]) for r in approx.collect()}
     recall = len(ex & ap) / len(ex)
@@ -508,18 +508,22 @@ def test_nervaluate_4way_hand_computed(spark):
 # ------------------------------------------------ gazetteer prefilter fallback
 
 
-def test_tagging_prefilter_fallback_equivalence(spark):
+def test_tagging_prefilter_fallback_equivalence(spark, monkeypatch):
     """tag_mentions must produce identical spans with the anchor IN-set
     prefilter ON (small dictionaries) and OFF (auto-fallback for gazetteers
     too large to inline into the plan)."""
+    from otar3088_spark.operators import tagging
     from otar3088_spark.operators.tagging import prepare_dictionary, tag_mentions
     from otar3088_spark.synth import entity_dictionary_pandas, transcripts_pandas
     from otar3088_spark.operators.sentencize import normalize_turns, sentencize
 
     sents = sentencize(normalize_turns(spark.createDataFrame(transcripts_pandas(n_convs=6))))
     d = prepare_dictionary(spark.createDataFrame(entity_dictionary_pandas()))
-    with_pf = tag_mentions(sents, d)  # default threshold: prefilter on
-    without_pf = tag_mentions(sents, d, max_prefilter_terms=0)  # forced fallback
+    with_pf = tag_mentions(sents, d)  # default cap: prefilter on
+    assert tagging.PreparedDictionary.build(d).anchors
+    monkeypatch.setattr(tagging, "MAX_PREFILTER_TERMS", 0)
+    assert tagging.PreparedDictionary.build(d).anchors is None
+    without_pf = tag_mentions(sents, d)  # forced fallback
     key = ["conv_id", "turn_idx", "sent_idx", "start", "end", "label", "ent_id"]
     a = {tuple(r) for r in with_pf.select(*key).collect()}
     b = {tuple(r) for r in without_pf.select(*key).collect()}
