@@ -1,7 +1,7 @@
 from otar3088_spark.functions.text import (  # noqa: F401
     clean_text_expr,
     is_header_expr,
-    sentence_split_expr,
-    offsets_expr,
-    token_core_expr,
+    offsets_sql,
+    sentence_split_sql,
+    token_core_sql,
 )

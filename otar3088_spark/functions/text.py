@@ -9,7 +9,7 @@ fully pushdown-friendly. Semantics mirror the reference's cleaners:
   strip citation tags ``[1, 23]``, collapse whitespace.
 * ``is_header_expr``   — section-header row detection
   (article_normaliser.py:55-82): short known-header titles / PMC ids.
-* ``sentence_split_expr`` + ``offsets_expr`` — sentencization with character
+* ``sentence_split_sql`` + ``offsets_sql`` — sentencization with character
   offsets, done with a lookbehind split plus an ``aggregate`` cumulative-length
   scan. The reference used a spaCy sentencizer inside a process pool
   (split2sent_par.py:184-208); here sentence boundaries are ``[.!?]`` + space
@@ -17,6 +17,9 @@ fully pushdown-friendly. Semantics mirror the reference's cleaners:
   checkable. No shuffle, no UDF: offsets are computed per-row inside the JVM.
 * ``let_expr`` — the lambda-variable let-binding every array-side kernel
   uses to evaluate a shared subresult once per row.
+
+The ``*_sql`` helpers return SQL text instead of a Column (see the note
+above ``sentence_split_sql``).
 """
 
 from __future__ import annotations
@@ -126,36 +129,51 @@ def sentence_boundary_pattern() -> str:
     return r"(?<=[.!?])" + guards + r"(?<!\b[A-Z]\.) "
 
 
-def sentence_split_expr(clean_col: Column) -> Column:
-    """Split cleaned text into sentences on ``[.!?]`` + single space, with
-    abbreviation protection (F9).
+def sql_str(s: str) -> str:
+    """One backslash-escaped SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def sql_str_array(strs) -> str:
+    """SQL snippet ``array('a','b',...)`` with backslash-escaped string
+    literals. Literal collections are built as ONE ``F.expr`` string parsed
+    JVM-side: the Column-API routes (per-element ``F.lit``, ``isin``, even
+    ``F.lit(list)``) each cost one py4j round-trip PER ELEMENT — measured
+    ~2s of driver time per tagging query for the ~150-entry override map."""
+    return f"array({', '.join(map(sql_str, strs))})"
+
+
+# The helpers below return SQL TEXT over a SQL operand (a column name, a
+# lambda variable or a whole expression), not Columns: array-side kernels
+# embed them inside SQL lambdas, and a plan builder writes a whole
+# expression as one string, which costs one py4j round trip where the
+# Column API costs one per call. Each rule has this one form.
+
+
+def sentence_split_sql(clean: str) -> str:
+    """Split cleaned text ``clean`` into sentences on ``[.!?]`` + single
+    space, with abbreviation protection (F9).
 
     Uses zero-width lookbehinds so the terminal punctuation stays attached —
     which keeps character offsets exactly reconstructible (parts re-join with
     single spaces to the original cleaned text).
     """
-    return F.split(clean_col, sentence_boundary_pattern())
+    return f"split({clean}, {sql_str(sentence_boundary_pattern())})"
 
 
-def offsets_expr(parts: Column) -> Column:
-    """Character start offsets for an array of parts joined by one space.
+def offsets_sql(parts: str) -> str:
+    """Character start offsets for the array ``parts`` of parts joined by
+    one space.
 
     ``aggregate`` cumulative scan: start_0 = 0, start_{i+1} = start_i +
     len(part_i) + 1. Pure per-row JVM computation — the Spark-first
     replacement for per-row Python offset loops (iob_converter.py:130-134).
     Returns ``array<int>`` aligned with ``parts``.
     """
-    return F.aggregate(
-        parts,
-        F.struct(
-            F.array().cast("array<int>").alias("starts"),
-            F.lit(0).alias("cur"),
-        ),
-        lambda acc, x: F.struct(
-            F.concat(acc["starts"], F.array(acc["cur"])).alias("starts"),
-            (acc["cur"] + F.length(x) + F.lit(1)).alias("cur"),
-        ),
-        lambda acc: acc["starts"],
+    return (
+        f"aggregate({parts}, struct(CAST(array() AS ARRAY<INT>) AS starts, 0 AS cur),"
+        " (acc, x) -> struct(concat(acc.starts, array(acc.cur)) AS starts,"
+        " acc.cur + length(x) + 1 AS cur), acc -> acc.starts)"
     )
 
 
@@ -179,26 +197,35 @@ _LEAD_PUNCT = """(["'"""
 _TRAIL_PUNCT = """)].,;:!?"'"""
 
 
-def token_core_expr(tok: Column) -> Column:
-    """Strip leading ``(["'`` and trailing ``).,;:!?"'`` punctuation from a
-    token — the 'core' used as the dictionary-match key. F4-adjacent."""
-    return F.rtrim(F.ltrim(tok, F.lit(_LEAD_PUNCT)), F.lit(_TRAIL_PUNCT))
-
-
-def token_lead_expr(tok: Column) -> Column:
-    """Number of leading punctuation chars stripped by ``token_core_expr``
-    (needed to shift the char start offset onto the core)."""
-    return F.length(tok) - F.length(F.ltrim(tok, F.lit(_LEAD_PUNCT)))
-
-
-def destem_expr(key: Column) -> Column:
-    """Plural/possessive normalization of a lowercase key: ``term's``/``terms``
-    -> ``term``. Mirrors the reference boundary regex ``term(?:s|'s)?``
-    (labelstudio_e2e.py:171-178). Returns NULL when no suffix applies."""
+def token_core_sql(tok: str) -> str:
+    """Strip leading ``(["'`` and trailing ``).,;:!?"'`` punctuation from the
+    token ``tok`` — the 'core' used as the dictionary-match key.
+    F4-adjacent. (SQL ``ltrim(a, b)`` trims the characters of ``a`` from
+    ``b``; ``TRIM(LEADING ...)`` is unambiguous.)"""
     return (
-        F.when(key.endswith("'s") & (F.length(key) > 2), key.substr(F.lit(1), F.length(key) - 2))
-        .when(key.endswith("s") & (F.length(key) > 3), key.substr(F.lit(1), F.length(key) - 1))
-        .otherwise(F.lit(None).cast("string"))
+        f"TRIM(TRAILING {sql_str(_TRAIL_PUNCT)} FROM "
+        f"TRIM(LEADING {sql_str(_LEAD_PUNCT)} FROM {tok}))"
+    )
+
+
+def token_lead_sql(tok: str) -> str:
+    """Number of leading punctuation chars ``token_core_sql`` strips from
+    the token ``tok`` (needed to shift the char start offset onto the
+    core)."""
+    return f"(length({tok}) - length(TRIM(LEADING {sql_str(_LEAD_PUNCT)} FROM {tok})))"
+
+
+def destem_sql(key: str) -> str:
+    """Plural/possessive normalization of the lowercase key ``key``:
+    ``term's``/``terms`` -> ``term``. Mirrors the reference boundary regex
+    ``term(?:s|'s)?`` (labelstudio_e2e.py:171-178). NULL when no suffix
+    applies."""
+    return (
+        f"CASE WHEN endswith({key}, '\\'s') AND length({key}) > 2"
+        f" THEN substr({key}, 1, length({key}) - 2)"
+        f" WHEN endswith({key}, 's') AND length({key}) > 3"
+        f" THEN substr({key}, 1, length({key}) - 1)"
+        " ELSE CAST(NULL AS STRING) END"
     )
 
 
@@ -208,46 +235,9 @@ def destem_expr(key: Column) -> Column:
 from otar3088_spark.functions.lemma_data import IRREGULAR_PLURALS  # noqa: F401
 
 
-def sql_str_array(strs) -> str:
-    """SQL snippet ``array('a','b',...)`` with backslash-escaped string
-    literals. Literal collections are built as ONE ``F.expr`` string parsed
-    JVM-side: the Column-API routes (per-element ``F.lit``, ``isin``, even
-    ``F.lit(list)``) each cost one py4j round-trip PER ELEMENT — measured
-    ~2s of driver time per tagging query for the ~150-entry override map."""
-    quoted = ", ".join(
-        "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'" for s in strs
-    )
-    return f"array({quoted})"
-
-
-
-def lemma_expr(key: Column, overrides: dict[str, str] | None = None) -> Column:
-    """F8 lemmatization of a lowercase match key: an irregular-form override
-    map first (``mice -> mouse``, ``feet -> foot`` — the forms the
-    reference's spaCy lemmatizer handles, labelstudio_e2e.py:181-187), then
-    the rule-based plural/possessive destem. NULL when neither rule applies
-    (same contract as ``destem_expr``).
-
-    The override map is compiled to a ``CASE key WHEN ... THEN ...`` chain,
-    NOT a ``create_map`` lookup: ``GetMapValue(CreateMap(literals...))`` is
-    not constant-folded and re-materializes the map per row. Even so, ANY
-    per-token conditional chain defeats codegen subexpression elimination
-    in fused stages (conditional branches are CSE-excluded), so the tagging
-    hot path does NOT use this function at all — tag_mentions applies the
-    override map to the broadcast dictionary side instead (variant-row
-    expansion, tagging.py). Use this expression form only off the hot path
-    (small inputs, ad-hoc normalization, or dims)."""
-    ds = destem_expr(key)
-    if not overrides:
-        return ds
-    chain = None
-    for k, v in sorted(overrides.items()):
-        chain = (F.when if chain is None else chain.when)(key == F.lit(k), F.lit(v))
-    return chain.otherwise(ds)
-
-
-def norm_key_expr(key: Column, overrides: dict[str, str] | None = None) -> Column:
-    """F8 TOTAL lemma normalization of a lowercase match key (never NULL):
+def norm_key_sql(key: str, overrides: dict[str, str] | None = None) -> str:
+    """SQL text: F8 TOTAL lemma normalization of the lowercase match key
+    ``key`` (a SQL operand; never NULL):
 
     1. irregular override (``mice -> mouse``),
     2. override VALUES are fixed points — a known lemma is never re-stemmed
@@ -263,9 +253,11 @@ def norm_key_expr(key: Column, overrides: dict[str, str] | None = None) -> Colum
     compares ``window_lemmas == lemma_tokens``) restated over the engine's
     rule-based lemmatizer.
 
-    The override map is embedded as a FLAT ``map_from_arrays`` literal
-    looked up with ``try_element_at`` — two foldable array literals that
-    constant-fold to one map literal — NOT as a nested ``CASE WHEN`` chain:
+    SQL text, so a plan builder writes the whole tree as one string (one
+    py4j round trip). The override map is embedded as a FLAT
+    ``map_from_arrays`` literal looked up with ``try_element_at`` — two
+    foldable array literals that constant-fold to one map literal — NOT as
+    a nested ``CASE WHEN`` chain:
     a 153-entry chain is a depth-153 expression tree that costs seconds of
     driver-side Catalyst optimization per query (the same plan-size-not-
     compute failure mode as the round-2 ANN index). Even so, this expression
@@ -273,17 +265,16 @@ def norm_key_expr(key: Column, overrides: dict[str, str] | None = None) -> Colum
     excluded from codegen subexpression elimination — measured 15-40% on the
     tagging stage); tag_mentions evaluates it only on the broadcast
     dictionary dim, never per corpus token."""
-    ds = F.coalesce(destem_expr(key), key)
+    ds = f"coalesce({destem_sql(key)}, {key})"
     if not overrides:
         return ds
     items = sorted(overrides.items())
-    ovmap = F.expr(
+    ovmap = (
         f"map_from_arrays({sql_str_array(k for k, _ in items)}, "
         f"{sql_str_array(v for _, v in items)})"
     )
-    vals_arr = F.expr(sql_str_array(sorted(set(overrides.values()))))
-    return F.coalesce(
-        F.try_element_at(ovmap, key),
-        F.when(F.array_contains(vals_arr, key), key),
-        ds,
+    vals_arr = sql_str_array(sorted(set(overrides.values())))
+    return (
+        f"coalesce(try_element_at({ovmap}, {key}), "
+        f"CASE WHEN array_contains({vals_arr}, {key}) THEN {key} END, {ds})"
     )

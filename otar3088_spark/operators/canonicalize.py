@@ -31,7 +31,7 @@ from __future__ import annotations
 
 from collections.abc import Iterable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from otar3088_spark.synth import LABEL_PRIORITY
@@ -40,20 +40,21 @@ from otar3088_spark.synth import LABEL_PRIORITY
 GENERIC_WORDS = ("cell", "cells", "line", "lines", "tissue", "tissues")
 
 
-def label_priority_expr(label_col) -> Column:
-    """Rank of a label in the fixed priority order; unknown labels last.
+def label_priority_sql(label: str) -> str:
+    """SQL text: rank of the label ``label`` in the fixed priority order;
+    unknown labels last.
 
     Built as a constant-folded ``map_from_arrays`` literal looked up with
     ``try_element_at`` — NOT ``GetMapValue(CreateMap(...))``, which is not
     constant-folded and re-materializes the map per row (the same pitfall
-    functions/text.py norm_key_expr documents)."""
+    functions/text.py norm_key_sql documents)."""
     from otar3088_spark.functions.text import sql_str_array
 
-    m = F.expr(
-        f"map_from_arrays({sql_str_array(LABEL_PRIORITY)}, "
-        f"array({', '.join(str(i) for i in range(len(LABEL_PRIORITY)))}))"
+    ranks = ", ".join(str(i) for i in range(len(LABEL_PRIORITY)))
+    return (
+        f"coalesce(try_element_at(map_from_arrays({sql_str_array(LABEL_PRIORITY)}, "
+        f"array({ranks})), {label}), {len(LABEL_PRIORITY)})"
     )
-    return F.coalesce(F.try_element_at(m, label_col), F.lit(len(LABEL_PRIORITY)))
 
 
 def resolve_labels(spans: DataFrame) -> DataFrame:
@@ -62,22 +63,19 @@ def resolve_labels(spans: DataFrame) -> DataFrame:
     this doubles as homonym disambiguation (P4): mentions of a term that is
     both CellLine and CellType collapse onto the corpus-level winner.
     """
-    from pyspark.sql.window import Window
-
-    term_key = F.lower(F.col("term"))
-    counts = (
-        spans.groupBy(term_key.alias("term_key"), F.col("label"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    w = Window.partitionBy("term_key").orderBy(
-        F.col("cnt").desc(), label_priority_expr(F.col("label")).asc(), F.col("label").asc()
+    counts = spans.groupBy(F.expr("lower(term)").alias("term_key"), "label").agg(
+        F.expr("count(1)").alias("cnt")
     )
     winners = (
-        counts.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("term_key", F.col("label").alias("resolved_label"))
+        counts.selectExpr(
+            "*",
+            "row_number() OVER (PARTITION BY term_key ORDER BY cnt DESC, "
+            f"{label_priority_sql('label')} ASC, label ASC) AS rn",
+        )
+        .where("rn = 1")
+        .selectExpr("term_key", "label AS resolved_label")
     )
-    out = spans.withColumn("term_key", term_key).join(
+    out = spans.selectExpr("*", "lower(term) AS term_key").join(
         F.broadcast(winners), "term_key", "left"
     )
     # keep only spans whose dictionary row carries the winning label. The
@@ -86,17 +84,21 @@ def resolve_labels(spans: DataFrame) -> DataFrame:
     # broadcast-join filter — zero shuffle over the span table. BOTH helper
     # columns are dropped: the output contract is exactly the input span
     # columns (triples.py consumes it; the pandas oracle drops both too).
-    return out.filter(F.col("label") == F.col("resolved_label")).drop(
-        "resolved_label", "term_key"
+    return out.where("label = resolved_label").drop("resolved_label", "term_key")
+
+
+def alias_key_sql(term: str) -> str:
+    """SQL text: the normalization key for surface-form clustering of the
+    SQL operand ``term`` — lowercase, drop generic type words, strip
+    non-alphanumerics ("HEK 293" ~ "HEK293" ~ "hek293")."""
+    from otar3088_spark.functions.text import sql_str
+
+    generic = ", ".join(map(sql_str, GENERIC_WORDS))
+    blanks = sql_str(r"\s+")
+    return (
+        f"regexp_replace(concat_ws('', filter(split(lower(trim({term})), {blanks}),"
+        f" t -> NOT t IN ({generic}))), '[^a-z0-9]', '')"
     )
-
-
-def alias_key_expr(term_col) -> Column:
-    """Normalization key for surface-form clustering: lowercase, drop generic
-    type words, strip non-alphanumerics ("HEK 293" ~ "HEK293" ~ "hek293")."""
-    toks = F.split(F.lower(F.trim(term_col)), r"\s+")
-    kept = F.filter(toks, lambda t: ~t.isin(*GENERIC_WORDS))
-    return F.regexp_replace(F.concat_ws("", kept), r"[^a-z0-9]", "")
 
 
 def alias_clusters(ent_akeys: Iterable[tuple]) -> list[tuple]:

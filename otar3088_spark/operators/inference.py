@@ -360,12 +360,12 @@ def link_model_mentions(
     Two-tier candidate generation, broadcast-joined in ONE pass:
 
     * rank 0 — the whole-term LEMMA key: every token of BOTH the mention
-      surface and the dictionary term normalized with norm_key_expr
+      surface and the dictionary term normalized with norm_key_sql
       (override map / value fixpoint / destem / identity — the same
       whole-window lemma semantics as the gazetteer tagger, so a model
       mention "mice models" links dictionary "mouse model" exactly like the
       reference's lemma-keyed term map, labelstudio_e2e.py:193-197).
-    * rank 1 — the ALIAS key (canonicalize.alias_key_expr: drop generic type
+    * rank 1 — the ALIAS key (canonicalize.alias_key_sql: drop generic type
       words, strip non-alphanumerics). This is what makes the model branch
       additive: a transformer-detected surface like "HEK-293" or
       "acetylsalicylic-acid" has no token-level gazetteer match (the
@@ -396,12 +396,8 @@ def link_model_mentions(
     """
     from pyspark.sql import functions as F
 
-    from otar3088_spark.functions.text import (
-        norm_key_expr,
-        token_core_expr,
-        token_lead_expr,
-    )
-    from otar3088_spark.operators.canonicalize import alias_key_expr
+    from otar3088_spark.functions.text import norm_key_sql, token_core_sql, token_lead_sql
+    from otar3088_spark.operators.canonicalize import alias_key_sql
 
     from otar3088_spark.operators.tagging import PreparedDictionary, as_prepared
 
@@ -409,127 +405,74 @@ def link_model_mentions(
         lemma_overrides = as_prepared(dictionary, lemma_overrides).lemma_overrides
         dictionary = dictionary.prepared
     ov = dict(lemma_overrides or {})
-    toks = F.split(F.col("surface"), " ")
-    cores = F.transform(toks, token_core_expr)
-    leads = F.transform(toks, token_lead_expr)
-    keys = F.transform(cores, F.lower)
-    key_nm = F.concat_ws(
-        " ", F.transform(keys, lambda k: norm_key_expr(k, ov))
+    # every expression below is SQL text: one py4j round trip each, where
+    # the Column API costs one per call; the trees are the same
+    toks = "split(surface, ' ')"
+    cores = f"transform({toks}, x -> {token_core_sql('x')})"
+    leads = f"transform({toks}, x -> {token_lead_sql('x')})"
+    key_nm = (
+        f"concat_ws(' ', transform(transform({cores}, x -> lower(x)),"
+        f" k -> {norm_key_sql('k', ov)}))"
     )
-    lead1 = F.element_at(leads, 1)
+    lead1 = f"element_at({leads}, 1)"
     trail = (
-        F.length(F.element_at(toks, -1))
-        - F.element_at(leads, -1)
-        - F.length(F.element_at(cores, -1))
+        f"length(element_at({toks}, -1)) - element_at({leads}, -1)"
+        f" - length(element_at({cores}, -1))"
     )
     # alias key of the surface: non-alphanumerics become token boundaries
     # first ("HEK-293" -> "hek 293" -> alias "hek293"), then the shared
     # alias normalization
-    surf_akey = alias_key_expr(F.regexp_replace(F.col("surface"), "[^A-Za-z0-9]+", " "))
-    m = model_spans.select(
-        "conv_id", "turn_idx", "sent_idx",
-        key_nm.alias("key_nm"),
-        surf_akey.alias("akey"),
-        (F.col("start") + lead1).cast("int").alias("start"),
-        (F.col("end") - trail).cast("int").alias("end"),
-        F.col("surface").alias("_surface_raw"),
-        lead1.cast("int").alias("_lead1"),
-    ).withColumn(
-        "surface",
-        F.expr("substring(_surface_raw, _lead1 + 1, end - start)"),
-    ).drop("_surface_raw", "_lead1")
+    surf_akey = alias_key_sql("regexp_replace(surface, '[^A-Za-z0-9]+', ' ')")
+    m = (
+        model_spans.selectExpr(
+            "conv_id", "turn_idx", "sent_idx",
+            f"{key_nm} AS key_nm",
+            f"{surf_akey} AS akey",
+            f"CAST(start + {lead1} AS INT) AS start",
+            f"CAST(end - ({trail}) AS INT) AS end",
+            "surface AS _surface_raw",
+            f"CAST({lead1} AS INT) AS _lead1",
+        )
+        .selectExpr("*", "substring(_surface_raw, _lead1 + 1, end - start) AS surface")
+        .drop("_surface_raw", "_lead1")
+    )
 
     # mention side: explode to (match_key, rank) candidate rows; empty alias
     # keys are filtered out
-    mk = F.explode(
-        F.array_distinct(
-            F.filter(
-                F.array(
-                    F.struct(F.col("key_nm").alias("k"), F.lit(0).alias("rank")),
-                    F.struct(
-                        F.when(F.length("akey") > 0, F.col("akey")).alias("k"),
-                        F.lit(1).alias("rank"),
-                    ),
-                ),
-                lambda s: s["k"].isNotNull(),
-            )
-        )
-    )
-    m_keyed = m.select(
+    m_keyed = m.selectExpr(
         "conv_id", "turn_idx", "sent_idx", "start", "end", "surface",
-        mk.alias("mk"),
-    ).select(
+        "explode(array_distinct(filter(array(struct(key_nm AS k, 0 AS rank),"
+        " struct(CASE WHEN length(akey) > 0 THEN akey END AS k, 1 AS rank)),"
+        " s -> s.k IS NOT NULL))) AS mk",
+    ).selectExpr(
         "conv_id", "turn_idx", "sent_idx", "start", "end", "surface",
-        F.col("mk")["k"].alias("match_key"),
-        F.col("mk")["rank"].alias("rank"),
+        "mk.k AS match_key",
+        "mk.rank AS rank",
     )
 
-    dk = F.explode(
-        F.array_distinct(
-            F.filter(
-                F.array(
-                    F.struct(
-                        F.concat_ws(
-                            " ",
-                            F.transform(
-                                F.col("term_tokens"),
-                                lambda t: norm_key_expr(t, ov),
-                            ),
-                        ).alias("k"),
-                        F.lit(0).alias("rank"),
-                    ),
-                    # SYMMETRIC with the mention side: punctuation becomes
-                    # token boundaries BEFORE alias normalization, so a
-                    # punctuation-joined generic word is dropped on both
-                    # sides alike (dict "T-cell" -> "t cell" -> alias "t",
-                    # matching mention "T cell"/"T-cell"; without the
-                    # pre-split the dict key stayed "tcell" and the alias
-                    # tier could never link such terms)
-                    F.struct(
-                        F.when(
-                            F.length(
-                                alias_key_expr(
-                                    F.regexp_replace(F.col("term"), "[^A-Za-z0-9]+", " ")
-                                )
-                            )
-                            > 0,
-                            alias_key_expr(
-                                F.regexp_replace(F.col("term"), "[^A-Za-z0-9]+", " ")
-                            ),
-                        ).alias("k"),
-                        F.lit(1).alias("rank"),
-                    ),
-                ),
-                lambda s: s["k"].isNotNull(),
-            )
-        )
+    # SYMMETRIC with the mention side: punctuation becomes token boundaries
+    # BEFORE alias normalization, so a punctuation-joined generic word is
+    # dropped on both sides alike (dict "T-cell" -> "t cell" -> alias "t",
+    # matching mention "T cell"/"T-cell"; without the pre-split the dict
+    # key stayed "tcell" and the alias tier could never link such terms)
+    dict_akey = alias_key_sql("regexp_replace(term, '[^A-Za-z0-9]+', ' ')")
+    dk = (
+        "explode(array_distinct(filter(array("
+        f"struct(concat_ws(' ', transform(term_tokens, t -> {norm_key_sql('t', ov)})) AS k,"
+        f" 0 AS rank), struct(CASE WHEN length({dict_akey}) > 0 THEN {dict_akey} END AS k,"
+        " 1 AS rank)), s -> s.k IS NOT NULL)))"
     )
     d = F.broadcast(
-        dictionary.select("term", "label", "ent_id", dk.alias("dk")).select(
-            F.col("dk")["k"].alias("dict_key"),
-            F.col("dk")["rank"].alias("dict_rank"),
-            "term", "label", "ent_id",
+        dictionary.selectExpr("term", "label", "ent_id", f"{dk} AS dk").selectExpr(
+            "dk.k AS dict_key", "dk.rank AS dict_rank", "term", "label", "ent_id"
         )
     )
-    linked = m_keyed.join(
-        d,
-        (F.col("match_key") == F.col("dict_key"))
-        & (F.col("rank") == F.col("dict_rank")),
-        "inner",
-    )
+    linked = m_keyed.join(d, F.expr("match_key = dict_key AND rank = dict_rank"), "inner")
     key5 = ["conv_id", "turn_idx", "sent_idx", "start", "end"]
     return (
         linked.groupBy(*key5, "label")
-        .agg(
-            F.min(F.struct("rank", "ent_id", "term", "surface")).alias("m"),
-        )
-        .select(
-            *key5,
-            F.col("m")["term"].alias("term"),
-            "label",
-            F.col("m")["ent_id"].alias("ent_id"),
-            F.col("m")["surface"].alias("surface"),
-        )
+        .agg(F.expr("min(struct(rank, ent_id, term, surface))").alias("m"))
+        .selectExpr(*key5, "m.term AS term", "label", "m.ent_id AS ent_id", "m.surface AS surface")
     )
 
 
@@ -546,26 +489,17 @@ def merge_spans_with_model(dict_spans: DataFrame, linked_model: DataFrame) -> Da
 
     cols = ["conv_id", "turn_idx", "sent_idx", "start", "end",
             "term", "label", "ent_id", "surface"]
-    u = dict_spans.select(*cols).withColumn("_src", F.lit(0)).unionByName(
-        linked_model.select(*cols).withColumn("_src", F.lit(1))
+    key5 = cols[:5]
+    u = dict_spans.selectExpr(*cols, "0 AS _src").unionByName(
+        linked_model.selectExpr(*cols, "1 AS _src")
     )
-    g = u.groupBy("conv_id", "turn_idx", "sent_idx", "start", "end").agg(
-        F.collect_list(F.struct("term", "label", "ent_id", "surface", "_src")).alias("arr")
+    g = u.groupBy(*key5).agg(
+        F.expr("collect_list(struct(term, label, ent_id, surface, _src))").alias("arr")
     )
-    has_dict = F.exists("arr", lambda a: a["_src"] == 0)
-    kept = F.when(has_dict, F.filter("arr", lambda a: a["_src"] == 0)).otherwise(
-        F.col("arr")
+    kept = (
+        "CASE WHEN exists(arr, a -> a._src = 0) THEN filter(arr, a -> a._src = 0)"
+        " ELSE arr END"
     )
-    return (
-        g.select(
-            "conv_id", "turn_idx", "sent_idx", "start", "end",
-            F.explode(F.array_distinct(kept)).alias("s"),
-        )
-        .select(
-            "conv_id", "turn_idx", "sent_idx", "start", "end",
-            F.col("s")["term"].alias("term"),
-            F.col("s")["label"].alias("label"),
-            F.col("s")["ent_id"].alias("ent_id"),
-            F.col("s")["surface"].alias("surface"),
-        )
+    return g.selectExpr(*key5, f"explode(array_distinct({kept})) AS s").selectExpr(
+        *key5, "s.term AS term", "s.label AS label", "s.ent_id AS ent_id", "s.surface AS surface"
     )

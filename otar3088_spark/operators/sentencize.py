@@ -21,8 +21,8 @@ from pyspark.sql import functions as F
 from otar3088_spark.functions.text import (
     clean_text_expr,
     is_header_expr,
-    offsets_expr,
-    sentence_split_expr,
+    offsets_sql,
+    sentence_split_sql,
 )
 
 
@@ -76,13 +76,13 @@ def sentencize(normalized: DataFrame) -> DataFrame:
     lookbehind split, offsets from the per-row aggregate scan (F9 analogue,
     zero Python; reference ran spaCy per doc in a Pool, split2sent_par.py:303).
     """
-    parts = sentence_split_expr(F.col("clean_text"))
-    df = normalized.select(
+    parts = sentence_split_sql("clean_text")
+    df = normalized.selectExpr(
         "conv_id",
         "turn_idx",
         "role",
-        F.col("clean_text"),
-        F.posexplode(F.arrays_zip(parts, offsets_expr(parts))).alias("sent_idx", "z"),
+        "clean_text",
+        f"posexplode(arrays_zip({parts}, {offsets_sql(parts)})) AS (sent_idx, z)",
     )
     return df.select(
         "conv_id",

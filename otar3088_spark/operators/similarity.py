@@ -254,7 +254,6 @@ def ann_lsh_topk(
     k: int = 5,
     bits: int = 6,
     num_tables: int = 16,
-    multiprobe: bool = True,
     seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -271,10 +270,10 @@ def ann_lsh_topk(
     persisting an ad-hoc index would leak cached partitions across calls
     (never unpersisted from inside a lazy plan). Persist/write the index
     yourself when serving multiple query batches.
-    ``num_tables`` independent hyperplane sets union their candidate sets;
-    ``multiprobe`` additionally probes all Hamming-1 neighbor buckets per
-    table. Candidate volume ~ num_tables × (|corpus| / 2^bits) × (1 + bits
-    if multiprobe) per probe — size ``bits`` to the corpus so this stays a
+    ``num_tables`` independent hyperplane sets union their candidate sets,
+    and each probe also visits every Hamming-1 neighbor bucket of its own
+    (multiprobe). Candidate volume ~ num_tables × (|corpus| / 2^bits) ×
+    (1 + bits) per probe — size ``bits`` to the corpus so this stays a
     small fraction of |corpus|. Returns (q_id, vec_id, cos, rnk);
     approximate — rnk within candidates.
     """
@@ -293,14 +292,13 @@ def ann_lsh_topk(
         _norm(F.col(vec_col)).alias("q_norm"),
         F.posexplode(q_sigs).alias("tbl", "sig"),
     )
-    if multiprobe:
-        flips = F.array(*[F.lit(0)] + [F.lit(1 << b) for b in range(bits)])
-        p = p.select(
-            "q_id", "q_emb", "q_norm", "tbl",
-            F.explode(
-                F.transform(flips, lambda m: F.col("sig").bitwiseXOR(m.cast("int")))
-            ).alias("sig"),
-        )
+    flips = F.array(*[F.lit(0)] + [F.lit(1 << b) for b in range(bits)])
+    p = p.select(
+        "q_id", "q_emb", "q_norm", "tbl",
+        F.explode(
+            F.transform(flips, lambda m: F.col("sig").bitwiseXOR(m.cast("int")))
+        ).alias("sig"),
+    )
     cand = c.join(F.broadcast(p), ["tbl", "sig"]).filter(F.col("vec_id") != F.col("q_id"))
     # dedup BEFORE scoring: multi-table + Hamming-1 multiprobe surfaces the
     # same (q, vec) pair through many buckets (~2-3x duplication), and every

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from otar3088_spark.functions.text import let_expr, offsets_expr
+from otar3088_spark.functions.text import let_expr, offsets_sql
 
 
 def assign_spans_to_sentences(doc_spans: DataFrame, sentences: DataFrame) -> DataFrame:
@@ -67,9 +67,9 @@ def spans_to_iob(sentences: DataFrame, spans: DataFrame) -> DataFrame:
     sp_g = spans.groupBy(*key3).agg(
         F.collect_list(F.struct("start", "end", "label")).alias("sp")
     )
-    toks = F.split(F.col("sent_text"), " ")
-    tok = sentences.select(
-        *key3, toks.alias("toks"), offsets_expr(toks).alias("starts")
+    toks = "split(sent_text, ' ')"
+    tok = sentences.selectExpr(
+        *key3, f"{toks} AS toks", f"{offsets_sql(toks)} AS starts"
     )
     j = tok.join(sp_g, key3, "left").withColumn(
         "sp", F.coalesce(F.col("sp"), F.array().cast("array<struct<start:int,end:int,label:string>>"))
@@ -92,26 +92,19 @@ def grouped_spans_to_iob(tagged: DataFrame) -> DataFrame:
     ``test_grouped_iob_fusion_matches_unfused``).
     """
     key3 = ["conv_id", "turn_idx", "sent_idx"]
-    toks = F.split(F.col("sent_text"), " ")
-    j = tagged.select(
+    toks = "split(sent_text, ' ')"
+    j = tagged.selectExpr(
         *key3,
-        toks.alias("toks"),
-        offsets_expr(toks).alias("starts"),
-        F.transform(
-            "spans",
-            lambda s: F.struct(
-                s["start"].alias("start"),
-                s["end"].alias("end"),
-                s["label"].alias("label"),
-            ),
-        ).alias("sp"),
+        f"{toks} AS toks",
+        f"{offsets_sql(toks)} AS starts",
+        "transform(spans, s -> struct(s.start AS start, s.end AS end, s.label AS label)) AS sp",
     )
     return _iob_from_joined(j)
 
 
 def _iob_from_joined(j: DataFrame) -> DataFrame:
     """Shared tag computation over rows ``(key3, toks, starts, sp)``."""
-    from otar3088_spark.functions.text import token_core_expr, token_lead_expr
+    from otar3088_spark.functions.text import token_core_sql, token_lead_sql
 
     key3 = ["conv_id", "turn_idx", "sent_idx"]
     # per-token tag computed array-side: coverage is checked against the
@@ -151,8 +144,8 @@ def _iob_from_joined(j: DataFrame) -> DataFrame:
     # is the only hoist the optimizer cannot undo (functions/text.py let_expr).
     toks_c, starts_c, sp_c = F.col("toks"), F.col("starts"), F.col("sp")
     seqn = F.sequence(F.lit(1), F.size(toks_c))
-    cl_arr = F.transform(toks_c, lambda t: F.length(token_core_expr(t)))
-    ld_arr = F.transform(toks_c, token_lead_expr)
+    cl_arr = F.expr(f"transform(toks, t -> length({token_core_sql('t')}))")
+    ld_arr = F.expr(f"transform(toks, t -> {token_lead_sql('t')})")
 
     def chosen_extents(cl, ld):
         cs = F.transform(

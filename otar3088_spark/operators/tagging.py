@@ -46,15 +46,16 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from otar3088_spark.functions.text import (
+    sql_str,
     sql_str_array,
-    destem_expr,
+    destem_sql,
     let_expr,
-    norm_key_expr,
-    offsets_expr,
-    token_core_expr,
-    token_lead_expr,
+    norm_key_sql,
+    offsets_sql,
+    token_core_sql,
+    token_lead_sql,
 )
-from otar3088_spark.operators.canonicalize import alias_clusters, alias_key_expr
+from otar3088_spark.operators.canonicalize import alias_clusters, alias_key_sql
 
 # P7 red-list: Anatomy terms with these suffixes are dictionary noise
 # (cellfinder_clean.ipynb cell 8).
@@ -67,6 +68,8 @@ MAX_PREFILTER_TERMS = 50_000
 # Auto anchor mode: a first-position surface form anchoring more than this
 # many n>=2 terms is an oversized group and switches to pair keys.
 BIGRAM_ANCHOR_THRESHOLD = 64
+# the span struct's fields, in output column order
+_SPAN_FIELDS = ("start", "end", "term", "label", "ent_id", "surface")
 
 
 def prepare_dictionary(dict_df: DataFrame) -> DataFrame:
@@ -81,15 +84,15 @@ def prepare_dictionary(dict_df: DataFrame) -> DataFrame:
     A lazy plan: no Spark job runs here. ``PreparedDictionary.build`` turns
     it into the value the tagging, linking and clustering layers share.
     """
-    d = dict_df.filter(F.length("term") > 2).filter(
-        ~((F.col("label") == "Anatomy") & F.lower(F.col("term")).rlike(REDLIST_SUFFIX))
-    )
-    d = d.withColumn("term_tokens", F.split(F.lower(F.trim(F.col("term"))), r"\s+"))
+    blanks = sql_str(r"\s+")
     return (
-        d.withColumn("n", F.size("term_tokens").cast("int"))
-        .withColumn("first_tok", F.element_at("term_tokens", 1))
+        dict_df.where("length(term) > 2")
+        .where(f"NOT (label = 'Anatomy' AND lower(term) RLIKE {sql_str(REDLIST_SUFFIX)})")
+        .selectExpr("*", f"split(lower(trim(term)), {blanks}) AS term_tokens")
+        .selectExpr("*", "CAST(size(term_tokens) AS INT) AS n")
+        .selectExpr("*", "element_at(term_tokens, 1) AS first_tok")
         .dropDuplicates(["ent_id", "label", "term_tokens"])
-        .select("ent_id", "label", "term", "term_tokens", "n", "first_tok")
+        .selectExpr("ent_id", "label", "term", "term_tokens", "n", "first_tok")
     )
 
 
@@ -103,7 +106,8 @@ class PreparedDictionary:
     * ``lemma_overrides`` — the override map every dim-side normalization
       below was built with;
     * ``d0`` — the exploded-anchor broadcast dim ``tag_mentions`` joins on
-      (lazy);
+      (lazy), with the validation tail ``_atail`` after the anchor-proven
+      prefix of ``_v0`` tokens;
     * ``anchors`` — the plan-time anchor IN-set, ``None`` above
       ``MAX_PREFILTER_TERMS`` distinct keys;
     * ``pair_mode`` — whether any ``d0`` row keys on a (first, second) pair,
@@ -165,25 +169,25 @@ class PreparedDictionary:
         # broadcast dim removes both costs: the hot path is one lower(core)
         # expression per token, and validation is array_contains on tiny
         # arrays.
-        normed = prepared.withColumn(
-            "nd_tokens", F.transform(F.col("term_tokens"), lambda t: norm_key_expr(t, ov))
+        normed = prepared.selectExpr(
+            "*", f"transform(term_tokens, t -> {norm_key_sql('t', ov)}) AS nd_tokens"
         )
-        allowed = F.transform(F.col("nd_tokens"), lambda t: _allowed_forms_expr(t, ov))
+        allowed = f"transform(nd_tokens, t -> {_allowed_forms_sql('t', ov)})"
 
         # --- the single pass -------------------------------------------------
         # Collected at the PREPARED grain, not the (ent_id, label, nd_tokens)
         # grain of d_norm: two terms of one group can carry different alias
         # keys ("mice model" / "mouse model"), and the clusters need both.
-        # Normalization stays in Spark (no Python twin of norm_key_expr or
-        # alias_key_expr); Arrow keeps the transfer columnar.
-        tbl = normed.select(
+        # Normalization stays in Spark (no Python twin of norm_key_sql or
+        # alias_key_sql); Arrow keeps the transfer columnar.
+        tbl = normed.selectExpr(
             "ent_id",
             "label",
             "term",
             "term_tokens",
             "nd_tokens",
-            allowed.alias("allowed"),
-            alias_key_expr(F.col("term")).alias("akey"),
+            f"{allowed} AS allowed",
+            f"{alias_key_sql('term')} AS akey",
         ).toArrow()
         ent_ids = tbl.column("ent_id").to_pylist()
         # order-insensitive digest of the prepared grain (ent_id, label, term,
@@ -223,9 +227,9 @@ class PreparedDictionary:
         # group take pair keys; everything else stays unigram.
         d_norm = (
             normed.groupBy("ent_id", "label", "nd_tokens")
-            .agg(F.min("term").alias("term"))
-            .withColumn("n", F.size("nd_tokens").cast("int"))
-            .withColumn("allowed", allowed)
+            .agg(F.expr("min(term)").alias("term"))
+            .selectExpr("*", "CAST(size(nd_tokens) AS INT) AS n")
+            .selectExpr("*", f"{allowed} AS allowed")
         )
         pair_with = lambda f1: F.transform(  # noqa: E731
             F.element_at(F.col("allowed"), 2), lambda f2: F.concat(f1, F.lit(" "), f2)
@@ -249,7 +253,20 @@ class PreparedDictionary:
                 .drop("f1", "_keys")
             )
         else:
-            d0 = d_norm.withColumn("first_tok", F.explode(F.element_at("allowed", 1)))
+            d0 = d_norm.selectExpr("*", "explode(element_at(allowed, 1)) AS first_tok")
+        # Anchored-prefix elision (dim-side, free): the anchor equi-join
+        # already PROVES the window's first position matches — the anchor
+        # key IS the token key at pos0 and the dim row's first_tok was
+        # exploded from allowed[1] (pair keys, which contain the one space
+        # corpus keys never can, prove positions 1-2). So validation only
+        # needs the allowed forms AFTER the anchored prefix (``_atail``):
+        # n==1 candidates (the bulk of reference gazetteers) validate
+        # tautologically with an empty tail, and the grouped-candidate
+        # shuffle ships no allowed-forms payload for them.
+        d0 = F.broadcast(
+            d0.selectExpr("*", "CASE WHEN contains(first_tok, ' ') THEN 2 ELSE 1 END AS _v0")
+            .selectExpr("*", "slice(allowed, _v0 + 1, greatest(n - _v0, 0)) AS _atail")
+        )
 
         # --- plan-time anchor IN-set ------------------------------------------
         # The distinct first_tok values of d0, derived from the collected rows
@@ -314,11 +331,11 @@ def as_prepared(
     return dictionary
 
 
-def _allowed_forms_expr(t, ov: dict[str, str]):
-    """Finite norm-PREIMAGE of a normalized dictionary token ``t``: the array
-    of corpus surface forms k with ``norm(k) == t`` (norm = override map /
-    override-value fixpoint / destem / identity — functions/text.py
-    norm_key_expr). Exactly:
+def _allowed_forms_sql(t: str, ov: dict[str, str]) -> str:
+    """SQL text: the finite norm-PREIMAGE of a normalized dictionary token
+    ``t`` (a SQL operand): the array of corpus surface forms k with
+    ``norm(k) == t`` (norm = override map / override-value fixpoint /
+    destem / identity — functions/text.py norm_key_sql). Exactly:
 
     * ``t`` itself, iff norm(t) == t (t is an override value, or destems to
       NULL and is not an override key);
@@ -333,52 +350,53 @@ def _allowed_forms_expr(t, ov: dict[str, str]):
     # for t = "farmers'" the form "farmers's" ends in 's and destems to
     # "farmers" != t, so admitting it would tag a surface the norm_key
     # comparison rejects (exact-preimage duality, test_properties.py).
-    no_apos = ~t.endswith("'")
+    apos, apos_s = sql_str("'"), sql_str("'s")
+    no_apos = f"NOT endswith({t}, {apos})"
+    ts, tps = f"concat({t}, 's')", f"concat({t}, {apos_s})"
     if not ov:
-        self_ok = destem_expr(t).isNull()
-        s_ok = (F.length(t) >= 3) & no_apos
-        p_ok = F.lit(True)
+        self_ok = f"({destem_sql(t)}) IS NULL"
+        s_ok = f"length({t}) >= 3 AND {no_apos}"
+        p_ok = "true"
     else:
         # ONE shared status-map literal (key -> 1, value -> 2) instead of
         # four membership lists, and every literal collection is a single
-        # JVM-parsed F.expr string (sql_str_array) — the Column-API routes
-        # cost one py4j round-trip per element, ~2s of driver time per query
-        # at ~150 entries (plan-construction cost, not compute)
+        # JVM-parsed string (sql_str_array) — the Column-API routes cost
+        # one py4j round-trip per element, ~2s of driver time per query at
+        # ~150 entries (plan-construction cost, not compute)
         status_d = {v: 2 for v in ov.values()}
         status_d.update({k: 1 for k in ov})  # a key-and-value string is a key
         toks = sorted(status_d)
-        status = F.expr(
+        status = (
             f"map_from_arrays({sql_str_array(toks)}, "
             f"array({', '.join(str(status_d[x]) for x in toks)}))"
         )
-        self_ok = (F.try_element_at(status, t) == 2) | (
-            destem_expr(t).isNull() & F.try_element_at(status, t).isNull()
+        self_ok = (
+            f"try_element_at({status}, {t}) = 2 OR "
+            f"(({destem_sql(t)}) IS NULL AND try_element_at({status}, {t}) IS NULL)"
         )
         s_ok = (
-            (F.length(t) >= 3)
-            & no_apos
-            & F.try_element_at(status, F.concat(t, F.lit("s"))).isNull()
+            f"(length({t}) >= 3 AND {no_apos}) AND "
+            f"try_element_at({status}, {ts}) IS NULL"
         )
-        p_ok = F.try_element_at(status, F.concat(t, F.lit("'s"))).isNull()
-    forms = F.array(
-        F.when(self_ok, t),
-        F.when(s_ok, F.concat(t, F.lit("s"))),
-        F.when(p_ok, F.concat(t, F.lit("'s"))),
+        p_ok = f"try_element_at({status}, {tps}) IS NULL"
+    forms = (
+        f"array(CASE WHEN {self_ok} THEN {t} END, CASE WHEN {s_ok} THEN {ts} END,"
+        f" CASE WHEN {p_ok} THEN {tps} END)"
     )
     inv: dict[str, list[str]] = {}
     for k, v in ov.items():
         inv.setdefault(v, []).append(k)
     if inv:
-        invmap = F.expr(
+        invmap = (
             "map_from_arrays("
             f"{sql_str_array(sorted(inv))}, "
             f"array({', '.join(sql_str_array(sorted(inv[v])) for v in sorted(inv))}))"
         )
-        forms = F.concat(
-            forms,
-            F.coalesce(F.try_element_at(invmap, t), F.array().cast("array<string>")),
+        forms = (
+            f"concat({forms}, coalesce(try_element_at({invmap}, {t}),"
+            " CAST(array() AS ARRAY<STRING>)))"
         )
-    return F.array_distinct(F.filter(forms, lambda x: x.isNotNull()))
+    return f"array_distinct(filter({forms}, x -> x IS NOT NULL))"
 
 
 def tag_mentions(
@@ -404,7 +422,7 @@ def tag_mentions(
     ``window_lemmas == lemma_tokens`` position-by-position): a window matches
     a term iff ``norm(window_key_i) == norm(dict_token_i)`` at EVERY
     position, with ``norm`` = irregular-override / override-value fixpoint /
-    rule destem / identity (functions/text.py norm_key_expr). So "mice
+    rule destem / identity (functions/text.py norm_key_sql). So "mice
     models" matches dictionary "mouse model" — inflection on non-head tokens
     links exactly as in the reference.
 
@@ -482,7 +500,7 @@ def _tag_with_dim(
     grouped_output: bool = False,
 ) -> DataFrame:
     """Corpus side of tag_mentions: anchor detection, window validation and
-    containment dedup against the value's exploded-anchor dim ``d0`` and
+    containment dedup against the value's broadcast anchor dim ``d0`` and
     plan-time anchor IN-set."""
     d0, firsts, bigram_anchor = pdict.d0, pdict.anchors, pdict.pair_mode
     # --- stage 1: anchor detection (allocation-lean) ------------------------
@@ -493,9 +511,11 @@ def _tag_with_dim(
     # the dim's exploded allowed-form rows), and filter to anchor hits before
     # anything heavier exists.
     key3 = ["conv_id", "turn_idx", "sent_idx"]
-    uni_keyed = sentences.select(
-        *key3, F.posexplode(F.split(F.col("sent_text"), " ")).alias("pos0", "tok")
-    ).select(*key3, "pos0", F.lower(token_core_expr(F.col("tok"))).alias("key"))
+    uni_keyed = sentences.selectExpr(
+        *key3, "posexplode(split(sent_text, ' ')) AS (pos0, tok)"
+    ).selectExpr(*key3, "pos0", f"lower({token_core_sql('tok')}) AS key")
+    # the same keys as one array per sentence (pair-anchor branches)
+    sent_keys = f"transform(split(sent_text, ' '), t -> lower({token_core_sql('t')}))"
     heads = (
         sorted({p.split(" ", 1)[0] for p in firsts if " " in p})
         if (bigram_anchor and firsts is not None)
@@ -514,10 +534,7 @@ def _tag_with_dim(
         # unigram queries). The keys array is bound as a lambda variable so
         # the next-token lookup does not re-derive it per element.
         pair_structs = let_expr(
-            F.transform(
-                F.split(F.col("sent_text"), " "),
-                lambda t: F.lower(token_core_expr(t)),
-            ),
+            F.expr(sent_keys),
             lambda ks: F.filter(
                 F.transform(
                     ks,
@@ -543,11 +560,7 @@ def _tag_with_dim(
         # no plan-time IN-set (dictionary above the prefilter cap): emit the
         # unigram AND pair key for every position — the broadcast hash join
         # prunes non-anchors one stage later
-        keys_arr = F.transform(
-            F.split(F.col("sent_text"), " "),
-            lambda t: F.lower(token_core_expr(t)),
-        )
-        sent2 = sentences.select(*key3, keys_arr.alias("_keys"))
+        sent2 = sentences.selectExpr(*key3, f"{sent_keys} AS _keys")
         nxt = lambda i: F.try_element_at(F.col("_keys"), i + 2)  # noqa: E731
         cand_keys = F.filter(
             F.flatten(
@@ -575,27 +588,11 @@ def _tag_with_dim(
         # unigram plan (no dim row keys on a pair, so no pair key can match)
         keyed = uni_keyed
     if firsts is not None:
-        keyed = keyed.filter(F.col("key").isin(firsts))
-    anchors = keyed.select(*key3, "pos0", F.col("key").alias("anchor_key"))
-
-    # Anchored-prefix elision (dim-side, free): the anchor equi-join already
-    # PROVES the window's first position matches — the anchor key IS the
-    # token key at pos0 and the dim row's first_tok was exploded from
-    # allowed[1] (pair keys, which contain the one space corpus keys never
-    # can, prove positions 1-2). So validation only needs the allowed forms
-    # AFTER the anchored prefix: n==1 candidates (the bulk of reference
-    # gazetteers) validate tautologically with an empty tail, and the
-    # grouped-candidate shuffle ships no allowed-forms payload for them.
-    v0 = F.when(F.col("first_tok").contains(" "), F.lit(2)).otherwise(F.lit(1))
-    d = F.broadcast(
-        d0.withColumn("_v0", v0).withColumn(
-            "_atail",
-            F.slice(
-                F.col("allowed"), F.col("_v0") + 1, F.greatest(F.col("n") - F.col("_v0"), F.lit(0))
-            ),
-        )
-    )
-    cand = anchors.join(d, anchors["anchor_key"] == d["first_tok"], "inner")
+        # an empty IN-set (no dictionary row survived prepare_dictionary) is
+        # no SQL: `key IN ()` does not parse
+        keyed = keyed.where(f"key IN ({', '.join(map(sql_str, firsts))})" if firsts else "false")
+    anchors = keyed.selectExpr(*key3, "pos0", "key AS anchor_key")
+    cand = anchors.join(d0, F.expr("anchor_key = first_tok"), "inner")
 
     # TWO stage-2 formulations with opposite scaling (round-5 stress +
     # round-7 re-measurement, BENCH/TAGGING_STRESS.md):
@@ -614,58 +611,48 @@ def _tag_with_dim(
     #   per-candidate copies of the sentence arrays and one shuffle:
     #   9.3s -> ~4s.
     if not precompute_offsets:
-        sent_proj = sentences.select(*key3, "sent_text")
-        withs = cand.join(sent_proj, key3, "inner")
-
-        n, pos0 = F.col("n"), F.col("pos0")
-        toks2 = F.split(F.col("sent_text"), " ")
-        window = F.slice(toks2, pos0 + 1, n)
-        in_bounds = n <= (F.size(toks2) - pos0)
-        # anchored-prefix elision (see _atail above): validate only the
-        # allowed forms AFTER the anchor-proven prefix — n==1 candidates
-        # validate on in_bounds alone (forall over an empty tail is TRUE)
-        wtail = F.slice(
-            toks2, pos0 + F.col("_v0") + 1, F.greatest(n - F.col("_v0"), F.lit(0))
+        # Each expression is one SQL string (one py4j round trip, where the
+        # Column API costs one per call); the trees are the same.
+        withs = cand.join(sentences.selectExpr(*key3, "sent_text"), key3, "inner")
+        toks2 = "split(sent_text, ' ')"
+        # anchored-prefix elision (see _atail in PreparedDictionary.build):
+        # validate only the allowed forms AFTER the anchor-proven prefix —
+        # n==1 candidates validate on the bounds check alone (forall over an
+        # empty tail is TRUE)
+        match = (
+            f"n <= (size({toks2}) - pos0) AND coalesce(forall(zip_with("
+            f"transform(slice({toks2}, pos0 + _v0 + 1, greatest(n - _v0, 0)), "
+            f"t -> lower({token_core_sql('t')})), "
+            "_atail, (w, al) -> array_contains(al, w)), x -> x), false)"
         )
-        wkeys = F.transform(wtail, lambda t: F.lower(token_core_expr(t)))
-        all_ok = F.forall(
-            F.zip_with(wkeys, F.col("_atail"), lambda w, al: F.array_contains(al, w)),
-            lambda x: x,
-        )
-        match = in_bounds & F.coalesce(all_ok, F.lit(False))
-        j = withs.withColumn("_w", window).filter(match)
+        j = withs.selectExpr("*", f"slice({toks2}, pos0 + 1, n) AS _w").where(match)
 
         # offsets: start of token pos0 = sum(len+1) over preceding tokens —
-        # an O(pos) fold over a slice, no offsets array materialized.
-        prefix_len = F.aggregate(
-            F.slice(toks2, 1, pos0), F.lit(0), lambda acc, t: acc + F.length(t) + 1
+        # an O(pos) fold over a slice, no offsets array materialized; the
+        # window's char length is the same fold over its tokens.
+        prefix_len = f"aggregate(slice({toks2}, 1, pos0), 0, (acc, t) -> acc + length(t) + 1)"
+        win_prefix = "aggregate(slice(_w, 1, n - 1), 0, (acc, t) -> acc + length(t) + 1)"
+        lead1 = token_lead_sql("element_at(_w, 1)")
+        last_tok = "try_element_at(_w, n)"
+        end = (
+            f"{prefix_len} + {win_prefix} + {token_lead_sql(last_tok)}"
+            f" + length({token_core_sql(last_tok)})"
         )
-        # char length of the window = joined length of its tokens
-        win_prefix = F.aggregate(
-            F.slice(F.col("_w"), 1, n - 1), F.lit(0), lambda acc, t: acc + F.length(t) + 1
-        )
-        first_tok = F.element_at("_w", 1)
-        last_tok = F.try_element_at(F.col("_w"), n)
-        lead1 = token_lead_expr(first_tok)
-        lead_n = token_lead_expr(last_tok)
-        start = (prefix_len + lead1).cast("int")
-        end = (prefix_len + win_prefix + lead_n + F.length(token_core_expr(last_tok))).cast("int")
         # surface from the joined window tokens (single spaces by clean_text)
-        joined_window = F.concat_ws(" ", F.col("_w"))
-        spans = (
-            j.withColumn("_start", start)
-            .withColumn("_end", end)
-            .withColumn("_joined", joined_window)
-            .withColumn("_lead1", lead1.cast("int"))
-            .select(
-                *key3,
-                F.col("_start").alias("start"),
-                F.col("_end").alias("end"),
-                "term",
-                "label",
-                "ent_id",
-                F.expr("substring(_joined, _lead1 + 1, _end - _start)").alias("surface"),
-            )
+        spans = j.selectExpr(
+            "*",
+            f"CAST({prefix_len} + {lead1} AS INT) AS _start",
+            f"CAST({end} AS INT) AS _end",
+            "concat_ws(' ', _w) AS _joined",
+            f"CAST({lead1} AS INT) AS _lead1",
+        ).selectExpr(
+            *key3,
+            "_start AS start",
+            "_end AS end",
+            "term",
+            "label",
+            "ent_id",
+            "substring(_joined, _lead1 + 1, _end - _start) AS surface",
         )
         # Exact-duplicate dedup happens inside drop_contained (array_distinct
         # on the per-sentence array) — one shuffle covers dedup + containment.
@@ -702,160 +689,110 @@ def _tag_with_dim(
     # array) — withColumn hoists would be re-inlined by CollapseProject into
     # every use site (the round-6 spans.py lesson). Binding chain:
     #   toks   = split(sent_text)              (token array, once/sentence)
-    #   starts = offsets_expr(toks)            (char offsets, once/sentence)
-    #   arr    = validated span structs        (per candidate, when(match))
-    #   dd     = per-(start,end,label) min-ent_id dedup over arr
+    #   starts = offsets_sql(toks)             (char offsets, once/sentence)
+    #   a      = validated span structs        (per candidate, CASE match)
+    #   dd     = per-(start,end,label) min-ent_id dedup over a
     #            (_dedup_homonyms)
     #   kept   = longest-match containment filter over dd (_keep_longest)
     # Offsets are computed per MATCHED sentence only (sentences without
-    # anchors never reach this join).
-    def build_span(c, toks, starts):
-        n, p0 = c["n"], c["pos0"]
+    # anchors never reach this join). The expression is SQL text, so the
+    # span rules (_dedup_homonyms, _keep_longest, token_core_sql,
+    # offsets_sql) have one form, shared with the fold path and
+    # drop_contained; ``c`` is the candidate struct.
+    def let(val: str, var: str, body: str) -> str:
+        # functions/text.py let_expr as SQL text
+        return f"element_at(transform(array({val}), {var} -> {body}), 1)"
 
-        # n == 1 fast path (round 7): single-token candidates — the bulk of
-        # reference gazetteers AND half of this battery's dictionary — are
-        # fully proven by the anchor join (empty validation tail, see _atail
-        # above), and their window/surface algebra collapses: win_prefix is
-        # 0, first and last token coincide, and
-        # substring(tok, lead+1, len(core)) IS token_core_expr(tok). The
-        # generic branch below evaluated two slice allocations, an empty
-        # zip_with/forall chain, concat_ws and duplicate lead/core trims per
-        # candidate — all interpreted HOF work — for a tautology. Field
-        # values are identical by the identities above (pinned by the
-        # tagging oracles + fuzz suite).
-        tok1 = F.element_at(toks, p0 + 1)
-        core1 = token_core_expr(tok1)
-        start1_base = F.coalesce(F.try_element_at(starts, p0 + 1), F.lit(0))
-        start1 = (start1_base + token_lead_expr(tok1)).cast("int")
-        single = F.when(
-            F.lit(1) <= (F.size(toks) - p0),
-            F.struct(
-                start1.alias("start"),
-                (start1 + F.length(core1)).cast("int").alias("end"),
-                c["term"].alias("term"),
-                c["label"].alias("label"),
-                c["ent_id"].alias("ent_id"),
-                core1.alias("surface"),
-            ),
-        )
-
-        window = F.slice(toks, p0 + 1, n)
-        in_bounds = n <= (F.size(toks) - p0)
-        # whole-window lemma equality via preimage membership: each window
-        # key BEYOND the anchored prefix (see _atail above) must be one of
-        # the <=5 allowed surface forms of its position. The tail window is
-        # sliced relative to the anchored prefix; zip_with pads a short
-        # (out-of-bounds) tail with NULL keys -> NULL membership -> forall
-        # not TRUE; the explicit in_bounds conjunct keeps the intent
-        # readable. forall over an empty tail (n == v0) is TRUE — those
-        # candidates are proven by the anchor join alone.
-        wtail = F.slice(toks, p0 + c["_v0"] + 1, F.greatest(n - c["_v0"], F.lit(0)))
-        wkeys = F.transform(wtail, lambda t: F.lower(token_core_expr(t)))
-        all_ok = F.forall(
-            F.zip_with(
-                wkeys, c["_atail"], lambda w, al: F.array_contains(al, w)
-            ),
-            lambda x: x,
-        )
-        match = in_bounds & F.coalesce(all_ok, F.lit(False))
-        # char anchors are lookups into the per-sentence offsets array
-        # (try_element_at: Catalyst may evaluate projections under
-        # reordered/pushed predicates, round-1 lesson)
-        prefix_len = F.coalesce(F.try_element_at(starts, p0 + 1), F.lit(0))
-        win_prefix = F.coalesce(F.try_element_at(starts, p0 + n), F.lit(0)) - prefix_len
-        first_tok = F.element_at(window, 1)
-        last_tok = F.try_element_at(window, n)
-        lead1 = token_lead_expr(first_tok)
-        lead_n = token_lead_expr(last_tok)
-        start = (prefix_len + lead1).cast("int")
-        end = (
-            prefix_len + win_prefix + lead_n + F.length(token_core_expr(last_tok))
-        ).cast("int")
-        joined_window = F.concat_ws(" ", window)
-        # when(...) evaluates only the taken branch per candidate: n == 1
-        # takes the fast path above, n >= 2 the generic window validation
-        return F.when(n == 1, single).otherwise(
-            F.when(
-                match,
-                F.struct(
-                    start.alias("start"),
-                    end.alias("end"),
-                    c["term"].alias("term"),
-                    c["label"].alias("label"),
-                    c["ent_id"].alias("ent_id"),
-                    joined_window.substr(lead1.cast("int") + 1, end - start).alias(
-                        "surface"
-                    ),
-                ),
-            )
-        )
-
-    def valid_arr(toks, starts):
-        return F.array_distinct(
-            F.filter(
-                F.transform(F.col("_cands"), lambda c: build_span(c, toks, starts)),
-                lambda s: s.isNotNull(),
-            )
-        )
-
-    final = let_expr(
-        F.split(F.col("sent_text"), " "),
-        lambda toks: let_expr(
-            offsets_expr(toks),
-            lambda starts: let_expr(
-                valid_arr(toks, starts),
-                lambda a: let_expr(_dedup_homonyms(a), _keep_longest),
-            ),
-        ),
+    # n == 1 fast path (round 7): single-token candidates — the bulk of
+    # reference gazetteers AND half of this battery's dictionary — are fully
+    # proven by the anchor join (empty validation tail, see _atail in
+    # PreparedDictionary.build), and their window/surface algebra collapses:
+    # win_prefix is 0, first and last token coincide, and
+    # substring(tok, lead+1, len(core)) IS token_core_sql(tok). The generic
+    # branch below evaluated two slice allocations, an empty zip_with/forall
+    # chain, concat_ws and duplicate lead/core trims per candidate — all
+    # interpreted HOF work — for a tautology. Field values are identical by
+    # the identities above (pinned by the tagging oracles + fuzz suite).
+    tok1 = "element_at(toks, c.pos0 + 1)"
+    core1 = token_core_sql(tok1)
+    start1 = (
+        f"CAST(coalesce(try_element_at(starts, c.pos0 + 1), 0) + {token_lead_sql(tok1)} AS INT)"
     )
+    single = (
+        f"CASE WHEN 1 <= (size(toks) - c.pos0) THEN struct({start1} AS start,"
+        f" CAST({start1} + length({core1}) AS INT) AS end, c.term AS term,"
+        f" c.label AS label, c.ent_id AS ent_id, {core1} AS surface) END"
+    )
+    # whole-window lemma equality via preimage membership: each window key
+    # BEYOND the anchored prefix (see _atail in PreparedDictionary.build)
+    # must be one of the <=5 allowed surface forms of its position. The tail
+    # window is sliced relative to the anchored prefix; zip_with pads a
+    # short (out-of-bounds) tail with NULL keys -> NULL membership -> forall
+    # not TRUE; the explicit bounds conjunct keeps the intent readable.
+    # forall over an empty tail (n == v0) is TRUE — those candidates are
+    # proven by the anchor join alone.
+    window = "slice(toks, c.pos0 + 1, c.n)"
+    wkeys = (
+        "transform(slice(toks, c.pos0 + c._v0 + 1, greatest(c.n - c._v0, 0)),"
+        f" t -> lower({token_core_sql('t')}))"
+    )
+    match = (
+        f"c.n <= (size(toks) - c.pos0) AND coalesce(forall(zip_with({wkeys}, c._atail,"
+        " (w, al) -> array_contains(al, w)), x -> x), false)"
+    )
+    # char anchors are lookups into the per-sentence offsets array
+    # (try_element_at: Catalyst may evaluate projections under
+    # reordered/pushed predicates, round-1 lesson)
+    prefix_len = "coalesce(try_element_at(starts, c.pos0 + 1), 0)"
+    win_prefix = f"(coalesce(try_element_at(starts, c.pos0 + c.n), 0) - {prefix_len})"
+    last_tok = f"try_element_at({window}, c.n)"
+    lead1 = token_lead_sql(f"element_at({window}, 1)")
+    start = f"CAST({prefix_len} + {lead1} AS INT)"
+    end = (
+        f"CAST({prefix_len} + {win_prefix} + {token_lead_sql(last_tok)}"
+        f" + length({token_core_sql(last_tok)}) AS INT)"
+    )
+    # CASE evaluates only the taken branch per candidate: n == 1 takes the
+    # fast path above, n >= 2 the generic window validation
+    span = (
+        f"CASE WHEN c.n = 1 THEN {single} ELSE CASE WHEN {match} THEN struct({start} AS start,"
+        f" {end} AS end, c.term AS term, c.label AS label, c.ent_id AS ent_id,"
+        f" substr(concat_ws(' ', {window}), CAST({lead1} AS INT) + 1, {end} - {start})"
+        " AS surface) END END"
+    )
+    valid = f"array_distinct(filter(transform(_cands, c -> {span}), s -> s IS NOT NULL))"
+    kept = let(valid, "a", let(_dedup_homonyms("a"), "dd", _keep_longest("dd")))
+    final = let("split(sent_text, ' ')", "toks", let(offsets_sql("toks"), "starts", kept))
     if grouped_output:
         # one row per matched sentence, span structs still in their array —
         # for consumers that would otherwise explode and immediately
         # re-collect_list per sentence (tag_mentions_grouped docstring)
-        return withs.select(*key3, "sent_text", final.alias("spans"))
+        return withs.selectExpr(*key3, "sent_text", f"{final} AS spans")
+    return withs.selectExpr(*key3, f"explode({final}) AS s").selectExpr(
+        *key3, *(f"s.{c} AS {c}" for c in _SPAN_FIELDS)
+    )
+
+
+def _dedup_homonyms(arr: str) -> str:
+    """SQL text: homonym-id dedup of the span-struct array ``arr``: per
+    (start, end, label) keep the min ent_id — array-side, so downstream
+    label resolution needs no span-level aggregate (its winner filter is
+    per-label, so pre-picking the min ent within each label commutes with
+    it). The parser balances an unparenthesized AND chain; the parentheses
+    keep the left-deep tree."""
     return (
-        withs.select(*key3, F.explode(final).alias("s"))
-        .select(
-            *key3,
-            F.col("s")["start"].alias("start"),
-            F.col("s")["end"].alias("end"),
-            F.col("s")["term"].alias("term"),
-            F.col("s")["label"].alias("label"),
-            F.col("s")["ent_id"].alias("ent_id"),
-            F.col("s")["surface"].alias("surface"),
-        )
+        f"filter({arr}, x -> NOT exists({arr}, y -> ((y.start = x.start AND y.end = x.end)"
+        " AND y.label = x.label) AND y.ent_id < x.ent_id))"
     )
 
 
-def _dedup_homonyms(arr):
-    """Homonym-id dedup of a span-struct array: per (start, end, label) keep
-    the min ent_id — array-side, so downstream label resolution needs no
-    span-level aggregate (its winner filter is per-label, so pre-picking
-    the min ent within each label commutes with it)."""
-    return F.filter(
-        arr,
-        lambda x: ~F.exists(
-            arr,
-            lambda y: (y["start"] == x["start"])
-            & (y["end"] == x["end"])
-            & (y["label"] == x["label"])
-            & (y["ent_id"] < x["ent_id"]),
-        ),
-    )
-
-
-def _keep_longest(arr):
-    """Longest-match preference (PhraseMatcher semantics) over a span-struct
-    array: drop spans strictly contained in a longer span of the same
-    sentence."""
-    return F.filter(
-        arr,
-        lambda x: ~F.exists(
-            arr,
-            lambda y: (y["start"] <= x["start"])
-            & (x["end"] <= y["end"])
-            & ((y["end"] - y["start"]) > (x["end"] - x["start"])),
-        ),
+def _keep_longest(arr: str) -> str:
+    """SQL text: longest-match preference (PhraseMatcher semantics) over the
+    span-struct array ``arr``: drop spans strictly contained in a longer
+    span of the same sentence."""
+    return (
+        f"filter({arr}, x -> NOT exists({arr}, y -> (y.start <= x.start AND x.end <= y.end)"
+        " AND y.end - y.start > x.end - x.start))"
     )
 
 
@@ -870,25 +807,14 @@ def drop_contained(spans: DataFrame) -> DataFrame:
     tagging DAG a second time. Spans-per-sentence is bounded (~10), so the
     O(k²) per-row check is constant work.
     """
-    payload = F.struct("start", "end", "term", "label", "ent_id", "surface")
-    g = spans.groupBy("conv_id", "turn_idx", "sent_idx").agg(
-        F.array_distinct(F.collect_list(payload)).alias("arr")
+    key3 = ("conv_id", "turn_idx", "sent_idx")
+    g = spans.groupBy(*key3).agg(
+        F.expr(f"array_distinct(collect_list(struct({', '.join(_SPAN_FIELDS)})))").alias("arr")
     )
     # homonym-id dedup, then the longest-match containment drop. The deduped
     # array is inlined into both sides of the containment filter, not
     # let-bound: this is the KG path's plan shape.
-    kept = _keep_longest(_dedup_homonyms(F.col("arr")))
-    return (
-        g.select("conv_id", "turn_idx", "sent_idx", F.explode(kept).alias("s"))
-        .select(
-            "conv_id",
-            "turn_idx",
-            "sent_idx",
-            F.col("s")["start"].alias("start"),
-            F.col("s")["end"].alias("end"),
-            F.col("s")["term"].alias("term"),
-            F.col("s")["label"].alias("label"),
-            F.col("s")["ent_id"].alias("ent_id"),
-            F.col("s")["surface"].alias("surface"),
-        )
+    kept = _keep_longest(_dedup_homonyms("arr"))
+    return g.selectExpr(*key3, f"explode({kept}) AS s").selectExpr(
+        *key3, *(f"s.{c} AS {c}" for c in _SPAN_FIELDS)
     )

@@ -48,44 +48,42 @@ def mention_triples(spans: DataFrame, clusters: DataFrame) -> DataFrame:
     once and lets the final dedup be the only shuffle.
     """
     s = spans.join(F.broadcast(clusters), "ent_id", "left").withColumn(
-        "cluster_id", F.coalesce(F.col("cluster_id"), F.col("ent_id"))
+        "cluster_id", F.expr("coalesce(cluster_id, ent_id)")
     )
-    locator = F.concat_ws(":", F.col("conv_id"), F.col("turn_idx").cast("string"))
+    # the fan-out is ONE SQL expression (one py4j round trip to build)
 
     def trip(subj, pred, obj):
-        return F.struct(
-            subj.cast("string").alias("subj"),
-            F.lit(pred).alias("pred"),
-            obj.cast("string").alias("obj"),
+        return (
+            f"struct(CAST({subj} AS STRING) AS subj, '{pred}' AS pred,"
+            f" CAST({obj} AS STRING) AS obj)"
         )
 
-    fan = F.array(
-        trip(F.col("ent_id"), "is_a", F.col("label")),
-        trip(locator, "mentions", F.col("cluster_id")),
-        trip(F.lower(F.col("surface")), "linked_to", F.col("ent_id")),
-        F.when(
-            F.col("ent_id") != F.col("cluster_id"),
-            trip(F.col("ent_id"), "same_as", F.col("cluster_id")),
-        ),
+    locator = "concat_ws(':', conv_id, CAST(turn_idx AS STRING))"
+    fan = (
+        "array("
+        f"{trip('ent_id', 'is_a', 'label')}, "
+        f"{trip(locator, 'mentions', 'cluster_id')}, "
+        f"{trip('lower(surface)', 'linked_to', 'ent_id')}, "
+        f"CASE WHEN ent_id != cluster_id THEN {trip('ent_id', 'same_as', 'cluster_id')} END)"
     )
     return (
-        s.select(
-            F.col("conv_id"),
-            F.col("turn_idx").cast("int").alias("turn_idx"),
-            F.col("start").cast("int").alias("span_start"),
-            F.col("end").cast("int").alias("span_end"),
-            F.explode(F.filter(fan, lambda t: t.isNotNull())).alias("t"),
+        s.selectExpr(
+            "conv_id",
+            "CAST(turn_idx AS INT) AS turn_idx",
+            "CAST(start AS INT) AS span_start",
+            "CAST(end AS INT) AS span_end",
+            f"explode(filter({fan}, t -> t IS NOT NULL)) AS t",
         )
-        .select(
-            F.col("t")["subj"].alias("subj"),
-            F.col("t")["pred"].alias("pred"),
-            F.col("t")["obj"].alias("obj"),
+        .selectExpr(
+            "t.subj AS subj",
+            "t.pred AS pred",
+            "t.obj AS obj",
             "conv_id",
             "turn_idx",
             "span_start",
             "span_end",
         )
-        .dropDuplicates(["subj", "pred", "obj", "conv_id", "turn_idx", "span_start", "span_end"])
+        .dropDuplicates(list(TRIPLE_COLS))
     )
 
 
@@ -133,30 +131,24 @@ def graph_tables(triples: DataFrame) -> tuple[DataFrame, DataFrame]:
     the highest-priority kind (entity > turn > label > literal) so e.g. a
     cluster id that is both ``mentions``-object and ``same_as``-object is
     one 'entity' node."""
-    pred = F.col("pred")
     subj_kind = (
-        F.when(pred == "mentions", "turn")
-        .when(pred.isin("is_a", "same_as"), "entity")
-        .otherwise("literal")  # linked_to surface forms, causes drugs
+        "CASE WHEN pred = 'mentions' THEN 'turn'"
+        " WHEN pred IN ('is_a', 'same_as') THEN 'entity'"
+        " ELSE 'literal' END"  # linked_to surface forms, causes drugs
     )
     obj_kind = (
-        F.when(pred == "is_a", "label")
-        .when(pred.isin("mentions", "same_as", "linked_to"), "entity")
-        .otherwise("literal")  # causes effects
+        "CASE WHEN pred = 'is_a' THEN 'label'"
+        " WHEN pred IN ('mentions', 'same_as', 'linked_to') THEN 'entity'"
+        " ELSE 'literal' END"  # causes effects
     )
-    pairs = triples.select(F.col("subj").alias("id"), subj_kind.alias("kind")).union(
-        triples.select(F.col("obj").alias("id"), obj_kind.alias("kind"))
+    pairs = triples.selectExpr("subj AS id", f"{subj_kind} AS kind").union(
+        triples.selectExpr("obj AS id", f"{obj_kind} AS kind")
     )
-    rank = F.expr(
-        "map_from_arrays(array('entity','turn','label','literal'), array(0,1,2,3))"
-    )
+    rank = "map_from_arrays(array('entity','turn','label','literal'), array(0,1,2,3))"
     nodes = (
         pairs.groupBy("id")
-        .agg(F.min(F.struct(F.try_element_at(rank, F.col("kind")).alias("r"),
-                            F.col("kind").alias("k"))).alias("m"))
-        .select("id", F.col("m")["k"].alias("kind"))
+        .agg(F.expr(f"min(struct(try_element_at({rank}, kind) AS r, kind AS k))").alias("m"))
+        .selectExpr("id", "m.k AS kind")
     )
-    edges = triples.select(
-        F.col("subj").alias("src"), F.col("pred").alias("rel"), F.col("obj").alias("dst")
-    ).distinct()
+    edges = triples.selectExpr("subj AS src", "pred AS rel", "obj AS dst").distinct()
     return nodes, edges

@@ -77,18 +77,8 @@ def destem(key: str) -> str | None:
     return None
 
 
-def lemma(key: str, overrides: dict[str, str] | None = None) -> str | None:
-    """F8 mirror of functions/text.py lemma_expr: irregular override first,
-    then the rule-based destem. NOTE: an override KEY never falls through to
-    destem — the override short-circuits it even when its value matches
-    nothing (the engine's dictionary-side expansion preserves exactly this)."""
-    if overrides and key in overrides:
-        return overrides[key]
-    return destem(key)
-
-
 def norm_key(key: str, overrides: dict[str, str] | None = None) -> str:
-    """TOTAL lemma normalization — mirror of functions/text.py norm_key_expr:
+    """TOTAL lemma normalization — mirror of functions/text.py norm_key_sql:
     override map, then override-VALUE fixpoint (a known lemma is never
     re-stemmed: 'metastasis' stays 'metastasis'), then rule destem, else
     identity. Applied to both dictionary and window tokens (whole-window

@@ -281,7 +281,7 @@ _sq = _sq0
 
 
 def _norm_case_sql(col: str) -> str:
-    """functions/text.py norm_key_expr restated in SQL (TOTAL normalization):
+    """functions/text.py norm_key_sql restated in SQL (TOTAL normalization):
     irregular-override CASE, then override-VALUE fixpoint, then rule destem,
     then identity. The override map is embedded as escaped literals."""
     from otar3088_spark.functions.text import IRREGULAR_PLURALS
@@ -302,7 +302,7 @@ def _norm_case_sql(col: str) -> str:
 
 
 def _akey_sql(expr: str) -> str:
-    """canonicalize.alias_key_expr in SQL: lowercase, split on whitespace,
+    """canonicalize.alias_key_sql in DuckDB SQL: lowercase, split on whitespace,
     drop generic type words, concatenate, strip non-alphanumerics."""
     return (
         "regexp_replace(array_to_string(list_filter("

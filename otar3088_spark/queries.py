@@ -17,6 +17,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 # committed parquet corpus shared by the kg_triples_gazetteer query and its
 # DuckDB oracle (generated once by tools/make_kg_fixture.py)
@@ -356,9 +357,15 @@ def q_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _doc_dict_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        [(i, t, l) for (i, t, l) in DOC_DICT], ["ent_id", "term", "label"]
-    ).withColumn("canonical_id", F.col("ent_id"))
+    """``DOC_DICT`` as a DataFrame over a driver-side Arrow table: a Python
+    list would be pickled through a PythonRDD, and every execution would
+    start a Python worker to read eight constant rows."""
+    import pyarrow as pa
+
+    names = ["ent_id", "term", "label"]
+    table = pa.table({c: pa.array(col, pa.string()) for c, col in zip(names, zip(*DOC_DICT))})
+    schema = T.StructType([T.StructField(c, T.StringType()) for c in names])
+    return spark.createDataFrame(table, schema).withColumn("canonical_id", F.col("ent_id"))
 
 
 def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -55,6 +55,16 @@ ENGINE_SQL_CONF = {
     #     LARGEST classes (the fused tagging stage) on every re-entry.
     #     Compiled classes are tiny next to the heap; 10x the cache. ---
     "spark.sql.codegen.cache.maxEntries": "1000",
+    # --- driver-side plan building: no per-call call-site capture. With
+    #     this on (PySpark's default), every F.* and Column call first asks
+    #     the JVM for the active session's conf, walks the Python stack,
+    #     tries to import ipykernel (pulling IPython and its ~500 modules
+    #     into the driver) and sets/clears PySparkCurrentOrigin over py4j:
+    #     about half of a KG build's py4j round trips. What is lost: the
+    #     Python file:line call sites in a DataFrame error's query context;
+    #     the JVM error class and message stay. PySpark reads the value
+    #     once per process, at the first Column call, and caches it. ---
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

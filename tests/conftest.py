@@ -37,6 +37,40 @@ def job_count(spark):
     return count
 
 
+@pytest.fixture
+def py4j_calls():
+    """``py4j_calls(fn) -> (fn(), number of py4j round trips fn() made)``,
+    counted on ``ClientServerConnection.send_command`` from every thread,
+    so py4j's garbage-collection messages are in the count too. Python
+    garbage is collected first, so earlier work's messages stay out."""
+    import gc
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    orig = ClientServerConnection.send_command
+
+    def count(fn):
+        calls = 0
+        lock = threading.Lock()
+
+        def counting(self, command):
+            nonlocal calls
+            with lock:
+                calls += 1
+            return orig(self, command)
+
+        gc.collect()
+        ClientServerConnection.send_command = counting
+        try:
+            out = fn()
+        finally:
+            ClientServerConnection.send_command = orig
+        return out, calls
+
+    return count
+
+
 @pytest.fixture(scope="session")
 def transcripts_pd():
     from otar3088_spark.synth import transcripts_pandas

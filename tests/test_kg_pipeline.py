@@ -594,6 +594,22 @@ def test_prepared_dictionary_value_semantics(spark, tmp_path, job_count):
     assert {r["ent_id"] for r in v2.clusters.collect()} == {"T1", "T2", "T3"}
 
 
+def test_dictionary_preparing_to_zero_rows_tags_nothing(spark, transcripts_df):
+    """A dictionary that ``prepare_dictionary`` filters to zero rows (terms
+    of two chars or fewer, red-listed Anatomy terms) has an empty anchor
+    IN-set; tagging and the whole build return empty outputs."""
+    dictionary = spark.createDataFrame(
+        [("E1", "ab", "CellType"), ("E2", "osteogenesis", "Anatomy")],
+        ["ent_id", "term", "label"],
+    )
+    sents = sentencize(normalize_turns(transcripts_df))
+    assert tag_mentions(sents, prepare_dictionary(dictionary)).count() == 0
+    for use_model in (False, True):
+        res = build_kg(transcripts_df, dictionary, use_model=use_model)
+        for out in (res.spans, res.triples, res.nodes, res.edges):
+            assert out.count() == 0
+
+
 def test_build_kg_plan_time_job_budget(spark, transcripts_df, dictionary_pd, job_count):
     """Without staging, every Spark job build_kg runs is plan-time
     dictionary work — one collect of the prepared dictionary. The
@@ -601,6 +617,31 @@ def test_build_kg_plan_time_job_budget(spark, transcripts_df, dictionary_pd, job
     dictionary = spark.createDataFrame(dictionary_pd)
     _, jobs = job_count(lambda: build_kg(transcripts_df, dictionary))
     assert jobs <= 3, jobs
+
+
+def test_build_kg_py4j_round_trip_budget(spark, transcripts_df, dictionary_pd, py4j_calls):
+    """Building a KG's plans is driver work over py4j: every Column and
+    DataFrame call is a round trip to the JVM. The engine session turns off
+    PySpark's per-call call-site capture, which adds several round trips to
+    each call and imports IPython into the driver, and the plan builders
+    write their expressions as SQL text. Bounds have margin for py4j's
+    garbage-collection messages, which arrive when Python frees objects."""
+    import sys
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    had_ipython = "IPython" in sys.modules
+    calls = {}
+    for use_model in (False, True):
+        dictionary = spark.createDataFrame(dictionary_pd)
+        _, calls[use_model] = py4j_calls(
+            lambda: build_kg(transcripts_df, dictionary, use_model=use_model)
+        )
+    # measured 0.8-1.0k and 1.3-1.5k here; 6.5k and 10.1k with call-site capture on,
+    # 3.0-3.3k and 5.3-5.4k with it off but the builders on the Column API
+    assert calls[False] <= 1400 and calls[True] <= 2000, calls
+    # sys.modules is shared by the whole test process: check that these
+    # builds did not add IPython, not that nothing ever imported it
+    assert ("IPython" in sys.modules) == had_ipython
 
 
 def test_persist_spans_is_per_build(spark, transcripts_pd, dictionary_pd, tmp_path, job_count):

@@ -89,8 +89,8 @@ def test_token_core_bounds(tok):
 
 def test_allowed_forms_is_exact_norm_preimage(spark):
     """Duality pinning the round-4 tagging design: the dim-side preimage
-    enumeration (tagging._allowed_forms_expr) must be EXACTLY the preimage of
-    the total lemma normalization (oracle.norm_key == text.norm_key_expr):
+    enumeration (tagging._allowed_forms_sql) must be EXACTLY the preimage of
+    the total lemma normalization (oracle.norm_key == text.norm_key_sql):
 
         k in allowed(t)  <=>  norm(k) == t
 
@@ -99,12 +99,12 @@ def test_allowed_forms_is_exact_norm_preimage(spark):
     override keys/values, s-ending values ('metastasis'), destem fixpoints,
     double-destemmables ('glass' -> 'glas' -> 'gla'), short tokens, override
     keys that are destems of dictionary tokens ('axes'/'axe'), and possessive
-    forms. Also asserts the Spark norm_key_expr equals the pandas norm_key on
+    forms. Also asserts the Spark norm_key_sql equals the pandas norm_key on
     the same universe (expression/oracle parity)."""
     from pyspark.sql import functions as F
 
-    from otar3088_spark.functions.text import IRREGULAR_PLURALS, norm_key_expr
-    from otar3088_spark.operators.tagging import _allowed_forms_expr
+    from otar3088_spark.functions.text import IRREGULAR_PLURALS, norm_key_sql
+    from otar3088_spark.operators.tagging import _allowed_forms_sql
 
     ov = IRREGULAR_PLURALS
     base = [
@@ -125,8 +125,8 @@ def test_allowed_forms_is_exact_norm_preimage(spark):
     df = spark.createDataFrame([(t,) for t in targets], ["t"])
     rows = df.select(
         "t",
-        _allowed_forms_expr(F.col("t"), ov).alias("allowed"),
-        norm_key_expr(F.col("t"), ov).alias("nm"),
+        F.expr(_allowed_forms_sql("t", ov)).alias("allowed"),
+        F.expr(norm_key_sql("t", ov)).alias("nm"),
     ).collect()
     allowed = {r["t"]: set(r["allowed"]) for r in rows}
     spark_norm = {r["t"]: r["nm"] for r in rows}
@@ -153,13 +153,14 @@ def test_norm_key_expr_escapes_quoted_overrides(spark):
     unescaped literals."""
     from pyspark.sql import functions as F
 
-    from otar3088_spark.functions.text import norm_key_expr
+    from otar3088_spark.functions.text import norm_key_sql
 
     ov = {"o'briens": "o'brien", "x\\ys": "x\\y"}
     df = spark.createDataFrame(
         [("o'briens",), ("o'brien",), ("x\\ys",), ("plains",)], ["k"]
     )
-    got = {r["k"]: r["nm"] for r in df.select("k", norm_key_expr(F.col("k"), ov).alias("nm")).collect()}
+    nm = F.expr(norm_key_sql("k", ov)).alias("nm")
+    got = {r["k"]: r["nm"] for r in df.select("k", nm).collect()}
     assert got == {
         "o'briens": "o'brien",   # override key with quote
         "o'brien": "o'brien",    # override value fixpoint (quote)

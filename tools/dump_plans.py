@@ -1,15 +1,33 @@
 #!/usr/bin/env python
-"""Dump .explain('formatted') evidence for key queries into BENCH/PLANS.md.
+"""Dump plan evidence for the engine's queries.
 
-Checks the plan properties the engine is designed around:
+``python tools/dump_plans.py`` writes .explain('formatted') evidence for key
+queries into BENCH/PLANS.md and checks the plan properties the engine is
+designed around:
   - parquet scans carry PushedFilters / pruned ReadSchema
   - dictionary joins are BroadcastHashJoin (never shuffle the big side)
   - the tagging candidate join-back is co-partitioned (no extra Exchange)
   - WholeStageCodegen spans cover the scalar hot path
+
+``python tools/dump_plans.py --normalized DIR --sf-dir SF`` writes one
+file per optimized logical plan into DIR: the triples, nodes and edges of
+``build_kg`` over ``fixtures/kg`` with the model off and on, and every
+battery query in ``QUERIES`` over the tables in SF (sf0.001). Expression
+ids (``#12``), ``plan_id=`` tags and the checkout path are stripped, and
+lambda variables are renamed ``v1, v2, ...`` per binding (name and id), in
+order of first appearance: their generated names (``x_12``) come from a
+JVM-wide counter, so they change with how many lambdas the process built
+before, and a lambda written as SQL text is named by its author, not the
+counter. Two checkouts are then compared with one ``diff -r``::
+
+    (cd parent && python tools/dump_plans.py --normalized /tmp/plans-a --sf-dir SF)
+    (cd change && python tools/dump_plans.py --normalized /tmp/plans-b --sf-dir SF)
+    diff -r /tmp/plans-a /tmp/plans-b
 """
 
 from __future__ import annotations
 
+import argparse
 import re
 import sys
 from pathlib import Path
@@ -25,7 +43,58 @@ def fmt(df) -> str:
     )
 
 
+def normalized_plan(df, root: str) -> str:
+    """The optimized logical plan of ``df`` with run-specific text removed
+    (module docstring)."""
+    text = df._jdf.queryExecution().optimizedPlan().toString().replace(root, "<repo>")
+    # a lambda variable is one binding per name#id: rename by that pair,
+    # so two lambdas that happen to share a name stay apart
+    names: dict[str, str] = {}
+    for var in re.findall(r"\blambda (\w+#\d+)", text):
+        names.setdefault(var, f"v{len(names) + 1}")
+    text = re.sub(r"\blambda (\w+#\d+)", lambda m: f"lambda {names[m.group(1)]}", text)
+    return re.sub(r"plan_id=\d+", "plan_id=", re.sub(r"#\d+", "", text))
+
+
+def dump_normalized(out_dir: str, sf: str) -> None:
+    """Write the normalized optimized plans (module docstring) into
+    ``out_dir``, one ``<name>.txt`` per plan."""
+    spark = get_spark(cores=2)
+    from otar3088_spark.plans.kg_pipeline import build_kg
+    from otar3088_spark.queries import KG_FIXTURE_DIR, QUERIES
+
+    root = str(Path(__file__).resolve().parents[1])
+    out = Path(out_dir)
+    out.mkdir(parents=True, exist_ok=True)
+    plans = {}
+    for tag, use_model in (("gazetteer", False), ("merged", True)):
+        res = build_kg(
+            spark.read.parquet(str(KG_FIXTURE_DIR / "transcripts.parquet")),
+            spark.read.parquet(str(KG_FIXTURE_DIR / "dictionary.parquet")),
+            use_model=use_model,
+        )
+        for part in ("triples", "nodes", "edges"):
+            plans[f"build_kg_{tag}_{part}"] = getattr(res, part)
+    plans.update({f"query_{name}": fn(spark, sf) for name, fn in QUERIES.items()})
+    for name, df in plans.items():
+        (out / f"{name}.txt").write_text(normalized_plan(df, root) + "\n")
+    print(f"{len(plans)} plans -> {out}")
+
+
 def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--normalized", metavar="DIR", help="write normalized optimized plans")
+    ap.add_argument("--sf-dir", help="battery tables for --normalized (sf0.001)")
+    args = ap.parse_args()
+    if args.normalized:
+        if not args.sf_dir:
+            ap.error("--normalized needs --sf-dir")
+        dump_normalized(args.normalized, args.sf_dir)
+    else:
+        dump_markdown()
+
+
+def dump_markdown() -> None:
     spark = get_spark(cores=8)
     from otar3088_spark.plans.kg_pipeline import build_kg
     from otar3088_spark.queries import QUERIES
