@@ -111,7 +111,6 @@ def main(argv: list[str] | None = None) -> int:
         iceberg_catalog_configured,
         write_iceberg,
     )
-    from otar3088_spark.operators.triples import graph_tables
     from otar3088_spark.plans.kg_pipeline import build_kg
     from otar3088_spark.session import submit_spark
 
@@ -149,8 +148,9 @@ def main(argv: list[str] | None = None) -> int:
     triples = res.triples.persist()
     counts: dict[str, int] = {}
     try:
-        nodes, edges = graph_tables(triples)
-        outputs = {"triples": triples, "nodes": nodes, "edges": edges}
+        # res.nodes/res.edges are built on first access, over the triples
+        # just persisted (persist() returns the same DataFrame)
+        outputs = {"triples": triples, "nodes": res.nodes, "edges": res.edges}
         if out_is_table:
             for part, df in outputs.items():
                 tbl = f"{args.output}.{part}"

@@ -15,7 +15,7 @@ structured Spark batch DAG over transcript tables:
 Design rules (see SURVEY.md §7):
   * DataFrame/SQL only; Catalyst optimizes. RDDs never.
   * Zero per-row Python in the hot path. The only Python UDF surface is the
-    optional model-inference ``mapInPandas`` (Arrow-batched) and multimodal
+    optional model-inference ``mapInArrow`` (Arrow-batched) and multimodal
     decode stubs.
   * Dictionaries broadcast; big tables partition on ``conv_id`` (salted for
     skew); AQE on.

@@ -1,10 +1,12 @@
-"""Model-scored mention detection — the sanctioned ``mapInPandas`` surface (M1).
+"""Model-scored mention detection — the sanctioned ``mapInArrow`` surface (M1).
 
 The reference runs HF token-classification in a torch ``no_grad`` loop at
 batch_size=4 (model_tests.ipynb cell 6; trial_to_papers.ipynb cell 12). The
-Spark-first shape is an Arrow-batched ``mapInPandas`` with a per-executor
+Spark-first shape is an Arrow-batched ``mapInArrow`` with a per-executor
 model singleton: one Python worker per task, model loaded once per executor
 process, batches sized by ``spark.sql.execution.arrow.maxRecordsPerBatch``.
+The batch functions read and write ``pyarrow.RecordBatch`` directly, so no
+pandas is imported into the Python workers (see ``_int32_array``).
 
 This container has no torch/transformers, so the default scorer is a
 DETERMINISTIC STAND-IN (hash-based pseudo-logits over token spans) behind the
@@ -16,12 +18,15 @@ is the sanctioned place for them (SURVEY.md §2.9).
 
 from __future__ import annotations
 
+import array
 import hashlib
-from collections.abc import Callable, Iterator
+import itertools
+from collections.abc import Callable, Iterable, Iterator, Sequence
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 MENTION_SCHEMA = T.StructType(
     [
@@ -89,7 +94,64 @@ def _scorer_cache_key(prefix: str, fn: object) -> str:
     return key
 
 
-def _stand_in_scorer(sentences: pd.Series) -> list[list[tuple[int, int, str, float]]]:
+# Output columns are built from raw buffers, not from Python objects:
+# pyarrow's Python-object converters (pa.array, also over numpy input,
+# pa.scalar, RecordBatch.from_pydict/from_pylist) import pandas on their
+# first call, and pandas would then sit in every scoring worker (about
+# 30 MB each). Array.from_buffers over an array.array converts nothing.
+def _int32_array(values: Iterable[int]) -> pa.Array:
+    buf = array.array("i", values)
+    return pa.Array.from_buffers(pa.int32(), len(buf), [None, pa.py_buffer(buf)])
+
+
+def _float64_array(values: Iterable[float]) -> pa.Array:
+    buf = array.array("d", values)
+    return pa.Array.from_buffers(pa.float64(), len(buf), [None, pa.py_buffer(buf)])
+
+
+def _utf8_array(values: Iterable[str]) -> pa.Array:
+    """utf-8 data buffer plus int32 byte offsets (Arrow's ``string``)."""
+    encoded = [v.encode() for v in values]
+    offsets = array.array("i", itertools.accumulate(map(len, encoded), initial=0))
+    return pa.Array.from_buffers(
+        pa.string(), len(encoded), [None, pa.py_buffer(offsets), pa.py_buffer(b"".join(encoded))]
+    )
+
+
+# the key columns every model seam passes through, cast to the types the
+# output schemas declare (a LongType turn_idx would otherwise reach the JVM
+# as int64 under an IntegerType schema); the optimizer drops a cast that is
+# already the column's type
+_KEYS = ["conv_id", "turn_idx", "sent_idx"]
+_SEAM_INPUT = (
+    "CAST(conv_id AS STRING) AS conv_id",
+    "CAST(turn_idx AS INT) AS turn_idx",
+    "CAST(sent_idx AS INT) AS sent_idx",
+    "sent_text",
+)
+
+
+def _map_sentences(
+    sentences: DataFrame,
+    batch_fn: Callable[[pa.RecordBatch, Callable], pa.RecordBatch],
+    model_fn: Callable,
+    batch_key: str,
+    schema: T.StructType,
+) -> DataFrame:
+    """One Arrow-batched pass of ``batch_fn(batch, model)`` over sentence
+    rows; ``model_fn`` is loaded once per executor process under
+    ``batch_key`` (the singleton)."""
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        model = _MODEL_SINGLETON.setdefault(batch_key, model_fn)
+        for rb in batches:
+            if rb.num_rows:
+                yield batch_fn(rb, model)
+
+    return sentences.selectExpr(*_SEAM_INPUT).mapInArrow(run, schema=schema)
+
+
+def _stand_in_scorer(sentences: Sequence[str]) -> list[list[tuple[int, int, str, float]]]:
     """Deterministic pseudo-model: 'detects' a span for tokens whose md5 has
     a low nibble, labeling by hash bucket. Stable across runs/partitions."""
     memo = _TOKEN_MEMO
@@ -118,16 +180,62 @@ def _stand_in_scorer(sentences: pd.Series) -> list[list[tuple[int, int, str, flo
     return out
 
 
+_MENTION_ARROW = to_arrow_schema(MENTION_SCHEMA)
+
+
+def score_mention_batch(
+    rb: pa.RecordBatch,
+    scorer: Callable[[Sequence[str]], list[list[tuple[int, int, str, float]]]],
+) -> pa.RecordBatch:
+    """One sentence batch (``conv_id, turn_idx, sent_idx, sent_text``) ->
+    one ``MENTION_SCHEMA`` batch, a row per scored span. The scorer gets the
+    batch's sentences as a ``list[str]``."""
+    texts = rb.column("sent_text").to_pylist()
+    preds = scorer(texts)
+    # a scorer that filters rows (returns fewer lists than inputs) must fail
+    # loudly — a bare zip would truncate and silently drop every trailing
+    # sentence's mentions from the batch
+    if len(preds) != len(texts):
+        raise ValueError(
+            f"scorer returned {len(preds)} span lists for "
+            f"{len(texts)} sentences; it must return exactly one list "
+            "per input row (empty list for no mentions)"
+        )
+    rows, starts, ends, surfaces, labels, scores = [], [], [], [], [], []
+    for i, (text, spans) in enumerate(zip(texts, preds)):
+        for s, e, lab, sc in spans:
+            s, e = int(s), int(e)
+            rows.append(i)
+            starts.append(s)
+            ends.append(e)
+            surfaces.append(text[s:e])
+            labels.append(lab)
+            scores.append(float(sc))
+    keys = rb.select(_KEYS).take(_int32_array(rows))
+    return pa.RecordBatch.from_arrays(
+        [
+            *keys.columns,
+            _int32_array(starts),
+            _int32_array(ends),
+            _utf8_array(surfaces),
+            _utf8_array(labels),
+            _float64_array(scores),
+        ],
+        schema=_MENTION_ARROW,
+    )
+
+
 def model_mentions(
     sentences: DataFrame,
-    scorer: Callable[[pd.Series], list[list[tuple[int, int, str, float]]]] | None = None,
+    scorer: Callable[[Sequence[str]], list[list[tuple[int, int, str, float]]]] | None = None,
     batch_key: str | None = None,
 ) -> DataFrame:
     """Batched model inference over sentence rows -> mention spans.
 
-    ``scorer(sent_texts) -> [[(start, end, label, score), ...], ...]`` is
-    loaded once per executor process (singleton dict) — swapping in a real
-    HF ``pipeline("token-classification")`` changes nothing structurally.
+    ``scorer(sent_texts) -> [[(start, end, label, score), ...], ...]`` gets
+    one Arrow batch's sentences as a ``list[str]`` and is loaded once per
+    executor process (singleton dict) — swapping in a real HF
+    ``pipeline("token-classification")`` changes nothing structurally.
     The singleton key defaults to a per-scorer identity so a session that
     first ran the stand-in can never silently serve a later, different
     scorer from the cache; pass ``batch_key`` explicitly to share one loaded
@@ -136,41 +244,9 @@ def model_mentions(
         batch_key = (
             "standin-ner" if scorer is None else _scorer_cache_key("scorer", scorer)
         )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        model = _MODEL_SINGLETON.get(batch_key)
-        if model is None:
-            model = scorer or _stand_in_scorer
-            _MODEL_SINGLETON[batch_key] = model
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            preds = model(pdf["sent_text"])
-            # a scorer that filters rows (returns fewer lists than inputs)
-            # must fail loudly — a bare zip would truncate and silently drop
-            # every trailing sentence's mentions from the batch
-            if len(preds) != len(pdf):
-                raise ValueError(
-                    f"scorer returned {len(preds)} span lists for "
-                    f"{len(pdf)} sentences; it must return exactly one list "
-                    "per input row (empty list for no mentions)"
-                )
-            rows = []
-            for (conv_id, turn_idx, sent_idx, sent_text), spans in zip(
-                pdf[["conv_id", "turn_idx", "sent_idx", "sent_text"]].itertuples(
-                    index=False, name=None
-                ),
-                preds,
-            ):
-                for s, e, lab, sc in spans:
-                    rows.append(
-                        (conv_id, int(turn_idx), int(sent_idx), int(s), int(e),
-                         sent_text[s:e], lab, float(sc))
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in MENTION_SCHEMA.fields])
-
-    cols = ["conv_id", "turn_idx", "sent_idx", "sent_text"]
-    return sentences.select(*cols).mapInPandas(run, schema=MENTION_SCHEMA)
+    return _map_sentences(
+        sentences, score_mention_batch, scorer or _stand_in_scorer, batch_key, MENTION_SCHEMA
+    )
 
 
 CLASSIFY_SCHEMA = T.StructType(
@@ -186,7 +262,7 @@ CLASSIFY_SCHEMA = T.StructType(
 _CLASSES = ("background", "method", "result", "adverse_event")
 
 
-def _stand_in_classifier(sentences: pd.Series) -> list[tuple[str, float]]:
+def _stand_in_classifier(sentences: Sequence[str]) -> list[tuple[str, float]]:
     """Deterministic pseudo sequence-classifier: class + score from the md5
     of the normalized sentence. Same md5 family as the NER stand-in so the
     DuckDB oracle can replay it."""
@@ -213,7 +289,7 @@ def hf_pipeline_scorer(pipe):
     with a stable ``batch_key`` (e.g. the model name) so every executor
     shares one loaded model."""
 
-    def score(sentences: pd.Series) -> list[list[tuple[int, int, str, float]]]:
+    def score(sentences: Sequence[str]) -> list[list[tuple[int, int, str, float]]]:
         texts = list(sentences)
         outs = pipe(texts)
         # a single-sentence call returns the entity list itself, not a
@@ -231,45 +307,51 @@ def hf_pipeline_scorer(pipe):
     return score
 
 
+_CLASSIFY_ARROW = to_arrow_schema(CLASSIFY_SCHEMA)
+
+
+def classify_batch(
+    rb: pa.RecordBatch, classifier: Callable[[Sequence[str]], list[tuple[str, float]]]
+) -> pa.RecordBatch:
+    """One sentence batch -> one ``CLASSIFY_SCHEMA`` batch, a row per
+    sentence. The classifier gets the batch's sentences as a ``list[str]``."""
+    texts = rb.column("sent_text").to_pylist()
+    preds = classifier(texts)
+    if len(preds) != len(texts):
+        raise ValueError(
+            f"classifier returned {len(preds)} predictions for "
+            f"{len(texts)} sentences; it must return exactly one per input row"
+        )
+    return pa.RecordBatch.from_arrays(
+        [
+            *rb.select(_KEYS).columns,
+            _utf8_array(c for c, _ in preds),
+            _float64_array(float(s) for _, s in preds),
+        ],
+        schema=_CLASSIFY_ARROW,
+    )
+
+
 def model_classify(
     sentences: DataFrame,
-    classifier: Callable[[pd.Series], list[tuple[str, float]]] | None = None,
+    classifier: Callable[[Sequence[str]], list[tuple[str, float]]] | None = None,
     batch_key: str | None = None,
 ) -> DataFrame:
     """M2 sequence classification (reference model_tests.ipynb cell 6 runs a
     sequence head in the same torch loop as token classification): one
-    (class, score) per sentence row, Arrow-batched mapInPandas with the same
+    (class, score) per sentence row, Arrow-batched mapInArrow with the same
     per-executor-singleton loading discipline (and per-scorer cache keying)
-    as ``model_mentions``. A real HF ``pipeline("text-classification")``
-    plugs in via ``classifier=``."""
+    and the same batch helpers as ``model_mentions``. A real HF
+    ``pipeline("text-classification")`` plugs in via ``classifier=``."""
     if batch_key is None:
         batch_key = (
             "standin-seqcls"
             if classifier is None
             else _scorer_cache_key("cls", classifier)
         )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        model = _MODEL_SINGLETON.get(batch_key)
-        if model is None:
-            model = classifier or _stand_in_classifier
-            _MODEL_SINGLETON[batch_key] = model
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            preds = model(pdf["sent_text"])
-            yield pd.DataFrame(
-                {
-                    "conv_id": pdf["conv_id"].values,
-                    "turn_idx": pdf["turn_idx"].astype("int32").values,
-                    "sent_idx": pdf["sent_idx"].astype("int32").values,
-                    "cls": [c for c, _ in preds],
-                    "score": [s for _, s in preds],
-                }
-            )
-
-    cols = ["conv_id", "turn_idx", "sent_idx", "sent_text"]
-    return sentences.select(*cols).mapInPandas(run, schema=CLASSIFY_SCHEMA)
+    return _map_sentences(
+        sentences, classify_batch, classifier or _stand_in_classifier, batch_key, CLASSIFY_SCHEMA
+    )
 
 
 def align_subword_labels_expr(word_ids, word_tags):

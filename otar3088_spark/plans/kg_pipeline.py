@@ -27,6 +27,7 @@ the snapshot is read back with the schema its manifest stores).
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import cached_property
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -96,8 +97,21 @@ class KGResult:
     resolved_spans: DataFrame
     clusters: DataFrame
     triples: DataFrame
-    nodes: DataFrame
-    edges: DataFrame
+
+    # the graph tables are built from ``triples`` on first access only: a
+    # caller that never reads them skips about 75 py4j round trips of plan
+    # building per build
+    @cached_property
+    def _graph(self) -> tuple[DataFrame, DataFrame]:
+        return graph_tables(self.triples)
+
+    @property
+    def nodes(self) -> DataFrame:
+        return self._graph[0]
+
+    @property
+    def edges(self) -> DataFrame:
+        return self._graph[1]
 
 
 def build_kg(
@@ -144,7 +158,7 @@ def build_kg(
     spans = tag_mentions(sentences, pdict)
     if use_model or model_scorer is not None:
         # North-star transformer branch: batched model inference
-        # (mapInPandas, per-executor singleton — a real HF scorer plugs in
+        # (mapInArrow, per-executor singleton — a real HF scorer plugs in
         # via model_scorer), entity-link candidate generation against the
         # broadcast dictionary, then source-precedence merge with the
         # gazetteer spans (dict wins exact span collisions). One extra
@@ -212,15 +226,12 @@ def build_kg(
     triples = mention_triples(resolved, clusters)
     if events is not None:
         triples = triples.unionByName(causes_triples(events))
-    nodes, edges = graph_tables(triples)
     return KGResult(
         sentences=sentences,
         spans=spans,
         resolved_spans=resolved,
         clusters=clusters,
         triples=triples,
-        nodes=nodes,
-        edges=edges,
     )
 
 

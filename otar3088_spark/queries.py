@@ -695,7 +695,7 @@ def q_simhash_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_model_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic stand-in transformer inference via mapInPandas (M1) over
+    """Deterministic stand-in transformer inference via mapInArrow (M1) over
     documents-as-sentences; per-executor model singleton, Arrow batches."""
     from otar3088_spark.operators.inference import model_mentions
 
@@ -712,7 +712,7 @@ def q_model_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_seq_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M2 sequence classification over documents-as-sentences (mapInPandas,
+    """M2 sequence classification over documents-as-sentences (mapInArrow,
     deterministic md5 stand-in — DuckDB replays the same md5 family)."""
     from otar3088_spark.operators.inference import model_classify
 

@@ -176,6 +176,152 @@ def test_model_mentions_deterministic_and_merged(spark, sent_df):
     assert sorted(tuple(r) for r in merged.collect()) == [dict_row, free]
 
 
+_SCORING_WORKER = """
+import json, sys
+import pyarrow as pa
+from otar3088_spark.operators.inference import (
+    _int32_array, _stand_in_classifier, _stand_in_scorer, _utf8_array,
+    classify_batch, score_mention_batch,
+)
+texts = [
+    "patients receiving aspirin reported headache nausea fatigue dizziness",
+    "naïve café staff in 北京",
+]
+rb = pa.RecordBatch.from_arrays(
+    [_utf8_array(["c0", "c1"]), _int32_array([0, 3]), _int32_array([1, 2]), _utf8_array(texts)],
+    names=["conv_id", "turn_idx", "sent_idx", "sent_text"],
+)
+mentions = score_mention_batch(rb, _stand_in_scorer)
+classes = classify_batch(rb, _stand_in_classifier)
+print(json.dumps({
+    "pandas": "pandas" in sys.modules,
+    "mentions": mentions.num_rows,
+    "want": sum(map(len, _stand_in_scorer(texts))),
+    "classes": classes.num_rows,
+}))
+"""
+
+
+def test_scoring_batch_imports_no_pandas():
+    """The scoring worker unpickles the batch function by importing
+    ``inference``, then reads and writes Arrow batches. Neither may load
+    pandas: it is about 30 MB per worker, and pyarrow's Python-object
+    converters import it on first use. A fresh interpreter, so nothing
+    else in the test process can have imported it first."""
+    import json
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    p = subprocess.run(
+        [sys.executable, "-c", _SCORING_WORKER],
+        cwd=root, capture_output=True, text=True, timeout=120, check=True,
+    )
+    got = json.loads(p.stdout.strip().splitlines()[-1])
+    assert got["pandas"] is False
+    assert got["mentions"] == got["want"] > 0
+    assert got["classes"] == 2
+
+
+def test_model_mentions_replay_multibyte_long_keys(spark):
+    """A replay scorer over multi-byte UTF-8 sentences with LongType keys:
+    surfaces are the code-point slices ``sent_text[s:e]`` (the output batch
+    carries utf-8 bytes), keys come back as the declared IntegerType, the
+    scorer gets a ``list``, and a batch with no span gives no rows."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from otar3088_spark.operators.inference import (
+        MENTION_SCHEMA,
+        _int32_array,
+        _utf8_array,
+        model_mentions,
+        score_mention_batch,
+    )
+
+    words = {"naïve": "CellType", "café": "Tissue", "北京": "Drug", "aspirin": "Drug"}
+    texts = [
+        "naïve café cells in 北京 took aspirin",
+        "北京 naïve",
+        "nothing here",
+    ]
+
+    def replay_scorer(batch):
+        if type(batch) is not list:
+            raise TypeError(f"scorer got {type(batch).__name__}, not list")
+        out = []
+        for t in batch:
+            spans = []
+            for w, lab in words.items():
+                i = t.find(w)
+                if i >= 0:
+                    spans.append((i, i + len(w), lab, 0.5 + len(w) / 100))
+            out.append(spans)
+        return out
+
+    key_schema = T.StructType(
+        [
+            T.StructField("conv_id", T.StringType()),
+            T.StructField("turn_idx", T.LongType()),
+            T.StructField("sent_idx", T.LongType()),
+            T.StructField("sent_text", T.StringType()),
+        ]
+    )
+    sents = spark.createDataFrame(
+        [("c0", 7, i, t) for i, t in enumerate(texts)], key_schema
+    )
+    ms = model_mentions(sents, scorer=replay_scorer, batch_key="replay-multibyte")
+    assert ms.schema == MENTION_SCHEMA
+    got = {tuple(r) for r in ms.collect()}
+    want = {
+        ("c0", 7, i, s, e, texts[i][s:e], lab, sc)
+        for i, spans in enumerate(replay_scorer(texts))
+        for s, e, lab, sc in spans
+    }
+    assert got == want and len(want) == 6
+    # Spark's substring counts code points the way Python slices do
+    sent_text = sents.selectExpr("CAST(sent_idx AS INT) AS sent_idx", "sent_text")
+    assert ms.join(sent_text, "sent_idx").where(
+        "substring(sent_text, start + 1, end - start) != surface"
+    ).count() == 0
+
+    no_spans = sents.where("sent_idx = 2")
+    assert model_mentions(no_spans, scorer=replay_scorer, batch_key="replay-multibyte").count() == 0
+    rb = pa.RecordBatch.from_arrays(
+        [_utf8_array(["c0"]), _int32_array([7]), _int32_array([2]), _utf8_array([texts[2]])],
+        names=["conv_id", "turn_idx", "sent_idx", "sent_text"],
+    )
+    empty = score_mention_batch(rb, replay_scorer)
+    assert empty.num_rows == 0
+    assert empty.schema == to_arrow_schema(MENTION_SCHEMA)
+
+
+def test_custom_scorer_and_classifier_receive_a_list(spark):
+    """Both model seams hand their callable one batch of sentences as a
+    plain ``list[str]``: the contract every scorer in the repo relies on
+    (iterate, ``len()``)."""
+    from otar3088_spark.operators.inference import model_classify, model_mentions
+
+    sents = spark.createDataFrame(
+        [("c0", 0, i, f"sentence number {i}") for i in range(3)],
+        ["conv_id", "turn_idx", "sent_idx", "sent_text"],
+    )
+
+    def typed_scorer(texts):
+        return [[(0, 8, type(texts).__name__, 1.0)] for _ in texts]
+
+    def typed_classifier(texts):
+        return [(type(texts).__name__, 1.0) for _ in texts]
+
+    ms = model_mentions(sents, scorer=typed_scorer).collect()
+    cls = model_classify(sents, classifier=typed_classifier).collect()
+    assert {r["label"] for r in ms} == {"list"} and len(ms) == 3
+    assert {r["surface"] for r in ms} == {"sentence"}
+    assert {r["cls"] for r in cls} == {"list"} and len(cls) == 3
+
+
 # ---------------------------------------------------------------- multimodal
 
 

@@ -180,7 +180,7 @@ def dump_markdown() -> None:
             ("dictionary + linker broadcast joins", r"BroadcastHashJoin", True),
             ("no cartesian anywhere", r"Cartesian", False),
             ("no BroadcastNestedLoopJoin (linker is equi-join)", r"BroadcastNestedLoopJoin", False),
-            ("Arrow-batched model scoring (mapInPandas)", r"MapInPandas", True),
+            ("Arrow-batched model scoring (mapInArrow)", r"MapInArrow", True),
         ],
     )
     n_exchange_full = len(re.findall(r"\(\d+\) Exchange", plan_full))
