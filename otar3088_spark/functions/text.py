@@ -4,10 +4,10 @@ Everything here is a pure Catalyst expression (chained ``regexp_replace`` /
 ``split`` / ``aggregate``): whole-stage-codegen'd JVM execution, no Python,
 fully pushdown-friendly. Semantics mirror the reference's cleaners:
 
-* ``clean_text_expr``  — reference ``clean_text`` (split2sent_par.py:158-181,
+* ``clean_text_sql``   — reference ``clean_text`` (split2sent_par.py:158-181,
   utils/common.py:67-90): strip latex ``{...}`` groups and ``\\cmd`` commands,
   strip citation tags ``[1, 23]``, collapse whitespace.
-* ``is_header_expr``   — section-header row detection
+* ``is_header_sql``    — section-header row detection
   (article_normaliser.py:55-82): short known-header titles / PMC ids.
 * ``sentence_split_sql`` + ``offsets_sql`` — sentencization with character
   offsets, done with a lookbehind split plus an ``aggregate`` cumulative-length
@@ -15,8 +15,8 @@ fully pushdown-friendly. Semantics mirror the reference's cleaners:
   (split2sent_par.py:184-208); here sentence boundaries are ``[.!?]`` + space
   on *cleaned* text, which is deterministic, SQL-expressible, and oracle-
   checkable. No shuffle, no UDF: offsets are computed per-row inside the JVM.
-* ``let_expr`` — the lambda-variable let-binding every array-side kernel
-  uses to evaluate a shared subresult once per row.
+* ``let_expr`` / ``let_sql`` — the lambda-variable let-binding every
+  array-side kernel uses to evaluate a shared subresult once per row.
 
 The ``*_sql`` helpers return SQL text instead of a Column (see the note
 above ``sentence_split_sql``).
@@ -40,19 +40,19 @@ _HEADER_TITLES = (
 )
 
 
-def clean_text_expr(col: Column) -> Column:
-    """F1+F2: normalize raw turn text to single-spaced clean text.
+def clean_text_sql(col: str) -> str:
+    """F1+F2: normalize raw turn text to single-spaced clean text (SQL text
+    over the operand ``col``).
 
     Brace groups are stripped in ONE pass (innermost only): nested groups
     leave the outer braces behind. That is deliberate reference parity —
     the reference's own ``re.sub(r"\\{.*?\\}", ...)`` is also single-pass
     and leaks braces on nesting (split2sent_par.py:170); the pandas oracle
     mirrors this expression exactly."""
-    c = F.regexp_replace(col, _LATEX_GROUP, " ")
-    c = F.regexp_replace(c, _LATEX_CMD, " ")
-    c = F.regexp_replace(c, _CITATION, " ")
-    c = F.regexp_replace(c, r"\s+", " ")
-    return F.trim(c)
+    c = col
+    for pattern in (_LATEX_GROUP, _LATEX_CMD, _CITATION, r"\s+"):
+        c = f"regexp_replace({c}, {sql_str(pattern)}, ' ')"
+    return f"trim({c})"
 
 
 # Elements the reference's filter_tags decomposes wholesale before text
@@ -64,8 +64,9 @@ _XML_DROP_TAGS = (
 )
 
 
-def strip_xml_expr(col: Column) -> Column:
-    """S11/P12: full-text XML -> plain text as pure Catalyst expressions.
+def strip_xml_sql(col: str) -> str:
+    """S11/P12: full-text XML -> plain text as pure Catalyst expressions
+    (SQL text over the operand ``col``).
 
     Mirrors the reference's BeautifulSoup ``filter_tags`` walk
     (split2sent_par.py:65-102): unwanted elements are decomposed wholesale
@@ -73,7 +74,7 @@ def strip_xml_expr(col: Column) -> Column:
     elements do not self-nest), remaining markup is unwrapped, then the
     standard ``clean_text`` normalization applies. No UDF: the whole XML →
     text path stays JVM-side and pushdown-friendly."""
-    c = col
+    patterns = []
     for t in _XML_DROP_TAGS:
         # (?=[\s/>]) anchors the tag NAME: plain \b would also match
         # hyphen-extended JATS names ("<fig-count .../>" as a <fig> opener)
@@ -84,21 +85,27 @@ def strip_xml_expr(col: Column) -> Column:
         # non-greedy .*? would swallow all legitimate prose between the
         # singleton and the next real closer. The pair pattern then requires
         # an opener not ending in "/>" ([^>]*[^/>] — empty for bare "<fig>").
-        c = F.regexp_replace(c, rf"<{t}(?=[\s/>])[^>]*/>", " ")
-        c = F.regexp_replace(c, rf"(?s)<{t}(?=[\s>])(?:[^>]*[^/>])?>.*?</{t}>", " ")
-    c = F.regexp_replace(c, r"(?s)<!--.*?-->", " ")
-    c = F.regexp_replace(c, r"<[^>]+>", " ")
-    return clean_text_expr(c)
+        patterns.append(rf"<{t}(?=[\s/>])[^>]*/>")
+        patterns.append(rf"(?s)<{t}(?=[\s>])(?:[^>]*[^/>])?>.*?</{t}>")
+    patterns += [r"(?s)<!--.*?-->", r"<[^>]+>"]
+    c = col
+    for pattern in patterns:
+        c = f"regexp_replace({c}, {sql_str(pattern)}, ' ')"
+    return clean_text_sql(c)
 
 
-def is_header_expr(col: Column) -> Column:
-    """P10: true for section-header-like turns (drop them).
+def is_header_sql(col: str) -> str:
+    """P10: true for section-header-like turns (drop them); SQL text over
+    the operand ``col``.
 
     Mirrors detect_section_headers (article_normaliser.py:55-82): a known
     section title, or a short ``PMC\\d+`` id row.
     """
-    low = F.lower(F.trim(col))
-    return low.rlike(rf"^({_HEADER_TITLES})$") | low.rlike(r"^pmc[0-9]+$")
+    low = f"lower(trim({col}))"
+    return (
+        f"{low} RLIKE {sql_str(f'^({_HEADER_TITLES})$')}"
+        f" OR {low} RLIKE {sql_str('^pmc[0-9]+$')}"
+    )
 
 
 # Protected abbreviations: a period after one of these never ends a sentence.
@@ -186,6 +193,12 @@ def let_expr(val: Column, body) -> Column:
     site, so a shared subresult would be recomputed per use (measured 450 s
     vs 16 s for spans_to_iob at sf0.1)."""
     return F.element_at(F.transform(F.array(val), body), 1)
+
+
+def let_sql(val: str, var: str, body: str) -> str:
+    """``let_expr`` as SQL text: ``body`` with the lambda variable ``var``
+    bound to ``val``, evaluated once per row."""
+    return f"element_at(transform(array({val}), {var} -> {body}), 1)"
 
 
 # leading / trailing punctuation sets of the token-core strip; ltrim/rtrim

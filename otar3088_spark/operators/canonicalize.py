@@ -34,7 +34,9 @@ from collections.abc import Iterable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from otar3088_spark.synth import LABEL_PRIORITY
+# Label priority for canonicalization tie-breaks (cellfinder_clean.ipynb cell 16:
+# CellLine > Anatomy > CellType; extended for our label set).
+LABEL_PRIORITY = ["CellLine", "Anatomy", "CellType", "Tissue", "Drug", "AdverseEvent"]
 
 # Generic type-words stripped when building alias keys ("hela cell" ~ "HeLa").
 GENERIC_WORDS = ("cell", "cells", "line", "lines", "tissue", "tissues")

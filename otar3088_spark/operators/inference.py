@@ -6,7 +6,7 @@ Spark-first shape is an Arrow-batched ``mapInArrow`` with a per-executor
 model singleton: one Python worker per task, model loaded once per executor
 process, batches sized by ``spark.sql.execution.arrow.maxRecordsPerBatch``.
 The batch functions read and write ``pyarrow.RecordBatch`` directly, so no
-pandas is imported into the Python workers (see ``_int32_array``).
+pandas is imported into the Python workers (see ``otar3088_spark.arrow``).
 
 This container has no torch/transformers, so the default scorer is a
 DETERMINISTIC STAND-IN (hash-based pseudo-logits over token spans) behind the
@@ -18,15 +18,15 @@ is the sanctioned place for them (SURVEY.md §2.9).
 
 from __future__ import annotations
 
-import array
 import hashlib
-import itertools
-from collections.abc import Callable, Iterable, Iterator, Sequence
+from collections.abc import Callable, Iterator, Sequence
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
+
+from otar3088_spark.arrow import float64_array, int32_array, utf8_array
 
 MENTION_SCHEMA = T.StructType(
     [
@@ -92,30 +92,6 @@ def _scorer_cache_key(prefix: str, fn: object) -> str:
             stacklevel=3,
         )
     return key
-
-
-# Output columns are built from raw buffers, not from Python objects:
-# pyarrow's Python-object converters (pa.array, also over numpy input,
-# pa.scalar, RecordBatch.from_pydict/from_pylist) import pandas on their
-# first call, and pandas would then sit in every scoring worker (about
-# 30 MB each). Array.from_buffers over an array.array converts nothing.
-def _int32_array(values: Iterable[int]) -> pa.Array:
-    buf = array.array("i", values)
-    return pa.Array.from_buffers(pa.int32(), len(buf), [None, pa.py_buffer(buf)])
-
-
-def _float64_array(values: Iterable[float]) -> pa.Array:
-    buf = array.array("d", values)
-    return pa.Array.from_buffers(pa.float64(), len(buf), [None, pa.py_buffer(buf)])
-
-
-def _utf8_array(values: Iterable[str]) -> pa.Array:
-    """utf-8 data buffer plus int32 byte offsets (Arrow's ``string``)."""
-    encoded = [v.encode() for v in values]
-    offsets = array.array("i", itertools.accumulate(map(len, encoded), initial=0))
-    return pa.Array.from_buffers(
-        pa.string(), len(encoded), [None, pa.py_buffer(offsets), pa.py_buffer(b"".join(encoded))]
-    )
 
 
 # the key columns every model seam passes through, cast to the types the
@@ -211,15 +187,15 @@ def score_mention_batch(
             surfaces.append(text[s:e])
             labels.append(lab)
             scores.append(float(sc))
-    keys = rb.select(_KEYS).take(_int32_array(rows))
+    keys = rb.select(_KEYS).take(int32_array(rows))
     return pa.RecordBatch.from_arrays(
         [
             *keys.columns,
-            _int32_array(starts),
-            _int32_array(ends),
-            _utf8_array(surfaces),
-            _utf8_array(labels),
-            _float64_array(scores),
+            int32_array(starts),
+            int32_array(ends),
+            utf8_array(surfaces),
+            utf8_array(labels),
+            float64_array(scores),
         ],
         schema=_MENTION_ARROW,
     )
@@ -325,8 +301,8 @@ def classify_batch(
     return pa.RecordBatch.from_arrays(
         [
             *rb.select(_KEYS).columns,
-            _utf8_array(c for c, _ in preds),
-            _float64_array(float(s) for _, s in preds),
+            utf8_array(c for c, _ in preds),
+            float64_array(float(s) for _, s in preds),
         ],
         schema=_CLASSIFY_ARROW,
     )

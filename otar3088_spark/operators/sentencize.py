@@ -19,8 +19,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from otar3088_spark.functions.text import (
-    clean_text_expr,
-    is_header_expr,
+    clean_text_sql,
+    is_header_sql,
     offsets_sql,
     sentence_split_sql,
 )
@@ -43,32 +43,36 @@ def normalize_turns(
     conv-level skew because downstream stages never need conv-locality until
     the final groupBys (which re-shuffle on their own keys anyway).
     """
+    # Every expression below is SQL text: PySpark 4.1's F.lit, and with it
+    # Column & / | and element_at, imports pyspark.testing (and so pandas)
+    # into the driver on first call.
+    #
     # turn_idx too: it is half the dedup/join key — NULL-keyed rows would
     # collapse into ONE group here (groupBy treats NULL keys as equal,
     # silently dropping distinct turns) and the survivor could never match
     # an equi-join on turn_idx downstream anyway
-    filtered = transcripts.filter(
-        F.col("text").isNotNull()
-        & F.col("conv_id").isNotNull()
-        & F.col("turn_idx").isNotNull()
+    filtered = transcripts.where(
+        "(text IS NOT NULL AND conv_id IS NOT NULL) AND turn_idx IS NOT NULL"
     )
     # header filter before the dedup aggregate so header rows never enter
     # the shuffle
-    filtered = filtered.filter(~is_header_expr(F.col("text")))
+    filtered = filtered.where(f"NOT ({is_header_sql('text')})")
     # key-dedup via collect_list+element_at rather than dropDuplicates:
     # dropDuplicates keeps whole rows with First() aggregates, and string
     # buffers force SortAggregate (full sort of every partition). collect_list
     # is TypedImperative -> ObjectHashAggregate: hash-based, no sort, same
     # any-row-wins semantics (duplicates are identical rows in this corpus).
-    payload = [c for c in filtered.columns if c not in ("conv_id", "turn_idx")]
+    payload = ", ".join(
+        f"`{c}`" for c in filtered.columns if c not in ("conv_id", "turn_idx")
+    )
     df = (
         filtered.groupBy("conv_id", "turn_idx")
-        .agg(F.element_at(F.collect_list(F.struct(*payload)), 1).alias("_r"))
+        .agg(F.expr(f"element_at(collect_list(struct({payload})), 1)").alias("_r"))
         .select("conv_id", "turn_idx", "_r.*")
     )
     if salt_partitions:
         df = df.repartition(salt_partitions, "conv_id", "turn_idx")
-    return df.withColumn("clean_text", clean_text_expr(F.col("text")))
+    return df.withColumn("clean_text", F.expr(clean_text_sql("text")))
 
 
 def sentencize(normalized: DataFrame) -> DataFrame:

@@ -45,11 +45,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from otar3088_spark.arrow import arrow_dataframe, int32_array
 from otar3088_spark.functions.text import (
     sql_str,
     sql_str_array,
     destem_sql,
-    let_expr,
+    let_sql,
     norm_key_sql,
     offsets_sql,
     token_core_sql,
@@ -231,25 +232,26 @@ class PreparedDictionary:
             .selectExpr("*", "CAST(size(nd_tokens) AS INT) AS n")
             .selectExpr("*", f"{allowed} AS allowed")
         )
-        pair_with = lambda f1: F.transform(  # noqa: E731
-            F.element_at(F.col("allowed"), 2), lambda f2: F.concat(f1, F.lit(" "), f2)
+        # the (first, second) pair keys of the first-position form ``f1``
+        # (SQL text, like every expression of this plan)
+        pair_keys = lambda f1: (  # noqa: E731
+            f"transform(element_at(allowed, 2), f2 -> concat({f1}, ' ', f2))"
         )
         if bigram_anchor:
-            anchor_keys = F.when(
-                F.col("n") >= 2,
-                F.flatten(F.transform(F.element_at("allowed", 1), pair_with)),
-            ).otherwise(F.element_at("allowed", 1))
-            d0 = d_norm.withColumn("first_tok", F.explode(anchor_keys))
+            d0 = d_norm.selectExpr(
+                "*",
+                "explode(CASE WHEN n >= 2 THEN flatten(transform(element_at(allowed, 1),"
+                f" f1 -> {pair_keys('f1')})) ELSE element_at(allowed, 1) END) AS first_tok",
+            )
         elif oversized:
             d0 = (
-                d_norm.withColumn("f1", F.explode(F.element_at("allowed", 1)))
-                .withColumn(
-                    "_keys",
-                    F.when(
-                        (F.col("n") >= 2) & F.col("f1").isin(oversized), pair_with(F.col("f1"))
-                    ).otherwise(F.array(F.col("f1"))),
+                d_norm.selectExpr("*", "explode(element_at(allowed, 1)) AS f1")
+                .selectExpr(
+                    "*",
+                    f"CASE WHEN n >= 2 AND f1 IN ({', '.join(map(sql_str, oversized))})"
+                    f" THEN {pair_keys('f1')} ELSE array(f1) END AS _keys",
                 )
-                .withColumn("first_tok", F.explode("_keys"))
+                .selectExpr("*", "explode(_keys) AS first_tok")
                 .drop("f1", "_keys")
             )
         else:
@@ -287,15 +289,21 @@ class PreparedDictionary:
 
         # the clusters go to the JVM as an Arrow table: a Python list would
         # be pickled through a PythonRDD, the only Python worker the
-        # gazetteer path would start
+        # gazetteer path would start. Both columns are taken from the
+        # collected ent_id column by row index, so no Python value is
+        # converted back to Arrow (that would import pandas).
         key_type = prepared.schema["ent_id"].dataType
         pairs = alias_clusters(zip(ent_ids, tbl.column("akey").to_pylist()))
-        arrow_key = tbl.schema.field("ent_id").type
-        clusters = prepared.sparkSession.createDataFrame(
+        row_of: dict = {}
+        for i, e in enumerate(ent_ids):
+            row_of.setdefault(e, i)
+        ids = tbl.column("ent_id")
+        clusters = arrow_dataframe(
+            prepared.sparkSession,
             pa.table(
                 {
-                    "ent_id": pa.array([e for e, _ in pairs], arrow_key),
-                    "cluster_id": pa.array([c for _, c in pairs], arrow_key),
+                    "ent_id": ids.take(int32_array(row_of[e] for e, _ in pairs)),
+                    "cluster_id": ids.take(int32_array(row_of[c] for _, c in pairs)),
                 }
             ),
             T.StructType(
@@ -531,57 +539,36 @@ def _tag_with_dim(
         # runs on the rare head positions instead of every token (the
         # r5-r6 shape built a 2-struct array + concat per token: 2x
         # exploded rows and the whole-battery gap between the bigram and
-        # unigram queries). The keys array is bound as a lambda variable so
-        # the next-token lookup does not re-derive it per element.
-        pair_structs = let_expr(
-            F.expr(sent_keys),
-            lambda ks: F.filter(
-                F.transform(
-                    ks,
-                    lambda k, i: F.when(
-                        k.isin(heads)
-                        & F.try_element_at(ks, i + 2).isNotNull(),
-                        F.struct(
-                            i.alias("pos0"),
-                            F.concat(
-                                k, F.lit(" "), F.try_element_at(ks, i + 2)
-                            ).alias("key"),
-                        ),
-                    ),
-                ),
-                lambda s: s.isNotNull(),
-            ),
+        # unigram queries). The keys array is bound as a lambda variable
+        # (``let_sql``) so the next-token lookup does not re-derive it per
+        # element.
+        pair_structs = let_sql(
+            sent_keys,
+            "ks",
+            "filter(transform(ks, (k, i) -> CASE WHEN"
+            f" k IN ({', '.join(map(sql_str, heads))})"
+            " AND try_element_at(ks, i + 2) IS NOT NULL THEN struct(i AS pos0,"
+            " concat(k, ' ', try_element_at(ks, i + 2)) AS key) END), s -> s IS NOT NULL)",
         )
-        pair_keyed = sentences.select(
-            *key3, F.explode(pair_structs).alias("_s")
-        ).select(*key3, F.col("_s.pos0").alias("pos0"), F.col("_s.key").alias("key"))
+        pair_keyed = sentences.selectExpr(*key3, f"explode({pair_structs}) AS _s").selectExpr(
+            *key3, "_s.pos0 AS pos0", "_s.key AS key"
+        )
         keyed = uni_keyed.unionByName(pair_keyed)
     elif bigram_anchor and heads is None:
         # no plan-time IN-set (dictionary above the prefilter cap): emit the
         # unigram AND pair key for every position — the broadcast hash join
         # prunes non-anchors one stage later
-        sent2 = sentences.selectExpr(*key3, f"{sent_keys} AS _keys")
-        nxt = lambda i: F.try_element_at(F.col("_keys"), i + 2)  # noqa: E731
-        cand_keys = F.filter(
-            F.flatten(
-                F.transform(
-                    F.col("_keys"),
-                    lambda k, i: F.array(
-                        F.struct(i.alias("pos0"), k.alias("key")),
-                        F.struct(
-                            i.alias("pos0"),
-                            F.when(
-                                nxt(i).isNotNull(),
-                                F.concat(k, F.lit(" "), nxt(i)),
-                            ).alias("key"),
-                        ),
-                    ),
-                )
-            ),
-            lambda s: s["key"].isNotNull(),
-        )
-        keyed = sent2.select(*key3, F.explode(cand_keys).alias("_s")).select(
-            *key3, F.col("_s.pos0").alias("pos0"), F.col("_s.key").alias("key")
+        keyed = (
+            sentences.selectExpr(*key3, f"{sent_keys} AS _keys")
+            .selectExpr(
+                *key3,
+                "explode(filter(flatten(transform(_keys, (k, i) -> array("
+                "struct(i AS pos0, k AS key), struct(i AS pos0, CASE WHEN"
+                " try_element_at(_keys, i + 2) IS NOT NULL THEN"
+                " concat(k, ' ', try_element_at(_keys, i + 2)) END AS key)))),"
+                " s -> s.key IS NOT NULL)) AS _s",
+            )
+            .selectExpr(*key3, "_s.pos0 AS pos0", "_s.key AS key")
         )
     else:
         # bigram_anchor with an empty pair-head set degenerates to the plain
@@ -699,10 +686,6 @@ def _tag_with_dim(
     # span rules (_dedup_homonyms, _keep_longest, token_core_sql,
     # offsets_sql) have one form, shared with the fold path and
     # drop_contained; ``c`` is the candidate struct.
-    def let(val: str, var: str, body: str) -> str:
-        # functions/text.py let_expr as SQL text
-        return f"element_at(transform(array({val}), {var} -> {body}), 1)"
-
     # n == 1 fast path (round 7): single-token candidates — the bulk of
     # reference gazetteers AND half of this battery's dictionary — are fully
     # proven by the anchor join (empty validation tail, see _atail in
@@ -761,8 +744,10 @@ def _tag_with_dim(
         " AS surface) END END"
     )
     valid = f"array_distinct(filter(transform(_cands, c -> {span}), s -> s IS NOT NULL))"
-    kept = let(valid, "a", let(_dedup_homonyms("a"), "dd", _keep_longest("dd")))
-    final = let("split(sent_text, ' ')", "toks", let(offsets_sql("toks"), "starts", kept))
+    kept = let_sql(valid, "a", let_sql(_dedup_homonyms("a"), "dd", _keep_longest("dd")))
+    final = let_sql(
+        "split(sent_text, ' ')", "toks", let_sql(offsets_sql("toks"), "starts", kept)
+    )
     if grouped_output:
         # one row per matched sentence, span structs still in their array —
         # for consumers that would otherwise explode and immediately

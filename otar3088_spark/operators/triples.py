@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from otar3088_spark.functions.text import sql_str
+
 TRIPLE_COLS = ("subj", "pred", "obj", "conv_id", "turn_idx", "span_start", "span_end")
 
 _EVENT_SCHEMA = T.StructType(
@@ -94,29 +96,26 @@ def causes_triples(events: DataFrame) -> DataFrame:
     pass through silently (PHEE_datagen.ipynb cell 3 malformed-case rule).
     ``from_json`` replaces the reference's per-row ``json.loads``.
     """
-    parsed = events.filter(F.col("event_type") == "Adverse_event").withColumn(
-        "ev", F.from_json(F.col("event_data"), _EVENT_SCHEMA)
-    )
-    ok = parsed.filter(
-        F.col("ev.subject.Drug").isNotNull() & F.col("ev.Effect.text").isNotNull()
-    )
     # one row per (triple, turn): min span_start makes the survivor
     # DETERMINISTIC — dropDuplicates on a key subset keeps whichever row a
     # task sees first, so the surviving span_start would vary with
     # partitioning/run order (mention_triples dedups on all TRIPLE_COLS for
     # the same reason)
     return (
-        ok.select(
-            F.col("ev.subject.Drug").alias("subj"),
-            F.lit("causes").alias("pred"),
-            F.col("ev.Effect.text").alias("obj"),
-            F.col("conv_id"),
-            F.col("turn_idx").cast("int").alias("turn_idx"),
-            F.col("ev.Effect.start").cast("int").alias("span_start"),
+        events.where("event_type = 'Adverse_event'")
+        .withColumn("ev", F.expr(f"from_json(event_data, {sql_str(_EVENT_SCHEMA.simpleString())})"))
+        .where("ev.subject.Drug IS NOT NULL AND ev.Effect.text IS NOT NULL")
+        .selectExpr(
+            "ev.subject.Drug AS subj",
+            "'causes' AS pred",
+            "ev.Effect.text AS obj",
+            "conv_id",
+            "CAST(turn_idx AS INT) AS turn_idx",
+            "CAST(ev.Effect.start AS INT) AS span_start",
         )
         .groupBy("subj", "pred", "obj", "conv_id", "turn_idx")
-        .agg(F.min("span_start").alias("span_start"))
-        .withColumn("span_end", F.lit(None).cast("int"))
+        .agg(F.expr("min(span_start)").alias("span_start"))
+        .selectExpr("*", "CAST(NULL AS INT) AS span_end")
     )
 
 

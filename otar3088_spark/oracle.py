@@ -15,11 +15,12 @@ import re
 
 import pandas as pd
 
-# pure DATA constants shared with the engine (no Spark logic): the label
-# priority order and the F8 irregular-plural table. The oracle's
+# pure DATA constants shared with the engine (no Spark logic is used): the
+# label priority order (defined by the rule's owner, canonicalize) and the
+# F8 irregular-plural table. The oracle's
 # implementation remains fully independent of the Spark side.
 from otar3088_spark.functions.lemma_data import IRREGULAR_PLURALS
-from otar3088_spark.synth import LABEL_PRIORITY
+from otar3088_spark.operators.canonicalize import LABEL_PRIORITY
 
 GENERIC_WORDS = {"cell", "cells", "line", "lines", "tissue", "tissues"}
 REDLIST = re.compile(r"(?:genesis|cytic|ial|yal)$")

@@ -362,10 +362,12 @@ def _doc_dict_df(spark: SparkSession) -> DataFrame:
     start a Python worker to read eight constant rows."""
     import pyarrow as pa
 
+    from otar3088_spark.arrow import arrow_dataframe, utf8_array
+
     names = ["ent_id", "term", "label"]
-    table = pa.table({c: pa.array(col, pa.string()) for c, col in zip(names, zip(*DOC_DICT))})
+    table = pa.table({c: utf8_array(col) for c, col in zip(names, zip(*DOC_DICT))})
     schema = T.StructType([T.StructField(c, T.StringType()) for c in names])
-    return spark.createDataFrame(table, schema).withColumn("canonical_id", F.col("ent_id"))
+    return arrow_dataframe(spark, table, schema).withColumn("canonical_id", F.col("ent_id"))
 
 
 def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

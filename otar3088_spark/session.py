@@ -10,8 +10,40 @@ on a cluster. Locally everything runs in one JVM (``local[N]``).
 from __future__ import annotations
 
 import os
+import sys
 
+from py4j import protocol as _py4j_protocol
 from pyspark.sql import SparkSession
+from pyspark.sql.types import NumpyArrayConverter, NumpyScalarConverter
+
+
+# py4j runs every input converter's ``can_convert`` on every argument of
+# every py4j call. PySpark 4.1's two numpy converters answer it by running
+# ``from pyspark.testing.utils import have_numpy``, whose module imports
+# unittest and pandas (about 32 MB of the driver, which no KG build uses);
+# the first call is inside SparkContext init. An object can only be a numpy
+# instance if numpy is already imported, so these subclasses ask
+# ``sys.modules`` instead and give the same answer; conversion is PySpark's.
+class _LeanNumpyScalarConverter(NumpyScalarConverter):
+    def can_convert(self, obj) -> bool:
+        np = sys.modules.get("numpy")
+        return np is not None and isinstance(obj, np.generic)
+
+
+class _LeanNumpyArrayConverter(NumpyArrayConverter):
+    def can_convert(self, obj) -> bool:
+        np = sys.modules.get("numpy")
+        return np is not None and isinstance(obj, np.ndarray) and obj.ndim == 1
+
+
+# in place: py4j's gateway clients hold this very list. Matching by base
+# class replaces a lean converter from an earlier import of this module too,
+# so each kind stays in the list exactly once.
+for _i, _conv in enumerate(_py4j_protocol.INPUT_CONVERTER):
+    if isinstance(_conv, NumpyScalarConverter):
+        _py4j_protocol.INPUT_CONVERTER[_i] = _LeanNumpyScalarConverter()
+    elif isinstance(_conv, NumpyArrayConverter):
+        _py4j_protocol.INPUT_CONVERTER[_i] = _LeanNumpyArrayConverter()
 
 # Columns of the canonical input table (BASELINE.json input_hint).
 TRANSCRIPT_COLUMNS = ("conv_id", "turn_idx", "role", "text", "tool", "ts")

@@ -24,11 +24,9 @@ import json
 import numpy as np
 import pandas as pd
 
-SEED = 42
+from otar3088_spark.operators.canonicalize import LABEL_PRIORITY  # noqa: F401
 
-# Label priority for canonicalization tie-breaks (cellfinder_clean.ipynb cell 16:
-# CellLine > Anatomy > CellType; extended for our label set).
-LABEL_PRIORITY = ["CellLine", "Anatomy", "CellType", "Tissue", "Drug", "AdverseEvent"]
+SEED = 42
 
 FILLER = (
     "the study shows that results were observed in patients and controls "

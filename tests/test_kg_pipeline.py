@@ -12,7 +12,7 @@ from otar3088_spark.plans.kg_pipeline import build_kg, validate_alignment
 
 
 def test_clean_text_expr_matches_oracle(spark):
-    from otar3088_spark.functions.text import clean_text_expr
+    from otar3088_spark.functions.text import clean_text_sql
 
     samples = [
         "plain text here.",
@@ -22,9 +22,52 @@ def test_clean_text_expr_matches_oracle(spark):
         "keep [brackets] without digits [a1].",
     ]
     df = spark.createDataFrame([(s,) for s in samples], ["text"])
-    got = [r[0] for r in df.select(clean_text_expr(F.col("text"))).collect()]
+    got = [r[0] for r in df.selectExpr(clean_text_sql("text")).collect()]
     want = [oracle.clean_text(s) for s in samples]
     assert got == want
+
+
+def test_p0_sql_text_matches_column_forms(spark):
+    """``is_header_sql``/``clean_text_sql`` give, row for row, what their
+    earlier Column-API forms (restated here) gave on rows planted at the
+    edges of each rule."""
+    from otar3088_spark.functions.text import (
+        _CITATION,
+        _HEADER_TITLES,
+        _LATEX_CMD,
+        _LATEX_GROUP,
+        clean_text_sql,
+        is_header_sql,
+    )
+
+    def clean_text_column(col):
+        for pattern in (_LATEX_GROUP, _LATEX_CMD, _CITATION, r"\s+"):
+            col = F.regexp_replace(col, pattern, " ")
+        return F.trim(col)
+
+    def is_header_column(col):
+        low = F.lower(F.trim(col))
+        return low.rlike(rf"^({_HEADER_TITLES})$") | low.rlike(r"^pmc[0-9]+$")
+
+    titles = _HEADER_TITLES.split("|")
+    rows = [f"  {t.title()}  " for t in titles] + [t.upper() for t in titles] + [
+        "PMC123", " pmc ", "pmc", "PMC12a", "abstracts", "the abstract", "Abstract\t", "",
+        "{\\it a {nested} group} stays \\textbf{bold}",
+        "\\alpha\\beta cmds [1, 2] and [3] and [4 ,5] but [a1] [1,] []",
+        "runs \t of\n\n whitespace   here ",
+        "Results. {\\em x} HeLa [12,  13] cells",
+    ]
+    df = spark.createDataFrame([(i, r) for i, r in enumerate(rows)], "i INT, text STRING")
+    got = df.selectExpr(
+        "i", f"{is_header_sql('text')} AS h", f"{clean_text_sql('text')} AS c"
+    ).orderBy("i").collect()
+    want = df.select(
+        "i", is_header_column(F.col("text")).alias("h"), clean_text_column(F.col("text")).alias("c")
+    ).orderBy("i").collect()
+    assert [tuple(r) for r in got] == [tuple(r) for r in want]
+    # the planted rows reach both outcomes of the header rule
+    assert {r.h for r in got} == {True, False}
+    assert sum(r.h for r in got) == 2 * len(titles) + 1
 
 
 def test_sentencize_offsets_are_exact(spark, transcripts_df):

@@ -305,7 +305,7 @@ def test_model_classify_deterministic(spark):
 
 
 def test_strip_xml_expr(spark):
-    from otar3088_spark.functions.text import strip_xml_expr
+    from otar3088_spark.functions.text import strip_xml_sql
 
     xml = (
         "<article><fig-count count=\"2\"/><body><sec><title>Results</title>"
@@ -319,7 +319,7 @@ def test_strip_xml_expr(spark):
         "<ref-list><ref>ignored</ref></ref-list></body></article>"
     )
     df = spark.createDataFrame([(xml,)], ["raw"])
-    got = df.select(strip_xml_expr(F.col("raw")).alias("t")).collect()[0]["t"]
+    got = df.selectExpr(f"{strip_xml_sql('raw')} AS t").collect()[0]["t"]
     assert got == "Results HeLa cells grew fast. Second sentence here."
 
 

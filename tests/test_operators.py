@@ -179,16 +179,16 @@ def test_model_mentions_deterministic_and_merged(spark, sent_df):
 _SCORING_WORKER = """
 import json, sys
 import pyarrow as pa
+from otar3088_spark.arrow import int32_array, utf8_array
 from otar3088_spark.operators.inference import (
-    _int32_array, _stand_in_classifier, _stand_in_scorer, _utf8_array,
-    classify_batch, score_mention_batch,
+    _stand_in_classifier, _stand_in_scorer, classify_batch, score_mention_batch,
 )
 texts = [
     "patients receiving aspirin reported headache nausea fatigue dizziness",
     "naïve café staff in 北京",
 ]
 rb = pa.RecordBatch.from_arrays(
-    [_utf8_array(["c0", "c1"]), _int32_array([0, 3]), _int32_array([1, 2]), _utf8_array(texts)],
+    [utf8_array(["c0", "c1"]), int32_array([0, 3]), int32_array([1, 2]), utf8_array(texts)],
     names=["conv_id", "turn_idx", "sent_idx", "sent_text"],
 )
 mentions = score_mention_batch(rb, _stand_in_scorer)
@@ -233,10 +233,9 @@ def test_model_mentions_replay_multibyte_long_keys(spark):
     from pyspark.sql import types as T
     from pyspark.sql.pandas.types import to_arrow_schema
 
+    from otar3088_spark.arrow import int32_array, utf8_array
     from otar3088_spark.operators.inference import (
         MENTION_SCHEMA,
-        _int32_array,
-        _utf8_array,
         model_mentions,
         score_mention_batch,
     )
@@ -290,7 +289,7 @@ def test_model_mentions_replay_multibyte_long_keys(spark):
     no_spans = sents.where("sent_idx = 2")
     assert model_mentions(no_spans, scorer=replay_scorer, batch_key="replay-multibyte").count() == 0
     rb = pa.RecordBatch.from_arrays(
-        [_utf8_array(["c0"]), _int32_array([7]), _int32_array([2]), _utf8_array([texts[2]])],
+        [utf8_array(["c0"]), int32_array([7]), int32_array([2]), utf8_array([texts[2]])],
         names=["conv_id", "turn_idx", "sent_idx", "sent_text"],
     )
     empty = score_mention_batch(rb, replay_scorer)

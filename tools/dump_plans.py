@@ -59,7 +59,9 @@ def normalized_plan(df, root: str) -> str:
 def dump_normalized(out_dir: str, sf: str) -> None:
     """Write the normalized optimized plans (module docstring) into
     ``out_dir``, one ``<name>.txt`` per plan."""
-    spark = get_spark(cores=2)
+    # plan strings are cut after spark.sql.debug.maxToStringFields (25)
+    # fields ("... 55 more fields"), which would hide a difference there
+    spark = get_spark(cores=2, extra_conf={"spark.sql.debug.maxToStringFields": "100000"})
     from otar3088_spark.plans.kg_pipeline import build_kg
     from otar3088_spark.queries import KG_FIXTURE_DIR, QUERIES
 
