@@ -33,7 +33,10 @@ the span-snapshot write, then the three output writes. Nothing else runs a
 job: the snapshot's stage name hashes the collected dictionary rows, the
 snapshot is read back with the schema its manifest stores, and the output
 counts of a local directory are summed from the written files' parquet
-footers (a Spark count for tables and non-local paths). The triple table
+footers, read in Python (a Spark count for tables and non-local paths).
+The dictionary arrives as plain rows and the alias clusters go back to the
+JVM as one JSON value, so without ``--use-model`` the driver loads neither
+pandas nor pyarrow and starts no Python worker. The triple table
 feeds all three outputs, so it is persisted once, written from the cache,
 and the node and edge tables are derived from that persisted frame instead
 of recomputing the triple tail; the cache is dropped before ``main``

@@ -10,8 +10,9 @@ committed (manifest present, data immutable) or ignored — re-running a
 pipeline skips committed stages and recomputes the rest, which is exactly the
 Iceberg-snapshot resume semantics at the granularity we checkpoint.
 
-Lineage: row counts per written file, read from the parquet footers (a Spark
-aggregation only on non-local paths), are stored in the manifest — the
+Lineage: row counts per written file, read from the parquet footers by a
+pure-Python Thrift reader (:func:`parquet_num_rows`; a Spark aggregation
+only on non-local paths), are stored in the manifest — the
 per-partition lineage rows the north rule asks for, without a second scan.
 The manifest also stores the read-back schema, so a committed stage is read
 without schema inference.
@@ -44,6 +45,93 @@ def _as_nullable(dt: T.DataType) -> T.DataType:
     if isinstance(dt, T.MapType):
         return T.MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
     return dt
+
+
+_PAR1 = b"PAR1"
+
+
+def parquet_num_rows(path: str) -> int:
+    """``FileMetaData.num_rows`` of a local parquet file, read from its
+    footer: ``<metadata> <4-byte little-endian length> PAR1`` at the end
+    of the file, the metadata a Thrift compact-protocol struct whose field
+    3 is the row count (after field 2, the schema, which is skipped).
+
+    Raises ``ValueError`` on a file without the ``PAR1`` magic at both
+    ends (not parquet, truncated, or an encrypted footer) and on a footer
+    that ends before field 3."""
+    with open(path, "rb") as f:
+        size = f.seek(0, os.SEEK_END)
+        f.seek(0)
+        head = f.read(4)
+        f.seek(max(size - 8, 0))
+        tail = f.read(8)
+        meta_len = int.from_bytes(tail[:4], "little")
+        if size < 12 or head != _PAR1 or tail[4:] != _PAR1 or meta_len > size - 12:
+            raise ValueError(f"{path}: not a complete parquet file (no PAR1 footer)")
+        f.seek(size - 8 - meta_len)
+        buf = f.read(meta_len)
+    pos = 0
+
+    def byte() -> int:
+        nonlocal pos
+        pos += 1
+        return buf[pos - 1]
+
+    def varint() -> int:
+        out = shift = 0
+        while (b := byte()) & 0x80:
+            out |= (b & 0x7F) << shift
+            shift += 7
+        return out | (b << shift)
+
+    def zigzag() -> int:
+        n = varint()
+        return (n >> 1) ^ -(n & 1)
+
+    def fields():
+        """(field id, type) headers of one struct, up to its STOP byte."""
+        fid = 0
+        while h := byte():
+            fid = fid + (h >> 4) if h >> 4 else zigzag()
+            yield fid, h & 0x0F
+
+    def skip(t: int, in_field: bool = True) -> None:
+        nonlocal pos
+        if t in (1, 2):  # bool: in the field header, one byte in a collection
+            pos += 0 if in_field else 1
+        elif t == 3:  # i8
+            pos += 1
+        elif t in (4, 5, 6):  # i16 / i32 / i64 varints
+            varint()
+        elif t == 7:  # double
+            pos += 8
+        elif t == 8:  # binary / string (read the length before moving pos)
+            n = varint()
+            pos += n
+        elif t in (9, 10):  # list / set: size nibble (15 = varint follows) + type
+            h = byte()
+            for _ in range(h >> 4 if h >> 4 != 15 else varint()):
+                skip(h & 0x0F, False)
+        elif t == 11:  # map: varint size, then one key/value type byte
+            n = varint()
+            kv = byte() if n else 0
+            for _ in range(n):
+                skip(kv >> 4, False)
+                skip(kv & 0x0F, False)
+        elif t == 12:
+            for _, ft in fields():
+                skip(ft)
+        else:
+            raise ValueError(f"{path}: unknown Thrift compact type {t} in the footer")
+
+    try:
+        for fid, t in fields():
+            if fid == 3 and t == 6:
+                return zigzag()
+            skip(t)
+    except IndexError:
+        pass
+    raise ValueError(f"{path}: parquet footer has no num_rows field")
 
 
 class SnapshotStore:
@@ -114,21 +202,15 @@ class SnapshotStore:
         sum over files).
 
         Fast path: local directories read ONLY the parquet footers
-        (pyarrow metadata — KBs per file), because the row count per file
-        is already durable parquet metadata — no Spark job, no re-scan of
-        the written data. Non-local paths (e.g. object stores under a real
-        cluster) keep the Spark aggregation fallback. Identical content
-        either way — same files, same counts."""
+        (:func:`parquet_num_rows` — KBs per file), because the row count
+        per file is already durable parquet metadata — no Spark job, no
+        re-scan of the written data. Non-local paths (e.g. object stores
+        under a real cluster) keep the Spark aggregation fallback. Identical
+        content either way — same files, same counts."""
         if os.path.isdir(data_dir):
-            import pyarrow.parquet as pq
-
             return sorted(
                 (
-                    {
-                        "file": fname,
-                        "rows": pq.ParquetFile(os.path.join(data_dir, fname))
-                        .metadata.num_rows,
-                    }
+                    {"file": fname, "rows": parquet_num_rows(os.path.join(data_dir, fname))}
                     for fname in os.listdir(data_dir)
                     if fname.endswith(".parquet")
                 ),

@@ -25,6 +25,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.udf import UserDefinedFunction
+from pyspark.util import PythonEvalType
 
 from otar3088_spark.arrow import float64_array, int32_array, utf8_array
 
@@ -124,7 +126,14 @@ def _map_sentences(
             if rb.num_rows:
                 yield batch_fn(rb, model)
 
-    return sentences.selectExpr(*_SEAM_INPUT).mapInArrow(run, schema=schema)
+    # What DataFrame.mapInArrow does in PySpark 4.1.2, minus its pandas_udf
+    # wrapper: that runs require_minimum_pandas_version, which imports
+    # pandas into the driver (pyspark/sql/pandas/map_ops.py). The plan node
+    # is the same MapInArrow.
+    seam = sentences.selectExpr(*_SEAM_INPUT)
+    udf = UserDefinedFunction(run, schema, evalType=PythonEvalType.SQL_MAP_ARROW_ITER_UDF)
+    col = udf(*[seam[c] for c in seam.columns])
+    return DataFrame(seam._jdf.mapInArrow(col._jc, False, None), seam.sparkSession)
 
 
 def _stand_in_scorer(sentences: Sequence[str]) -> list[list[tuple[int, int, str, float]]]:

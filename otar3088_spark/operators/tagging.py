@@ -45,7 +45,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from otar3088_spark.arrow import arrow_dataframe, int32_array
 from otar3088_spark.functions.text import (
     sql_str,
     sql_str_array,
@@ -57,6 +56,7 @@ from otar3088_spark.functions.text import (
     token_lead_sql,
 )
 from otar3088_spark.operators.canonicalize import alias_clusters, alias_key_sql
+from otar3088_spark.session import constant_dataframe
 
 # P7 red-list: Anatomy terms with these suffixes are dictionary noise
 # (cellfinder_clean.ipynb cell 8).
@@ -114,8 +114,8 @@ class PreparedDictionary:
     * ``pair_mode`` — whether any ``d0`` row keys on a (first, second) pair,
       i.e. whether the corpus side must emit pair keys;
     * ``clusters`` — ``(ent_id, cluster_id)`` alias clusters, a DataFrame
-      over a driver-side Arrow table (no checkpointed lineage to lose, no
-      Python worker to read it);
+      over one driver-built JSON value (``session.constant_dataframe``: no
+      checkpointed lineage to lose, no Python worker to read it);
     * ``digest`` — an order-insensitive hash of the collected rows at the
       prepared grain ``(ent_id, label, term, term_tokens)``, the dictionary
       part of the span-stage fingerprint.
@@ -141,12 +141,10 @@ class PreparedDictionary:
         bigram_anchor: bool | None = None,
     ) -> PreparedDictionary:
         """Build the value from a ``prepare_dictionary`` DataFrame with ONE
-        Spark action (the Arrow collect below). ``bigram_anchor`` is
+        Spark action (the collect below). ``bigram_anchor`` is
         ``tag_mentions``'s option: it changes the candidate blocking, never
         which spans are found. Whether the anchor IN-set is kept follows
         from the dictionary's size (``MAX_PREFILTER_TERMS``)."""
-        import pyarrow as pa
-
         ov = dict(lemma_overrides or {})
         # --- dictionary-side normalization + preimage enumeration ------------
         # Every dictionary token is normalized with the FULL lemma function;
@@ -180,8 +178,8 @@ class PreparedDictionary:
         # grain of d_norm: two terms of one group can carry different alias
         # keys ("mice model" / "mouse model"), and the clusters need both.
         # Normalization stays in Spark (no Python twin of norm_key_sql or
-        # alias_key_sql); Arrow keeps the transfer columnar.
-        tbl = normed.selectExpr(
+        # alias_key_sql). Plain rows: array columns arrive as Python lists.
+        rows = normed.selectExpr(
             "ent_id",
             "label",
             "term",
@@ -189,22 +187,13 @@ class PreparedDictionary:
             "nd_tokens",
             f"{allowed} AS allowed",
             f"{alias_key_sql('term')} AS akey",
-        ).toArrow()
-        ent_ids = tbl.column("ent_id").to_pylist()
+        ).collect()
         # order-insensitive digest of the prepared grain (ent_id, label, term,
         # term_tokens): everything below is a function of these rows, ``ov``
         # and ``bigram_anchor`` (kg_pipeline._span_stage_fingerprint)
-        grain = zip(ent_ids, *(tbl.column(c).to_pylist() for c in ("label", "term", "term_tokens")))
+        grain = (r[:4] for r in rows)
         digest = hashlib.sha1("\n".join(sorted(map(repr, grain))).encode()).hexdigest()
-        groups = {
-            (e, lab, tuple(nd)): al
-            for e, lab, nd, al in zip(
-                ent_ids,
-                tbl.column("label").to_pylist(),
-                tbl.column("nd_tokens").to_pylist(),
-                tbl.column("allowed").to_pylist(),
-            )
-        }
+        groups = {(e, lab, tuple(nd)): al for e, lab, _, _, nd, al, _ in rows}
 
         # --- anchor-mode resolution (auto skew detection) --------------------
         # AUTO: count n>=2 terms per first-position allowed surface form;
@@ -287,25 +276,16 @@ class PreparedDictionary:
         }
         anchors = sorted(keys) if len(keys) <= MAX_PREFILTER_TERMS else None
 
-        # the clusters go to the JVM as an Arrow table: a Python list would
-        # be pickled through a PythonRDD, the only Python worker the
-        # gazetteer path would start. Both columns are taken from the
-        # collected ent_id column by row index, so no Python value is
-        # converted back to Arrow (that would import pandas).
+        # the clusters go to the JVM as one JSON value (``constant_dataframe``):
+        # a Python list would be pickled through a PythonRDD, the only Python
+        # worker the gazetteer path would start
         key_type = prepared.schema["ent_id"].dataType
-        pairs = alias_clusters(zip(ent_ids, tbl.column("akey").to_pylist()))
-        row_of: dict = {}
-        for i, e in enumerate(ent_ids):
-            row_of.setdefault(e, i)
-        ids = tbl.column("ent_id")
-        clusters = arrow_dataframe(
+        clusters = constant_dataframe(
             prepared.sparkSession,
-            pa.table(
-                {
-                    "ent_id": ids.take(int32_array(row_of[e] for e, _ in pairs)),
-                    "cluster_id": ids.take(int32_array(row_of[c] for _, c in pairs)),
-                }
-            ),
+            [
+                {"ent_id": e, "cluster_id": c}
+                for e, c in alias_clusters((ent, akey) for ent, *_, akey in rows)
+            ],
             T.StructType(
                 [T.StructField("ent_id", key_type), T.StructField("cluster_id", key_type)]
             ),

@@ -357,17 +357,16 @@ def q_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _doc_dict_df(spark: SparkSession) -> DataFrame:
-    """``DOC_DICT`` as a DataFrame over a driver-side Arrow table: a Python
-    list would be pickled through a PythonRDD, and every execution would
-    start a Python worker to read eight constant rows."""
-    import pyarrow as pa
-
-    from otar3088_spark.arrow import arrow_dataframe, utf8_array
+    """``DOC_DICT`` as a DataFrame over one driver-built JSON value
+    (``session.constant_dataframe``): a Python list would be pickled through
+    a PythonRDD, and every execution would start a Python worker to read
+    eight constant rows."""
+    from otar3088_spark.session import constant_dataframe
 
     names = ["ent_id", "term", "label"]
-    table = pa.table({c: utf8_array(col) for c, col in zip(names, zip(*DOC_DICT))})
     schema = T.StructType([T.StructField(c, T.StringType()) for c in names])
-    return arrow_dataframe(spark, table, schema).withColumn("canonical_id", F.col("ent_id"))
+    rows = [dict(zip(names, r)) for r in DOC_DICT]
+    return constant_dataframe(spark, rows, schema).withColumn("canonical_id", F.col("ent_id"))
 
 
 def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

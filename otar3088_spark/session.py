@@ -9,12 +9,13 @@ on a cluster. Locally everything runs in one JVM (``local[N]``).
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 
 from py4j import protocol as _py4j_protocol
-from pyspark.sql import SparkSession
-from pyspark.sql.types import NumpyArrayConverter, NumpyScalarConverter
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, NumpyArrayConverter, NumpyScalarConverter, StructType
 
 
 # py4j runs every input converter's ``can_convert`` on every argument of
@@ -148,6 +149,26 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def constant_dataframe(spark: SparkSession, rows: list[dict], schema: StructType) -> DataFrame:
+    """``rows`` (dicts keyed by ``schema``'s field names) as a DataFrame
+    with ``schema``, built in the JVM alone: the rows travel as ONE JSON
+    string in a one-row ``LocalRelation`` (the JVM's public
+    ``createDataset(java.util.List, Encoders.STRING())``) and are expanded
+    by ``inline(from_json(...))``. No Python worker reads it, no py4j call
+    is made per row, and the payload is not part of the plan text. A value
+    that does not parse as its field's type fails the query (``FAILFAST``)
+    instead of reading as NULL."""
+    jvm = spark.sparkContext._jvm
+    jds = spark._jsparkSession.createDataset(
+        jvm.java.util.Collections.singletonList(json.dumps(rows)),
+        jvm.org.apache.spark.sql.Encoders.STRING(),
+    )
+    ddl = ArrayType(schema).simpleString()
+    return DataFrame(jds.toDF(), spark).selectExpr(
+        f"inline(from_json(value, '{ddl}', map('mode', 'FAILFAST')))"
+    )
 
 
 def submit_spark(app_name: str = "otar3088-kg") -> SparkSession:

@@ -1,13 +1,18 @@
-"""The driver of a gazetteer KG build loads no pandas.
+"""The driver of a KG build loads no pandas, and a gazetteer driver no
+pyarrow.
 
 pandas, ``pyspark.testing`` and ``unittest`` are about a quarter of the
 gazetteer driver's memory, and no KG build uses them. PySpark 4.1 imports
 them from ``F.lit`` (so also from Column ``&``/``|`` and ``element_at``),
-from its numpy py4j input converters and from ``createDataFrame``.
-``session.py`` replaces the converters, the build path writes its
-expressions as SQL text and hands Arrow tables to the JVM through
-``otar3088_spark.arrow``. Each import check runs in a fresh interpreter,
-so nothing the test process imported can hide an import.
+from its numpy py4j input converters, from ``createDataFrame`` and from
+``DataFrame.mapInArrow``. ``session.py`` replaces the converters, the
+build path writes its expressions as SQL text, hands its constant tables
+to the JVM as JSON (``session.constant_dataframe``) and builds the model
+seam's ``MapInArrow`` node without ``pandas_udf``. pyarrow (about a third
+of what is left) is needed only by the model seam: the gazetteer path
+collects the dictionary as rows and reads parquet footers in Python. Each
+import check runs in a fresh interpreter, so nothing the test process
+imported can hide an import.
 """
 
 from __future__ import annotations
@@ -21,10 +26,11 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
 DRIVER_EXTRAS = ("pandas", "pyspark.testing", "unittest")
+GAZETTEER_EXTRAS = (*DRIVER_EXTRAS, "pyarrow")
 
 _REPORT = f"""
 import json, sys
-print(json.dumps({{m: m in sys.modules for m in {DRIVER_EXTRAS!r}}}))
+print(json.dumps({{m: m in sys.modules for m in {GAZETTEER_EXTRAS!r}}}))
 """
 
 
@@ -54,8 +60,8 @@ def _kg_submit_imports() -> list[str]:
 
 def test_engine_imports_load_no_pandas():
     """Importing the session, the KG plan, the snapshot store and what
-    ``kg_submit`` imports loads none of pandas, pyspark.testing, unittest.
-    No Spark session is started."""
+    ``kg_submit`` imports loads none of pandas, pyspark.testing, unittest,
+    pyarrow. No Spark session is started."""
     imports = _kg_submit_imports()
     assert any("otar3088_spark.plans.kg_pipeline" in line for line in imports)
     code = "\n".join(
@@ -66,7 +72,7 @@ def test_engine_imports_load_no_pandas():
             *imports,
         ]
     ) + _REPORT
-    assert _run(code, timeout=120) == dict.fromkeys(DRIVER_EXTRAS, False)
+    assert _run(code, timeout=120) == dict.fromkeys(GAZETTEER_EXTRAS, False)
 
 
 def test_lean_numpy_converters(spark):
@@ -141,14 +147,14 @@ def test_build_kg_driver_loads_no_pandas(tmp_path, events_pd):
     span snapshot, with every first-position form an oversized group (pair
     anchors), and with an events source — materializes triples, nodes and
     edges, and afterwards the driver has loaded none of pandas,
-    pyspark.testing, unittest."""
+    pyspark.testing, unittest, pyarrow."""
     events = tmp_path / "events.parquet"
     events_pd.to_parquet(events, index=False)
     got = _run(
-        _BUILDS, timeout=600, args=(str(events), str(tmp_path / "staging"), *DRIVER_EXTRAS),
+        _BUILDS, timeout=600, args=(str(events), str(tmp_path / "staging"), *GAZETTEER_EXTRAS),
         env={"SPARK_DRIVER_MEMORY": "1g"},
     )
-    assert got.pop("modules") == dict.fromkeys(DRIVER_EXTRAS, False)
+    assert got.pop("modules") == dict.fromkeys(GAZETTEER_EXTRAS, False)
     plain, pairs, with_events = got["plain"], got["pair_anchors"], got["events"]
     assert all(plain[part] for part in ("triples", "nodes", "edges"))
     # pair anchoring changes the candidate blocking, never the spans
@@ -156,3 +162,39 @@ def test_build_kg_driver_loads_no_pandas(tmp_path, events_pd):
     causes = [t for t in with_events["triples"] if "'causes'" in t]
     assert causes
     assert sorted(plain["triples"] + causes) == with_events["triples"]
+
+
+_MODEL_BUILD = """
+import json, sys
+from otar3088_spark.session import get_spark
+from otar3088_spark.plans.kg_pipeline import build_kg
+from otar3088_spark.queries import KG_FIXTURE_DIR
+
+spark = get_spark(app_name="driver-imports-model", cores=2)
+read = lambda name: spark.read.parquet(str(KG_FIXTURE_DIR / f"{name}.parquet"))
+res = build_kg(read("transcripts"), read("dictionary"), use_model=True)
+got = {"plan": res.spans._jdf.queryExecution().optimizedPlan().toString()}
+for part in ("triples", "nodes", "edges"):
+    got[part] = sorted(repr(tuple(r)) for r in getattr(res, part).collect())
+spark.stop()
+got["modules"] = {m: m in sys.modules for m in sys.argv[1:]}
+print(json.dumps(got))
+"""
+
+
+def test_build_kg_model_driver_loads_no_pandas(spark):
+    """``build_kg(use_model=True)`` over ``fixtures/kg`` scores through a
+    ``MapInArrow`` node and gives the triples, nodes and edges of the same
+    build in this process, and afterwards its driver has loaded none of
+    pandas, pyspark.testing, unittest."""
+    from otar3088_spark.plans.kg_pipeline import build_kg
+    from otar3088_spark.queries import KG_FIXTURE_DIR
+
+    got = _run(_MODEL_BUILD, timeout=600, args=DRIVER_EXTRAS, env={"SPARK_DRIVER_MEMORY": "1g"})
+    assert got.pop("modules") == dict.fromkeys(DRIVER_EXTRAS, False)
+    assert "MapInArrow run(" in got.pop("plan")
+    read = lambda name: spark.read.parquet(str(KG_FIXTURE_DIR / f"{name}.parquet"))  # noqa: E731
+    res = build_kg(read("transcripts"), read("dictionary"), use_model=True)
+    for part in ("triples", "nodes", "edges"):
+        want = sorted(repr(tuple(r)) for r in getattr(res, part).collect())
+        assert want and got[part] == want, part

@@ -800,13 +800,25 @@ def test_span_stage_fingerprint_tracks_prepared_grain(
 
 
 def test_clusters_have_no_python_worker(spark):
-    """The alias clusters reach the JVM as an Arrow table: reading them
-    runs no PythonRDD (a pickled driver list would start a Python worker
-    pool for a handful of rows). Integer entity ids stay integers."""
+    """The alias clusters reach the JVM as one JSON value in a local
+    relation: reading them runs no PythonRDD (a pickled driver list would
+    start a Python worker pool for a handful of rows). Integer entity ids
+    stay integers; string ids with a quote, a backslash and non-ASCII text
+    come back unchanged."""
     from pyspark.sql import types as T
 
     from otar3088_spark.functions.text import IRREGULAR_PLURALS
     from otar3088_spark.operators.tagging import PreparedDictionary
+
+    def clusters(dict_pd):
+        pdict = PreparedDictionary.build(
+            prepare_dictionary(spark.createDataFrame(dict_pd)), IRREGULAR_PLURALS
+        )
+        lineage = pdict.clusters._jdf.queryExecution().toRdd().toDebugString()
+        assert "PythonRDD" not in lineage, lineage
+        got = {(r.ent_id, r.cluster_id) for r in pdict.clusters.collect()}
+        assert got == set(oracle.entity_clusters(dict_pd).items())
+        return pdict.clusters.schema, got
 
     dict_pd = pd.DataFrame(
         [
@@ -817,16 +829,65 @@ def test_clusters_have_no_python_worker(spark):
         ],
         columns=["ent_id", "term", "label"],
     )
-    pdict = PreparedDictionary.build(
-        prepare_dictionary(spark.createDataFrame(dict_pd)), IRREGULAR_PLURALS
-    )
-    lineage = pdict.clusters._jdf.queryExecution().toRdd().toDebugString()
-    assert "PythonRDD" not in lineage, lineage
-    assert pdict.clusters.schema["cluster_id"].dataType == T.LongType()
-    got = {(r.ent_id, r.cluster_id) for r in pdict.clusters.collect()}
+    schema, got = clusters(dict_pd)
+    assert schema["cluster_id"].dataType == T.LongType()
     assert all(isinstance(c, int) for _, c in got)
-    assert got == set(oracle.entity_clusters(dict_pd).items())
     assert got == {(1, 1), (2, 1), (3, 3), (4, 4)}
+
+    quote, backslash, cjk = 'E"1', "E\\2", "É3-北京-\U0001f600"
+    dict_pd = pd.DataFrame(
+        [
+            (quote, "mouse model", "Obj"),
+            (backslash, "Mouse-Model", "Obj"),
+            (cjk, "rat model", "Obj"),
+        ],
+        columns=["ent_id", "term", "label"],
+    )
+    schema, got = clusters(dict_pd)
+    assert schema["ent_id"].dataType == T.StringType()
+    assert got == {(quote, quote), (backslash, quote), (cjk, cjk)}
+
+
+def test_constant_dataframe_types_and_failfast(spark):
+    """``constant_dataframe`` gives the declared schema and values (nested
+    and NULL ones too), zero rows for an empty list, and a query error,
+    not a NULL, for a value that does not parse as its field's type."""
+    import pytest
+    from pyspark.sql import types as T
+
+    from otar3088_spark.session import constant_dataframe
+
+    schema = T.StructType(
+        [
+            T.StructField("k", T.LongType()),
+            T.StructField("s", T.StringType()),
+            T.StructField("xs", T.ArrayType(T.StringType())),
+        ]
+    )
+    rows = [{"k": 2**40, "s": "a'b", "xs": ["x", None]}, {"k": None, "s": None, "xs": []}]
+    df = constant_dataframe(spark, rows, schema)
+    assert df.schema == schema
+    assert [r.asDict() for r in df.collect()] == rows
+    assert constant_dataframe(spark, [], schema).collect() == []
+    bad = constant_dataframe(spark, [{"k": "not a number", "s": "x", "xs": []}], schema)
+    with pytest.raises(Exception, match="(?i)malformed"):
+        bad.collect()
+
+
+def test_fixture_span_stage_names_are_pinned(spark):
+    """The span-stage names of ``fixtures/kg`` (model off and on) are the
+    values the dictionary collect gave when it went through Arrow: a
+    committed staging directory keeps resuming across the change of the
+    collect route."""
+    from otar3088_spark.functions.text import IRREGULAR_PLURALS
+    from otar3088_spark.operators.tagging import PreparedDictionary
+    from otar3088_spark.plans.kg_pipeline import _span_stage_fingerprint
+    from otar3088_spark.queries import KG_FIXTURE_DIR
+
+    dictionary = spark.read.parquet(str(KG_FIXTURE_DIR / "dictionary.parquet"))
+    pdict = PreparedDictionary.build(prepare_dictionary(dictionary), IRREGULAR_PLURALS)
+    assert _span_stage_fingerprint(pdict, False, None, IRREGULAR_PLURALS) == "86ddafb967ba"
+    assert _span_stage_fingerprint(pdict, True, None, IRREGULAR_PLURALS) == "463cd93a44c2"
 
 
 def test_build_kg_failed_snapshot_leaves_no_cache(spark, transcripts_df, dictionary_df, tmp_path):

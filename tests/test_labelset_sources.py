@@ -519,3 +519,64 @@ def test_snapshot_manifest_per_file_lineage(spark, tmp_path):
     for entry in man["partition_lineage"]:
         assert entry["file"] in on_disk
     assert sum(e["rows"] for e in man["partition_lineage"]) == 100
+
+
+def test_parquet_footer_counts_match_spark(spark, tmp_path):
+    """``parquet_num_rows`` reads ``FileMetaData.num_rows`` from the footer
+    in Python. On Spark-written files it agrees, file by file, with a Spark
+    count: nested struct, array and map columns, several row groups (a
+    1 kB ``parquet.block.size``), and an output with zero rows."""
+    import pyarrow.parquet as pq
+
+    from otar3088_spark.io.checkpoint import parquet_num_rows
+
+    nested = spark.range(3000).selectExpr(
+        "id",
+        "named_struct('a', id, 'b', named_struct('c', CAST(id AS STRING),"
+        " 'd', array(id, id * 2))) AS s",
+        "array(named_struct('k', CAST(id AS STRING)), named_struct('k', 'x')) AS arr",
+        "map(CAST(id AS STRING), array(id), 'z', array(-1L)) AS m",
+        "id % 2 = 0 AS flag",
+        "id / 3 AS dbl",
+        "CAST(id AS DECIMAL(20, 2)) AS dec",
+    )
+    nested.repartition(3).write.parquet(str(tmp_path / "nested"))
+    nested.coalesce(1).write.option("parquet.block.size", 1024).parquet(str(tmp_path / "groups"))
+    nested.where("id < 0").write.parquet(str(tmp_path / "empty"))
+
+    totals = {}
+    for case in ("nested", "groups", "empty"):
+        files = sorted((tmp_path / case).glob("*.parquet"))
+        assert files, case
+        for f in files:
+            assert parquet_num_rows(str(f)) == spark.read.parquet(str(f)).count(), f
+        totals[case] = sum(parquet_num_rows(str(f)) for f in files)
+    assert totals == {"nested": 3000, "groups": 3000, "empty": 0}
+    (single,) = (tmp_path / "groups").glob("*.parquet")
+    assert pq.ParquetFile(single).metadata.num_row_groups > 1
+
+
+def test_parquet_footer_reader_rejects_broken_files(tmp_path):
+    """A truncated file, a file that is not parquet, an empty file and a
+    footer that ends before its row count raise instead of counting."""
+    import pandas as pd
+    import pytest
+
+    from otar3088_spark.io.checkpoint import parquet_num_rows
+
+    good = tmp_path / "good.parquet"
+    pd.DataFrame({"a": range(10)}).to_parquet(good)
+    assert parquet_num_rows(str(good)) == 10
+    data = good.read_bytes()
+    planted = {
+        "truncated": data[:-5],
+        "not parquet": b'{"a": 1}\n' * 20,
+        "empty": b"",
+        # magic and length intact, footer cut after field 1 (version)
+        "short footer": b"PAR1" + b"\x15\x04" + (2).to_bytes(4, "little") + b"PAR1",
+    }
+    for name, body in planted.items():
+        f = tmp_path / f"{name}.parquet"
+        f.write_bytes(body)
+        with pytest.raises(ValueError):
+            parquet_num_rows(str(f))
