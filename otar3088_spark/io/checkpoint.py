@@ -20,6 +20,7 @@ without schema inference.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import time
@@ -168,12 +169,16 @@ class SnapshotStore:
         object (the same data re-read under a different split size would
         yield a different "lineage"). Per-file rows are exactly the
         north-rule per-partition lineage a resume can check against the
-        directory listing. Manifest write is atomic (tmp + rename) — a
-        crash mid-write leaves the stage uncommitted and a re-run redoes it
-        idempotently.
+        directory listing. The manifest of an earlier commit is removed
+        before ``data/`` is touched, and the new one is written atomically
+        (tmp + rename) after it: a crash or a failed job mid-write, also
+        over a committed stage, leaves the stage uncommitted, and a re-run
+        redoes it idempotently.
         """
         d = self._stage_dir(stage)
         data_dir = os.path.join(d, "data")
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(os.path.join(d, MANIFEST))
         df.write.mode("overwrite").parquet(data_dir)
 
         spark = df.sparkSession

@@ -26,11 +26,14 @@ Operators:
 
 from __future__ import annotations
 
+import sys
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from otar3088_spark.functions.text import let_expr
+from otar3088_spark.memo import BoundedMemo
 
 
 def normalized_text_expr(col: Column) -> Column:
@@ -98,7 +101,8 @@ def _md5_sig_udf(num_hashes: int, shingle_k: int):
     projections over the sf1.0 exploded shingle table = 28 s of an
     originally 38 s signature job, vs 1.9 s for the same shape under
     xxhash64). CPython's ``hashlib.md5`` is the same digest at a fraction
-    of the per-call cost, and a per-task memo collapses repeated shingles
+    of the per-call cost, and a per-task memo (bounded in bytes,
+    ``otar3088_spark.memo``) collapses repeated shingles
     (word-shingle corpora are Zipfian — the synthetic bench corpus has 931
     distinct shingles across 2.6M instances; real prose still repeats its
     head bigrams heavily).
@@ -115,8 +119,10 @@ def _md5_sig_udf(num_hashes: int, shingle_k: int):
     row-at-a-time scalar UDF."""
     import hashlib
 
-    memo: dict[str, tuple] = {}
+    memo = BoundedMemo()
     prefixes = [f"{i}|".encode() for i in range(num_hashes)]
+    # one value: a num_hashes-tuple of 32-char hex strings
+    value_bytes = sys.getsizeof((None,) * num_hashes) + num_hashes * sys.getsizeof("0" * 32)
 
     @F.pandas_udf("array<string>")
     def sigs(nt: pd.Series) -> pd.Series:
@@ -141,8 +147,7 @@ def _md5_sig_udf(num_hashes: int, shingle_k: int):
                 if v is None:
                     b = s.encode()
                     v = tuple(hashlib.md5(p + b).hexdigest() for p in prefixes)
-                    if len(memo) < 1_000_000:  # bound per-task memory
-                        memo[s] = v
+                    memo.put(s, v, value_bytes)
                 rows.append(v)
             out.append([min(col) for col in zip(*rows)])
         return pd.Series(out)
@@ -361,7 +366,7 @@ def _md5_simhash_udf():
 
     import numpy as np
 
-    memo: dict[str, "np.ndarray"] = {}
+    memo = BoundedMemo()
     bit_idx = np.arange(60, dtype=np.int64)
     weights = np.left_shift(np.int64(1), bit_idx)
 
@@ -380,8 +385,7 @@ def _md5_simhash_udf():
                 if v is None:
                     h = int(hashlib.md5(tok.encode()).hexdigest()[:15], 16)
                     v = 2 * ((h >> bit_idx) & 1) - 1
-                    if len(memo) < 1_000_000:
-                        memo[tok] = v
+                    memo.put(tok, v, sys.getsizeof(v))
                 sums += c * v
             out.append(int(weights[sums > 0].sum()))
         return pd.Series(out, dtype="object")

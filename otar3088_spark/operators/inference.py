@@ -6,7 +6,10 @@ Spark-first shape is an Arrow-batched ``mapInArrow`` with a per-executor
 model singleton: one Python worker per task, model loaded once per executor
 process, batches sized by ``spark.sql.execution.arrow.maxRecordsPerBatch``.
 The batch functions read and write ``pyarrow.RecordBatch`` directly, so no
-pandas is imported into the Python workers (see ``otar3088_spark.arrow``).
+pandas is imported into the Python workers. They live in
+``otar3088_spark.arrow``, which the seam's closure imports inside the
+worker: this module builds the plan node and imports no pyarrow, so
+neither does the driver.
 
 This container has no torch/transformers, so the default scorer is a
 DETERMINISTIC STAND-IN (hash-based pseudo-logits over token spans) behind the
@@ -20,15 +23,17 @@ from __future__ import annotations
 
 import hashlib
 from collections.abc import Callable, Iterator, Sequence
+from typing import TYPE_CHECKING
 
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.udf import UserDefinedFunction
 from pyspark.util import PythonEvalType
 
-from otar3088_spark.arrow import float64_array, int32_array, utf8_array
+from otar3088_spark.memo import BoundedMemo
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 MENTION_SCHEMA = T.StructType(
     [
@@ -55,8 +60,9 @@ _MODEL_SINGLETON: dict[str, object] = {}
 # cache: for a given score formula it changes no emitted value. (The score
 # formula was separately changed from /512 to round(·/1000, 4) for exact
 # DuckDB-oracle parity — that was a deliberate value change, not a memo
-# side effect.)
-_TOKEN_MEMO: dict[str, tuple[str, float] | None] = {}
+# side effect.) Bounded by bytes (otar3088_spark.memo): a token past the
+# budget is scored again on every occurrence.
+_TOKEN_MEMO = BoundedMemo()
 
 
 # driver-side strong-ref registry: pins each keyed scorer object alive so
@@ -100,7 +106,6 @@ def _scorer_cache_key(prefix: str, fn: object) -> str:
 # output schemas declare (a LongType turn_idx would otherwise reach the JVM
 # as int64 under an IntegerType schema); the optimizer drops a cast that is
 # already the column's type
-_KEYS = ["conv_id", "turn_idx", "sent_idx"]
 _SEAM_INPUT = (
     "CAST(conv_id AS STRING) AS conv_id",
     "CAST(turn_idx AS INT) AS turn_idx",
@@ -109,18 +114,32 @@ _SEAM_INPUT = (
 )
 
 
+class _ArrowSeamUDF(UserDefinedFunction):
+    # PySpark 4.1.2's returnType runs _check_return_type on every read, and
+    # for SQL_MAP_ARROW_ITER_UDF that calls to_arrow_type, which imports
+    # pyarrow into the driver (pyspark/sql/udf.py, pyspark/sql/pandas/types.py).
+    # The seam schemas' Arrow conversion is pinned by a test instead.
+    @property
+    def returnType(self) -> T.DataType:
+        return self._returnType
+
+
 def _map_sentences(
     sentences: DataFrame,
-    batch_fn: Callable[[pa.RecordBatch, Callable], pa.RecordBatch],
+    batch: str,
     model_fn: Callable,
     batch_key: str,
     schema: T.StructType,
 ) -> DataFrame:
-    """One Arrow-batched pass of ``batch_fn(batch, model)`` over sentence
-    rows; ``model_fn`` is loaded once per executor process under
-    ``batch_key`` (the singleton)."""
+    """One Arrow-batched pass of ``otar3088_spark.arrow.<batch>(rb, model)``
+    over sentence rows; ``model_fn`` is loaded once per executor process
+    under ``batch_key`` (the singleton). The batch function is looked up
+    inside the worker, so pyarrow is imported only there."""
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        from otar3088_spark import arrow
+
+        batch_fn = getattr(arrow, batch)
         model = _MODEL_SINGLETON.setdefault(batch_key, model_fn)
         for rb in batches:
             if rb.num_rows:
@@ -131,7 +150,7 @@ def _map_sentences(
     # pandas into the driver (pyspark/sql/pandas/map_ops.py). The plan node
     # is the same MapInArrow.
     seam = sentences.selectExpr(*_SEAM_INPUT)
-    udf = UserDefinedFunction(run, schema, evalType=PythonEvalType.SQL_MAP_ARROW_ITER_UDF)
+    udf = _ArrowSeamUDF(run, schema, evalType=PythonEvalType.SQL_MAP_ARROW_ITER_UDF)
     col = udf(*[seam[c] for c in seam.columns])
     return DataFrame(seam._jdf.mapInArrow(col._jc, False, None), seam.sparkSession)
 
@@ -156,58 +175,13 @@ def _stand_in_scorer(sentences: Sequence[str]) -> list[list[tuple[int, int, str,
                         hit = (label, round(0.5 + h[2] / 1000.0, 4))
                     else:
                         hit = None
-                    if len(memo) < 1_000_000:
-                        memo[tok] = hit
+                    # a (label, score) tuple holds 56 + 24 bytes; None is shared
+                    memo.put(tok, hit, 80 if hit else 0)
                 if hit is not None:
                     spans.append((cur, cur + n, hit[0], hit[1]))
             cur += n + 1
         out.append(spans)
     return out
-
-
-_MENTION_ARROW = to_arrow_schema(MENTION_SCHEMA)
-
-
-def score_mention_batch(
-    rb: pa.RecordBatch,
-    scorer: Callable[[Sequence[str]], list[list[tuple[int, int, str, float]]]],
-) -> pa.RecordBatch:
-    """One sentence batch (``conv_id, turn_idx, sent_idx, sent_text``) ->
-    one ``MENTION_SCHEMA`` batch, a row per scored span. The scorer gets the
-    batch's sentences as a ``list[str]``."""
-    texts = rb.column("sent_text").to_pylist()
-    preds = scorer(texts)
-    # a scorer that filters rows (returns fewer lists than inputs) must fail
-    # loudly — a bare zip would truncate and silently drop every trailing
-    # sentence's mentions from the batch
-    if len(preds) != len(texts):
-        raise ValueError(
-            f"scorer returned {len(preds)} span lists for "
-            f"{len(texts)} sentences; it must return exactly one list "
-            "per input row (empty list for no mentions)"
-        )
-    rows, starts, ends, surfaces, labels, scores = [], [], [], [], [], []
-    for i, (text, spans) in enumerate(zip(texts, preds)):
-        for s, e, lab, sc in spans:
-            s, e = int(s), int(e)
-            rows.append(i)
-            starts.append(s)
-            ends.append(e)
-            surfaces.append(text[s:e])
-            labels.append(lab)
-            scores.append(float(sc))
-    keys = rb.select(_KEYS).take(int32_array(rows))
-    return pa.RecordBatch.from_arrays(
-        [
-            *keys.columns,
-            int32_array(starts),
-            int32_array(ends),
-            utf8_array(surfaces),
-            utf8_array(labels),
-            float64_array(scores),
-        ],
-        schema=_MENTION_ARROW,
-    )
 
 
 def model_mentions(
@@ -230,7 +204,7 @@ def model_mentions(
             "standin-ner" if scorer is None else _scorer_cache_key("scorer", scorer)
         )
     return _map_sentences(
-        sentences, score_mention_batch, scorer or _stand_in_scorer, batch_key, MENTION_SCHEMA
+        sentences, "score_mention_batch", scorer or _stand_in_scorer, batch_key, MENTION_SCHEMA
     )
 
 
@@ -292,31 +266,6 @@ def hf_pipeline_scorer(pipe):
     return score
 
 
-_CLASSIFY_ARROW = to_arrow_schema(CLASSIFY_SCHEMA)
-
-
-def classify_batch(
-    rb: pa.RecordBatch, classifier: Callable[[Sequence[str]], list[tuple[str, float]]]
-) -> pa.RecordBatch:
-    """One sentence batch -> one ``CLASSIFY_SCHEMA`` batch, a row per
-    sentence. The classifier gets the batch's sentences as a ``list[str]``."""
-    texts = rb.column("sent_text").to_pylist()
-    preds = classifier(texts)
-    if len(preds) != len(texts):
-        raise ValueError(
-            f"classifier returned {len(preds)} predictions for "
-            f"{len(texts)} sentences; it must return exactly one per input row"
-        )
-    return pa.RecordBatch.from_arrays(
-        [
-            *rb.select(_KEYS).columns,
-            utf8_array(c for c, _ in preds),
-            float64_array(float(s) for _, s in preds),
-        ],
-        schema=_CLASSIFY_ARROW,
-    )
-
-
 def model_classify(
     sentences: DataFrame,
     classifier: Callable[[Sequence[str]], list[tuple[str, float]]] | None = None,
@@ -335,7 +284,7 @@ def model_classify(
             else _scorer_cache_key("cls", classifier)
         )
     return _map_sentences(
-        sentences, classify_batch, classifier or _stand_in_classifier, batch_key, CLASSIFY_SCHEMA
+        sentences, "classify_batch", classifier or _stand_in_classifier, batch_key, CLASSIFY_SCHEMA
     )
 
 

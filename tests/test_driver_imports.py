@@ -1,5 +1,5 @@
-"""The driver of a KG build loads no pandas, and a gazetteer driver no
-pyarrow.
+"""The driver of a KG build loads none of pandas, pyspark.testing,
+unittest, pyarrow.
 
 pandas, ``pyspark.testing`` and ``unittest`` are about a quarter of the
 gazetteer driver's memory, and no KG build uses them. PySpark 4.1 imports
@@ -9,10 +9,12 @@ from its numpy py4j input converters, from ``createDataFrame`` and from
 build path writes its expressions as SQL text, hands its constant tables
 to the JVM as JSON (``session.constant_dataframe``) and builds the model
 seam's ``MapInArrow`` node without ``pandas_udf``. pyarrow (about a third
-of what is left) is needed only by the model seam: the gazetteer path
-collects the dictionary as rows and reads parquet footers in Python. Each
-import check runs in a fresh interpreter, so nothing the test process
-imported can hide an import.
+of what is left) is needed only inside the scoring workers: the gazetteer
+path collects the dictionary as rows and reads parquet footers in Python,
+and the model seam's UDF skips PySpark's driver-side Arrow type check and
+reaches ``otar3088_spark.arrow`` only in the worker. Each import check
+runs in a fresh interpreter, so nothing the test process imported can
+hide an import.
 """
 
 from __future__ import annotations
@@ -25,12 +27,11 @@ import sys
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
-DRIVER_EXTRAS = ("pandas", "pyspark.testing", "unittest")
-GAZETTEER_EXTRAS = (*DRIVER_EXTRAS, "pyarrow")
+DRIVER_EXTRAS = ("pandas", "pyspark.testing", "unittest", "pyarrow")
 
 _REPORT = f"""
 import json, sys
-print(json.dumps({{m: m in sys.modules for m in {GAZETTEER_EXTRAS!r}}}))
+print(json.dumps({{m: m in sys.modules for m in {DRIVER_EXTRAS!r}}}))
 """
 
 
@@ -72,7 +73,7 @@ def test_engine_imports_load_no_pandas():
             *imports,
         ]
     ) + _REPORT
-    assert _run(code, timeout=120) == dict.fromkeys(GAZETTEER_EXTRAS, False)
+    assert _run(code, timeout=120) == dict.fromkeys(DRIVER_EXTRAS, False)
 
 
 def test_lean_numpy_converters(spark):
@@ -151,10 +152,10 @@ def test_build_kg_driver_loads_no_pandas(tmp_path, events_pd):
     events = tmp_path / "events.parquet"
     events_pd.to_parquet(events, index=False)
     got = _run(
-        _BUILDS, timeout=600, args=(str(events), str(tmp_path / "staging"), *GAZETTEER_EXTRAS),
+        _BUILDS, timeout=600, args=(str(events), str(tmp_path / "staging"), *DRIVER_EXTRAS),
         env={"SPARK_DRIVER_MEMORY": "1g"},
     )
-    assert got.pop("modules") == dict.fromkeys(GAZETTEER_EXTRAS, False)
+    assert got.pop("modules") == dict.fromkeys(DRIVER_EXTRAS, False)
     plain, pairs, with_events = got["plain"], got["pair_anchors"], got["events"]
     assert all(plain[part] for part in ("triples", "nodes", "edges"))
     # pair anchoring changes the candidate blocking, never the spans
@@ -186,7 +187,7 @@ def test_build_kg_model_driver_loads_no_pandas(spark):
     """``build_kg(use_model=True)`` over ``fixtures/kg`` scores through a
     ``MapInArrow`` node and gives the triples, nodes and edges of the same
     build in this process, and afterwards its driver has loaded none of
-    pandas, pyspark.testing, unittest."""
+    pandas, pyspark.testing, unittest, pyarrow."""
     from otar3088_spark.plans.kg_pipeline import build_kg
     from otar3088_spark.queries import KG_FIXTURE_DIR
 
@@ -198,3 +199,34 @@ def test_build_kg_model_driver_loads_no_pandas(spark):
     for part in ("triples", "nodes", "edges"):
         want = sorted(repr(tuple(r)) for r in getattr(res, part).collect())
         assert want and got[part] == want, part
+
+
+_SEAM_PLANS = """
+import json, sys
+import otar3088_spark.operators.inference as inference
+
+got = {"import": {m: m in sys.modules for m in sys.argv[1:]}}
+from otar3088_spark.session import get_spark
+
+spark = get_spark(app_name="driver-imports-seam", cores=2)
+sents = spark.sql(
+    "SELECT 'c0' AS conv_id, 0 AS turn_idx, 0 AS sent_idx, 'aspirin eased headache' AS sent_text"
+)
+got["plans"] = [
+    seam(sents)._jdf.queryExecution().optimizedPlan().toString()
+    for seam in (inference.model_mentions, inference.model_classify)
+]
+spark.stop()
+got["modules"] = {m: m in sys.modules for m in sys.argv[1:]}
+print(json.dumps(got))
+"""
+
+
+def test_model_seam_plans_load_no_pyarrow():
+    """Importing ``inference`` and building the ``model_mentions`` and
+    ``model_classify`` plans (no action) loads none of pandas,
+    pyspark.testing, unittest, pyarrow: the seam's Arrow code is reached
+    only inside the scoring worker."""
+    got = _run(_SEAM_PLANS, timeout=300, args=DRIVER_EXTRAS, env={"SPARK_DRIVER_MEMORY": "1g"})
+    assert got["import"] == got["modules"] == dict.fromkeys(DRIVER_EXTRAS, False)
+    assert all("MapInArrow run(" in plan for plan in got["plans"])

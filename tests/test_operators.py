@@ -179,10 +179,8 @@ def test_model_mentions_deterministic_and_merged(spark, sent_df):
 _SCORING_WORKER = """
 import json, sys
 import pyarrow as pa
-from otar3088_spark.arrow import int32_array, utf8_array
-from otar3088_spark.operators.inference import (
-    _stand_in_classifier, _stand_in_scorer, classify_batch, score_mention_batch,
-)
+from otar3088_spark.arrow import classify_batch, int32_array, score_mention_batch, utf8_array
+from otar3088_spark.operators.inference import _stand_in_classifier, _stand_in_scorer
 texts = [
     "patients receiving aspirin reported headache nausea fatigue dizziness",
     "naïve café staff in 北京",
@@ -203,8 +201,9 @@ print(json.dumps({
 
 
 def test_scoring_batch_imports_no_pandas():
-    """The scoring worker unpickles the batch function by importing
-    ``inference``, then reads and writes Arrow batches. Neither may load
+    """The scoring worker imports ``otar3088_spark.arrow`` for the batch
+    function and ``inference`` for the stand-in model, then reads and
+    writes Arrow batches. Neither may load
     pandas: it is about 30 MB per worker, and pyarrow's Python-object
     converters import it on first use. A fresh interpreter, so nothing
     else in the test process can have imported it first."""
@@ -233,12 +232,8 @@ def test_model_mentions_replay_multibyte_long_keys(spark):
     from pyspark.sql import types as T
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    from otar3088_spark.arrow import int32_array, utf8_array
-    from otar3088_spark.operators.inference import (
-        MENTION_SCHEMA,
-        model_mentions,
-        score_mention_batch,
-    )
+    from otar3088_spark.arrow import int32_array, score_mention_batch, utf8_array
+    from otar3088_spark.operators.inference import MENTION_SCHEMA, model_mentions
 
     words = {"naïve": "CellType", "café": "Tissue", "北京": "Drug", "aspirin": "Drug"}
     texts = [
@@ -319,6 +314,98 @@ def test_custom_scorer_and_classifier_receive_a_list(spark):
     assert {r["label"] for r in ms} == {"list"} and len(ms) == 3
     assert {r["surface"] for r in ms} == {"sentence"}
     assert {r["cls"] for r in cls} == {"list"} and len(cls) == 3
+
+
+def test_seam_schemas_convert_to_arrow():
+    """The model seams' UDF skips PySpark's driver-side return-type check
+    (it imports pyarrow). This is that check: both declared schemas pass
+    it, convert with ``to_arrow_schema`` to the Arrow types the batch
+    functions write, and are what the seam's UDF reports."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.udf import UserDefinedFunction
+    from pyspark.util import PythonEvalType
+
+    from otar3088_spark.arrow import classify_batch, int32_array, score_mention_batch, utf8_array
+    from otar3088_spark.operators.inference import (
+        CLASSIFY_SCHEMA,
+        MENTION_SCHEMA,
+        _ArrowSeamUDF,
+        _stand_in_classifier,
+        _stand_in_scorer,
+    )
+
+    keys = [("conv_id", "string"), ("turn_idx", "int32"), ("sent_idx", "int32")]
+    want = {
+        "mentions": [*keys, ("start", "int32"), ("end", "int32"), ("surface", "string"),
+                     ("label", "string"), ("score", "double")],
+        "classes": [*keys, ("cls", "string"), ("score", "double")],
+    }
+    rb = pa.RecordBatch.from_arrays(
+        [utf8_array(["c0"]), int32_array([0]), int32_array([1]),
+         utf8_array(["patients receiving aspirin reported headache nausea fatigue"])],
+        names=["conv_id", "turn_idx", "sent_idx", "sent_text"],
+    )
+    for name, schema, batch in (
+        ("mentions", MENTION_SCHEMA, score_mention_batch(rb, _stand_in_scorer)),
+        ("classes", CLASSIFY_SCHEMA, classify_batch(rb, _stand_in_classifier)),
+    ):
+        UserDefinedFunction._check_return_type(schema, PythonEvalType.SQL_MAP_ARROW_ITER_UDF)
+        arrow = to_arrow_schema(schema)
+        assert [(f.name, str(f.type)) for f in arrow] == want[name]
+        assert batch.schema == arrow
+        udf = _ArrowSeamUDF(lambda it: it, schema, evalType=PythonEvalType.SQL_MAP_ARROW_ITER_UDF)
+        assert udf.returnType is schema
+
+
+def test_udf_memos_stop_at_their_byte_budget(monkeypatch):
+    """Planted: distinct long keys fed past a memo budget (lowered to 1 MB
+    here). Each per-worker memo (the stand-in scorer's tokens, the md5
+    min-hash shingles, the md5 SimHash tokens) stops growing at its budget,
+    and every output equals the same function's with a memo that takes
+    nothing."""
+    from otar3088_spark import memo as memo_mod
+    from otar3088_spark.operators import dedup, inference
+
+    budget = 1 << 20
+    # 600 distinct ~10 kB tokens, 3 per normalized text: ~6 MB of keys
+    tokens = [f"t{i:04d}" + "x" * 10_000 for i in range(600)]
+    texts = [" ".join(tokens[i : i + 3]) for i in range(0, 600, 3)]
+    first, second = texts[:100], texts[100:]
+
+    def closure_memo(udf):
+        (m,) = [
+            c.cell_contents for c in udf.func.__closure__
+            if isinstance(c.cell_contents, memo_mod.BoundedMemo)
+        ]
+        return m
+
+    def scorer_memo():
+        monkeypatch.setattr(inference, "_TOKEN_MEMO", memo_mod.BoundedMemo())
+        return inference._stand_in_scorer, inference._TOKEN_MEMO
+
+    def sig_memo():
+        udf = dedup._md5_sig_udf(num_hashes=4, shingle_k=1)
+        return lambda t: list(udf.func(pd.Series(t))), closure_memo(udf)
+
+    def simhash_memo():
+        udf = dedup._md5_simhash_udf()
+        return lambda t: list(udf.func(pd.Series(t))), closure_memo(udf)
+
+    for make in (scorer_memo, sig_memo, simhash_memo):
+        monkeypatch.setattr(memo_mod, "MEMO_BUDGET_BYTES", budget)
+        fn, memo = make()
+        got = fn(first)
+        full = len(memo)
+        assert 0 < full < 300 and memo.nbytes <= budget, make.__name__
+        got += fn(second)
+        assert len(memo) == full and memo.nbytes <= budget, make.__name__
+
+        monkeypatch.setattr(memo_mod, "MEMO_BUDGET_BYTES", 0)
+        fn, memo = make()
+        assert fn(texts) == got and len(memo) == 0, make.__name__
+    # the stand-in did score spans, so the comparison saw real values
+    assert any(inference._stand_in_scorer(texts))
 
 
 # ---------------------------------------------------------------- multimodal
@@ -433,6 +520,35 @@ def test_snapshot_resume(spark, tmp_path, job_count):
     inferred = spark.read.parquet(str(tmp_path / "ckpt" / "stage1" / "data")).schema
     assert man["schema"] == inferred.jsonValue()
     assert df2.schema == inferred
+
+
+def test_snapshot_failed_rewrite_leaves_stage_uncommitted(spark, tmp_path):
+    """Planted: a committed 10-row stage, then a ``write`` over it whose
+    row 7 fails (``raise_error``). The failed rewrite leaves the stage
+    uncommitted, not an old manifest over emptied data, so
+    ``get_or_compute`` recomputes all 10 rows."""
+    from otar3088_spark.io.checkpoint import SnapshotStore
+
+    store = SnapshotStore(str(tmp_path / "ckpt"))
+    good = spark.range(10).selectExpr("id")
+    assert store.write(good, "stage")["total_rows"] == 10
+    bad = spark.range(10).selectExpr(
+        "CASE WHEN id = 7 THEN raise_error('planted rewrite failure') ELSE id END AS id"
+    )
+    with pytest.raises(Exception, match="planted rewrite failure"):
+        store.write(bad, "stage")
+    assert not store.is_committed("stage")
+
+    calls = []
+
+    def compute():
+        calls.append(1)
+        return good
+
+    df = store.get_or_compute(spark, "stage", compute)
+    assert calls == [1]
+    assert sorted(r.id for r in df.collect()) == list(range(10))
+    assert store.manifest("stage")["total_rows"] == 10
 
 
 # ---------------------------------------------------------------- similarity
