@@ -5,6 +5,7 @@ schemas and column builders.
 Their pickled ``run`` closure imports this module inside the Python worker,
 so the driver never loads pyarrow (about 33 MB) for a seam whose batches it
 never sees. A gazetteer build does not reach this module at all.
+``load_model`` keeps each seam's model for the life of the (reused) worker.
 
 pyarrow's Python-object converters (``pa.array``, also over numpy input,
 ``pa.scalar``, ``RecordBatch.from_pydict``/``from_pylist``) import pandas on
@@ -16,7 +17,9 @@ output batches straight from raw buffers.
 from __future__ import annotations
 
 import array
+import importlib
 import itertools
+import json
 from collections.abc import Callable, Iterable, Sequence
 
 import pyarrow as pa
@@ -28,6 +31,26 @@ from otar3088_spark.operators.inference import CLASSIFY_SCHEMA, MENTION_SCHEMA
 _KEYS = ["conv_id", "turn_idx", "sent_idx"]
 MENTION_ARROW = to_arrow_schema(MENTION_SCHEMA)
 CLASSIFY_ARROW = to_arrow_schema(CLASSIFY_SCHEMA)
+
+# {batch function name: (spec key, model)}: at most one model per seam
+_MODELS: dict[str, tuple[str, object]] = {}
+
+
+def load_model(batch: str, key: str) -> object:
+    """The model that the ``inference.ModelSpec`` key names, for the seam
+    whose batch function is ``batch``. The factory runs on a worker's first
+    task with that spec; a different spec on the same seam replaces it."""
+    hit = _MODELS.get(batch)
+    if hit is None or hit[0] != key:
+        _MODELS.pop(batch, None)  # never hold two models of one seam
+        factory, args = json.loads(key)
+        module, _, name = factory.partition(":")
+        try:
+            load = getattr(importlib.import_module(module), name)
+        except (ImportError, AttributeError) as e:
+            raise ImportError(f"model factory {factory!r} does not import: {e}") from e
+        hit = _MODELS[batch] = (key, load(**args))
+    return hit[1]
 
 
 # Array.from_buffers over an array.array converts nothing.

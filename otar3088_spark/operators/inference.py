@@ -1,28 +1,33 @@
 """Model-scored mention detection — the sanctioned ``mapInArrow`` surface (M1).
 
 The reference runs HF token-classification in a torch ``no_grad`` loop at
-batch_size=4 (model_tests.ipynb cell 6; trial_to_papers.ipynb cell 12). The
-Spark-first shape is an Arrow-batched ``mapInArrow`` with a per-executor
-model singleton: one Python worker per task, model loaded once per executor
-process, batches sized by ``spark.sql.execution.arrow.maxRecordsPerBatch``.
+batch_size=4 (model_tests.ipynb cell 6; trial_to_papers.ipynb cell 12): load
+the pipeline once, then score. Here an Arrow-batched ``mapInArrow`` carries
+only a ``ModelSpec`` (an importable factory path plus JSON arguments); each
+Python worker calls the factory once (``otar3088_spark.arrow.load_model``) and
+scores batches of ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows.
 The batch functions read and write ``pyarrow.RecordBatch`` directly, so no
 pandas is imported into the Python workers. They live in
 ``otar3088_spark.arrow``, which the seam's closure imports inside the
 worker: this module builds the plan node and imports no pyarrow, so
 neither does the driver.
 
-This container has no torch/transformers, so the default scorer is a
-DETERMINISTIC STAND-IN (hash-based pseudo-logits over token spans) behind the
-exact same UDF signature — CI-friendly, and a real HF pipeline plugs in by
-passing ``scorer=``. The BIO-decode + ``##``-subword-merge semantics (F19,
-trial_to_papers.ipynb cell 11) live in plain Python *inside the batch*, which
-is the sanctioned place for them (SURVEY.md §2.9).
+The default specs name a DETERMINISTIC STAND-IN (hash-based pseudo-logits
+over token spans) behind the exact same batch contract, so the seams run
+without torch/transformers; a real HF pipeline plugs in as
+``ModelSpec(".../inference:hf_pipeline_scorer", {"model": path})``. The
+BIO-decode + ``##``-subword-merge semantics (F19, trial_to_papers.ipynb
+cell 11) live in plain Python *inside the batch*, which is the sanctioned
+place for them (SURVEY.md §2.9).
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Callable, Iterator, Sequence
+import json
+import re
+from collections.abc import Iterator, Mapping, Sequence
+from dataclasses import dataclass, field
 from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
@@ -50,56 +55,38 @@ MENTION_SCHEMA = T.StructType(
 
 _LABELS = ("CellLine", "CellType", "Tissue", "Drug", "AdverseEvent")
 
-# per-executor-process singleton slot (the 'model' in a real deployment)
-_MODEL_SINGLETON: dict[str, object] = {}
 
-
-# per-executor memo: token -> (label, score) or None (md5 is deterministic,
+# per-worker memo: token -> (label, score) or None (md5 is deterministic,
 # token vocabularies are Zipf-distributed — the memo removes nearly all
-# hashlib calls from the stand-in's hot loop). The memo itself is a pure
-# cache: for a given score formula it changes no emitted value. (The score
-# formula was separately changed from /512 to round(·/1000, 4) for exact
-# DuckDB-oracle parity — that was a deliberate value change, not a memo
-# side effect.) Bounded by bytes (otar3088_spark.memo): a token past the
-# budget is scored again on every occurrence.
+# hashlib calls from the stand-in's hot loop; it changes no emitted value).
+# Bounded by bytes (otar3088_spark.memo): a token past the budget is scored
+# again on every occurrence.
 _TOKEN_MEMO = BoundedMemo()
 
-
-# driver-side strong-ref registry: pins each keyed scorer object alive so
-# CPython can never recycle its id() for a different callable while the key
-# is in use (an id collision would silently serve the wrong model)
-_KEY_REGISTRY: dict[str, object] = {}
+_FACTORY_PATH = re.compile(r"[A-Za-z_]\w*(\.[A-Za-z_]\w*)*:[A-Za-z_]\w*")
 
 
-def _scorer_cache_key(prefix: str, fn: object) -> str:
-    """Per-executor cache key for a scorer/classifier callable.
+@dataclass(frozen=True)
+class ModelSpec:
+    """Names a model: an importable ``"pkg.module:callable"`` factory and its
+    JSON-able keyword ``args``; nothing is imported on the driver. ``key``,
+    their canonical JSON, is a seam task's whole payload, the worker's cache
+    key and the span stage's fingerprint input; specs compare by it."""
 
-    Keyed by module.qualname PLUS the driver-side object identity: repeated
-    calls with the SAME scorer object share one loaded model per executor
-    (no per-call uuid, no per-call model 'load'/leak), while two distinct
-    same-qualname callables — differently-configured closures,
-    ``functools.partial`` wrappers (which all share qualname 'partial') —
-    can never collide and silently serve each other's model. The registry
-    keeps keyed objects alive so an id() is never recycled under a live
-    key. Callers that rebuild an equivalent scorer object per call should
-    pass an explicit ``batch_key`` to share the loaded model across calls.
-    """
-    mod = getattr(fn, "__module__", None) or type(fn).__module__
-    qn = getattr(fn, "__qualname__", None) or type(fn).__qualname__
-    key = f"{prefix}-{mod}.{qn}@{id(fn):x}"
-    _KEY_REGISTRY[key] = fn
-    if len(_KEY_REGISTRY) > 64:
-        import warnings
+    factory: str
+    args: Mapping = field(default_factory=dict, compare=False)
+    key: str = field(init=False, repr=False)
 
-        warnings.warn(
-            f"{len(_KEY_REGISTRY)} distinct scorer/classifier objects are "
-            "pinned in the driver registry (and one loaded model per key on "
-            "each executor). If you construct a new scorer per call, pass an "
-            "explicit batch_key= to share one loaded model across calls.",
-            ResourceWarning,
-            stacklevel=3,
-        )
-    return key
+    def __post_init__(self):
+        if not isinstance(self.factory, str) or not _FACTORY_PATH.fullmatch(self.factory):
+            raise TypeError(f"ModelSpec factory must be 'pkg.module:callable', got {self.factory!r}")
+        if not isinstance(self.args, Mapping) or not all(isinstance(k, str) for k in self.args):
+            raise TypeError(f"ModelSpec args must be a mapping with str keys, got {self.args!r}")
+        try:
+            key = json.dumps([self.factory, self.args], sort_keys=True, separators=(",", ":"))
+        except (TypeError, ValueError) as e:
+            raise TypeError(f"ModelSpec args of {self.factory} are not JSON: {e}") from None
+        object.__setattr__(self, "key", key)
 
 
 # the key columns every model seam passes through, cast to the types the
@@ -125,22 +112,21 @@ class _ArrowSeamUDF(UserDefinedFunction):
 
 
 def _map_sentences(
-    sentences: DataFrame,
-    batch: str,
-    model_fn: Callable,
-    batch_key: str,
-    schema: T.StructType,
+    sentences: DataFrame, batch: str, spec: ModelSpec, schema: T.StructType
 ) -> DataFrame:
     """One Arrow-batched pass of ``otar3088_spark.arrow.<batch>(rb, model)``
-    over sentence rows; ``model_fn`` is loaded once per executor process
-    under ``batch_key`` (the singleton). The batch function is looked up
-    inside the worker, so pyarrow is imported only there."""
+    over sentence rows, the model named by ``spec``. The batch function and
+    the model are looked up inside the worker, so pyarrow is imported only
+    there."""
+    if not isinstance(spec, ModelSpec):
+        raise TypeError(f"a model seam takes ModelSpec('pkg.module:factory', {{json args}}), "
+                        f"not {type(spec).__name__}")
+    key = spec.key
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from otar3088_spark import arrow
 
-        batch_fn = getattr(arrow, batch)
-        model = _MODEL_SINGLETON.setdefault(batch_key, model_fn)
+        batch_fn, model = getattr(arrow, batch), arrow.load_model(batch, key)
         for rb in batches:
             if rb.num_rows:
                 yield batch_fn(rb, model)
@@ -184,27 +170,23 @@ def _stand_in_scorer(sentences: Sequence[str]) -> list[list[tuple[int, int, str,
     return out
 
 
-def model_mentions(
-    sentences: DataFrame,
-    scorer: Callable[[Sequence[str]], list[list[tuple[int, int, str, float]]]] | None = None,
-    batch_key: str | None = None,
-) -> DataFrame:
+def load_stand_in_scorer():
+    """Factory of the default mention spec: the md5 stand-in itself."""
+    return _stand_in_scorer
+
+
+STAND_IN_SCORER = ModelSpec("otar3088_spark.operators.inference:load_stand_in_scorer")
+
+
+def model_mentions(sentences: DataFrame, scorer: ModelSpec | None = None) -> DataFrame:
     """Batched model inference over sentence rows -> mention spans.
 
-    ``scorer(sent_texts) -> [[(start, end, label, score), ...], ...]`` gets
-    one Arrow batch's sentences as a ``list[str]`` and is loaded once per
-    executor process (singleton dict) — swapping in a real HF
-    ``pipeline("token-classification")`` changes nothing structurally.
-    The singleton key defaults to a per-scorer identity so a session that
-    first ran the stand-in can never silently serve a later, different
-    scorer from the cache; pass ``batch_key`` explicitly to share one loaded
-    model across calls."""
-    if batch_key is None:
-        batch_key = (
-            "standin-ner" if scorer is None else _scorer_cache_key("scorer", scorer)
-        )
+    ``scorer`` names a factory whose model maps one Arrow batch's sentences
+    (a ``list[str]``) to ``[[(start, end, label, score), ...], ...]``; None
+    is the md5 stand-in. Each Python worker loads the model once per spec
+    (a real HF pipeline: ``hf_pipeline_scorer``), not once per task."""
     return _map_sentences(
-        sentences, "score_mention_batch", scorer or _stand_in_scorer, batch_key, MENTION_SCHEMA
+        sentences, "score_mention_batch", scorer or STAND_IN_SCORER, MENTION_SCHEMA
     )
 
 
@@ -235,18 +217,27 @@ def _stand_in_classifier(sentences: Sequence[str]) -> list[tuple[str, float]]:
     return out
 
 
-def hf_pipeline_scorer(pipe):
-    """Adapt a transformers ``pipeline("token-classification",
-    aggregation_strategy="simple")`` to the ``model_mentions`` scorer
-    contract: entity dicts with character offsets / softmax scores become
+def load_stand_in_classifier():
+    """Factory of the default classifier spec: the md5 stand-in itself."""
+    return _stand_in_classifier
+
+
+STAND_IN_CLASSIFIER = ModelSpec("otar3088_spark.operators.inference:load_stand_in_classifier")
+
+
+def hf_pipeline_scorer(model: str):
+    """Factory for ``ModelSpec("otar3088_spark.operators.inference:hf_pipeline_scorer",
+    {"model": <local model path>})``: builds a transformers
+    ``pipeline("token-classification", aggregation_strategy="simple")``
+    inside the worker and adapts it to the ``model_mentions`` contract —
+    entity dicts with character offsets / softmax scores become
     ``(start, end, entity_group, score)`` tuples per sentence.
 
-    This is the production fill for the scorer seam (reference lineage:
-    model_tests.ipynb cell 6). Pure data-shape adaptation — batching,
-    per-executor singleton loading and Arrow transport stay in
-    ``model_mentions``. Pass the resulting callable as ``scorer=`` together
-    with a stable ``batch_key`` (e.g. the model name) so every executor
-    shares one loaded model."""
+    The production fill for the scorer seam (reference lineage:
+    model_tests.ipynb cell 6): the weights are read once per Python worker."""
+    from transformers import pipeline
+
+    pipe = pipeline("token-classification", model=model, aggregation_strategy="simple")
 
     def score(sentences: Sequence[str]) -> list[list[tuple[int, int, str, float]]]:
         texts = list(sentences)
@@ -266,25 +257,15 @@ def hf_pipeline_scorer(pipe):
     return score
 
 
-def model_classify(
-    sentences: DataFrame,
-    classifier: Callable[[Sequence[str]], list[tuple[str, float]]] | None = None,
-    batch_key: str | None = None,
-) -> DataFrame:
+def model_classify(sentences: DataFrame, classifier: ModelSpec | None = None) -> DataFrame:
     """M2 sequence classification (reference model_tests.ipynb cell 6 runs a
     sequence head in the same torch loop as token classification): one
     (class, score) per sentence row, Arrow-batched mapInArrow with the same
-    per-executor-singleton loading discipline (and per-scorer cache keying)
-    and the same batch helpers as ``model_mentions``. A real HF
-    ``pipeline("text-classification")`` plugs in via ``classifier=``."""
-    if batch_key is None:
-        batch_key = (
-            "standin-seqcls"
-            if classifier is None
-            else _scorer_cache_key("cls", classifier)
-        )
+    spec-named, once-per-worker model loading and the same batch helpers as
+    ``model_mentions``. ``classifier`` names a factory whose model maps a
+    ``list[str]`` to ``[(class, score), ...]``; None is the md5 stand-in."""
     return _map_sentences(
-        sentences, "classify_batch", classifier or _stand_in_classifier, batch_key, CLASSIFY_SCHEMA
+        sentences, "classify_batch", classifier or STAND_IN_CLASSIFIER, CLASSIFY_SCHEMA
     )
 
 

@@ -28,6 +28,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 from functools import cached_property
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -42,12 +43,15 @@ from otar3088_spark.operators.tagging import (
 )
 from otar3088_spark.operators.triples import causes_triples, graph_tables, mention_triples
 
+if TYPE_CHECKING:
+    from otar3088_spark.operators.inference import ModelSpec
+
 
 def _span_stage_fingerprint(
     dictionary: DataFrame | PreparedDictionary, use_model: bool, scorer, lemma_overrides=None
 ) -> str:
     """Hex fingerprint of everything the span stage's output depends on
-    besides the transcripts: the model toggle, the scorer identity, the
+    besides the transcripts: the model toggle, the scorer's ``ModelSpec``, the
     lemma overrides and the dictionary's ``PreparedDictionary.digest``.
 
     The prepared grain is enough. The span stage reads the dictionary only
@@ -70,18 +74,9 @@ def _span_stage_fingerprint(
     if not isinstance(dictionary, PreparedDictionary):
         dictionary = prepare_dictionary(dictionary)
     pdict = as_prepared(dictionary, lemma_overrides)
-    # Custom scorers fingerprint by OBJECT identity (qualname + id), not
-    # qualname alone: two differently-configured same-qualname closures must
-    # never share a snapshot (stale-config reuse). Consequence: a custom-
-    # scorer stage never resumes across process restarts (id changes ->
-    # recompute, which is the safe direction); the default/stand-in paths
-    # (scorer None) keep stable names and full cross-run resume.
-    if scorer is None:
-        scorer_id = "none"
-    else:
-        from otar3088_spark.operators.inference import _scorer_cache_key
-
-        scorer_id = _scorer_cache_key("fp", scorer)
+    # a ModelSpec fingerprints by its canonical key: the same factory and
+    # args resume across restarts, other args get another stage name
+    scorer_id = "none" if scorer is None else scorer.key
     lemma_fp = hashlib.sha1(repr(sorted(pdict.lemma_overrides.items())).encode()).hexdigest()[:8]
     key = (
         f"model={bool(use_model or scorer is not None)};scorer={scorer_id};"
@@ -122,7 +117,7 @@ def build_kg(
     persist_spans: bool = False,
     staging_dir: str | None = None,
     use_model: bool = False,
-    model_scorer=None,
+    model_scorer: ModelSpec | None = None,
     lemma_overrides: dict[str, str] | None = None,
 ) -> KGResult:
     """Run the full pipeline; returns every intermediate as a DataFrame.
@@ -158,8 +153,8 @@ def build_kg(
     spans = tag_mentions(sentences, pdict)
     if use_model or model_scorer is not None:
         # North-star transformer branch: batched model inference
-        # (mapInArrow, per-executor singleton — a real HF scorer plugs in
-        # via model_scorer), entity-link candidate generation against the
+        # (mapInArrow; model_scorer, a ModelSpec, names the model each
+        # Python worker loads once), entity-link candidate generation against the
         # broadcast dictionary, then source-precedence merge with the
         # gazetteer spans (dict wins exact span collisions). One extra
         # shuffle total (the merge groupBy); the model pass itself is a
@@ -180,7 +175,7 @@ def build_kg(
         # snapshot and recomputes only the downstream tail.
         #
         # The stage name carries a CONFIG FINGERPRINT (use_model, scorer
-        # identity, content hash of the prepared dictionary): re-running
+        # spec key, content hash of the prepared dictionary): re-running
         # against the same staging_dir with a different configuration gets a
         # different stage name and recomputes, instead of silently serving a
         # stale span snapshot built under the old config. The dictionary

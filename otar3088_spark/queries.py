@@ -697,7 +697,7 @@ def q_simhash_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_model_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic stand-in transformer inference via mapInArrow (M1) over
-    documents-as-sentences; per-executor model singleton, Arrow batches."""
+    documents-as-sentences; the default ModelSpec, loaded once per worker."""
     from otar3088_spark.operators.inference import model_mentions
 
     d = _t(spark, sf_dir, "documents").select(

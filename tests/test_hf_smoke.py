@@ -3,10 +3,12 @@
 This sandbox ships no torch/transformers, so the test below is
 collected-but-skipped here. The day the environment gains them, it runs a
 REAL (tiny, randomly initialized, network-free) BERT token-classification
-pipeline through ``model_mentions``' scorer seam via ``hf_pipeline_scorer``
-and asserts the structural invariants every scorer must satisfy — schema,
-offset sanity, surface/text agreement — not golden values (random weights
-make predictions arbitrary; the contract is what matters).
+model, saved to a local directory, through ``model_mentions``' scorer seam:
+a ``ModelSpec`` names the ``hf_pipeline_scorer`` factory and that path, so
+each Python worker builds the pipeline itself. It asserts the structural
+invariants every scorer must satisfy — schema, offset sanity, surface/text
+agreement — not golden values (random weights make predictions arbitrary;
+the contract is what matters).
 
 Reference lineage: /root/reference/Data_mining/variant/model_tests.ipynb
 cell 6 (HF token-classification pipeline with aggregation_strategy="simple").
@@ -27,18 +29,9 @@ _HAS_TORCH = (
 @pytest.mark.skipif(not _HAS_TORCH, reason="torch/transformers not installed")
 def test_real_hf_token_classification_through_scorer_seam(spark, tmp_path):
     import torch
-    from transformers import (
-        BertConfig,
-        BertForTokenClassification,
-        BertTokenizerFast,
-        pipeline,
-    )
+    from transformers import BertConfig, BertForTokenClassification, BertTokenizerFast
 
-    from otar3088_spark.operators.inference import (
-        MENTION_SCHEMA,
-        hf_pipeline_scorer,
-        model_mentions,
-    )
+    from otar3088_spark.operators.inference import MENTION_SCHEMA, ModelSpec, model_mentions
 
     # tiny vocab + random-weight model: no network, no model hub
     vocab = [
@@ -58,11 +51,9 @@ def test_real_hf_token_classification_through_scorer_seam(spark, tmp_path):
         label2id={l: i for i, l in enumerate(labels)},
     )
     torch.manual_seed(0)
-    model = BertForTokenClassification(cfg)
-    pipe = pipeline(
-        "token-classification", model=model, tokenizer=tok,
-        aggregation_strategy="simple",
-    )
+    model_dir = tmp_path / "tiny-bert"
+    BertForTokenClassification(cfg).save_pretrained(model_dir)
+    tok.save_pretrained(model_dir)
 
     sents = spark.createDataFrame(
         [
@@ -73,7 +64,8 @@ def test_real_hf_token_classification_through_scorer_seam(spark, tmp_path):
         ["conv_id", "turn_idx", "sent_idx", "sent_text"],
     )
     out = model_mentions(
-        sents, scorer=hf_pipeline_scorer(pipe), batch_key="tiny-bert-smoke"
+        sents,
+        ModelSpec("otar3088_spark.operators.inference:hf_pipeline_scorer", {"model": str(model_dir)}),
     )
     assert out.schema == MENTION_SCHEMA
     rows = out.collect()

@@ -183,19 +183,12 @@ def test_model_branch_adds_linked_mentions(
     still at exact parity with the equally-permissive oracle."""
     import pandas as _pd
 
-    def perm_scorer(sentences):
-        out = []
-        for sent in sentences:
-            spans, cur = [], 0
-            for tok in sent.split(" "):
-                if len(tok) >= 4:
-                    spans.append((cur, cur + len(tok), "Candidate", 0.9))
-                cur += len(tok) + 1
-            out.append(spans)
-        return out
+    from tests.scorer_factories import permissive, spec
+
+    perm_scorer = permissive()
 
     base = build_kg(transcripts_df, dictionary_df)
-    merged = build_kg(transcripts_df, dictionary_df, model_scorer=perm_scorer)
+    merged = build_kg(transcripts_df, dictionary_df, model_scorer=spec("permissive"))
     base_t = set(map(tuple, base.triples.select("subj", "pred", "obj").distinct().collect()))
     merged_t = set(map(tuple, merged.triples.select("subj", "pred", "obj").distinct().collect()))
     assert base_t < merged_t, "model branch should strictly add linked mentions"
@@ -419,6 +412,7 @@ def test_recorded_hf_ner_output_links(spark):
         merge_spans_with_model,
         model_mentions,
     )
+    from tests.scorer_factories import spec
 
     fx = json.loads(
         (Path(__file__).parent / "fixtures" / "hf_ner_output.json").read_text()
@@ -430,9 +424,6 @@ def test_recorded_hf_ner_output_links(spark):
         ]
         for s in fx["sentences"]
     }
-
-    def replay_scorer(texts):
-        return [by_text[t] for t in texts]
 
     sents_pd = pd.DataFrame(
         [("c0", 0, s["sent_idx"], s["text"]) for s in fx["sentences"]],
@@ -457,7 +448,7 @@ def test_recorded_hf_ner_output_links(spark):
     )
     d = prepare_dictionary(spark.createDataFrame(dict_pd))
 
-    ms = model_mentions(sents, scorer=replay_scorer)
+    ms = model_mentions(sents, scorer=spec("replay", spans=by_text))
     got_raw = {
         (r["sent_idx"], r["start"], r["end"], r["surface"], r["label"], r["score"])
         for r in ms.collect()
@@ -1173,6 +1164,7 @@ def test_recorded_hf_ner_output_first_strategy_links(spark):
         link_model_mentions,
         model_mentions,
     )
+    from tests.scorer_factories import spec
 
     fx = json.loads(
         (Path(__file__).parent / "fixtures" / "hf_ner_output_first.json").read_text()
@@ -1194,9 +1186,6 @@ def test_recorded_hf_ner_output_first_strategy_links(spark):
         for s in fx["sentences"]
     }
 
-    def replay_scorer(texts):
-        return [by_text[t] for t in texts]
-
     sents = spark.createDataFrame(
         pd.DataFrame(
             [("c0", 0, s["sent_idx"], s["text"]) for s in fx["sentences"]],
@@ -1216,7 +1205,7 @@ def test_recorded_hf_ner_output_first_strategy_links(spark):
         )
     )
 
-    ms = model_mentions(sents, scorer=replay_scorer)
+    ms = model_mentions(sents, scorer=spec("replay", spans=by_text))
     got_raw = {
         (r["sent_idx"], r["start"], r["end"], r["surface"], r["label"])
         for r in ms.collect()

@@ -234,6 +234,7 @@ def test_model_mentions_replay_multibyte_long_keys(spark):
 
     from otar3088_spark.arrow import int32_array, score_mention_batch, utf8_array
     from otar3088_spark.operators.inference import MENTION_SCHEMA, model_mentions
+    from tests.scorer_factories import find_words, spec
 
     words = {"naïve": "CellType", "café": "Tissue", "北京": "Drug", "aspirin": "Drug"}
     texts = [
@@ -241,19 +242,7 @@ def test_model_mentions_replay_multibyte_long_keys(spark):
         "北京 naïve",
         "nothing here",
     ]
-
-    def replay_scorer(batch):
-        if type(batch) is not list:
-            raise TypeError(f"scorer got {type(batch).__name__}, not list")
-        out = []
-        for t in batch:
-            spans = []
-            for w, lab in words.items():
-                i = t.find(w)
-                if i >= 0:
-                    spans.append((i, i + len(w), lab, 0.5 + len(w) / 100))
-            out.append(spans)
-        return out
+    replay_scorer = find_words(words)
 
     key_schema = T.StructType(
         [
@@ -266,7 +255,7 @@ def test_model_mentions_replay_multibyte_long_keys(spark):
     sents = spark.createDataFrame(
         [("c0", 7, i, t) for i, t in enumerate(texts)], key_schema
     )
-    ms = model_mentions(sents, scorer=replay_scorer, batch_key="replay-multibyte")
+    ms = model_mentions(sents, scorer=spec("find_words", words=words))
     assert ms.schema == MENTION_SCHEMA
     got = {tuple(r) for r in ms.collect()}
     want = {
@@ -282,7 +271,7 @@ def test_model_mentions_replay_multibyte_long_keys(spark):
     ).count() == 0
 
     no_spans = sents.where("sent_idx = 2")
-    assert model_mentions(no_spans, scorer=replay_scorer, batch_key="replay-multibyte").count() == 0
+    assert model_mentions(no_spans, scorer=spec("find_words", words=words)).count() == 0
     rb = pa.RecordBatch.from_arrays(
         [utf8_array(["c0"]), int32_array([7]), int32_array([2]), utf8_array([texts[2]])],
         names=["conv_id", "turn_idx", "sent_idx", "sent_text"],
@@ -297,20 +286,15 @@ def test_custom_scorer_and_classifier_receive_a_list(spark):
     plain ``list[str]``: the contract every scorer in the repo relies on
     (iterate, ``len()``)."""
     from otar3088_spark.operators.inference import model_classify, model_mentions
+    from tests.scorer_factories import spec
 
     sents = spark.createDataFrame(
         [("c0", 0, i, f"sentence number {i}") for i in range(3)],
         ["conv_id", "turn_idx", "sent_idx", "sent_text"],
     )
 
-    def typed_scorer(texts):
-        return [[(0, 8, type(texts).__name__, 1.0)] for _ in texts]
-
-    def typed_classifier(texts):
-        return [(type(texts).__name__, 1.0) for _ in texts]
-
-    ms = model_mentions(sents, scorer=typed_scorer).collect()
-    cls = model_classify(sents, classifier=typed_classifier).collect()
+    ms = model_mentions(sents, scorer=spec("typed_scorer")).collect()
+    cls = model_classify(sents, classifier=spec("typed_classifier")).collect()
     assert {r["label"] for r in ms} == {"list"} and len(ms) == 3
     assert {r["surface"] for r in ms} == {"sentence"}
     assert {r["cls"] for r in cls} == {"list"} and len(cls) == 3
@@ -1046,21 +1030,28 @@ def test_alias_link_symmetric_punctuation_split(spark):
     assert got == {(0, "T1"), (1, "T1"), (2, "T1")}
 
 
-def test_model_mentions_scorer_length_mismatch_raises(spark):
-    """A scorer returning fewer span lists than input rows must fail loudly
-    (a bare zip silently truncated — trailing sentences lost all mentions)."""
-    from otar3088_spark.operators.inference import model_mentions
+@pytest.mark.parametrize(
+    "seam, factory, match",
+    [
+        ("model_mentions", "short_scorer", "span lists"),
+        ("model_classify", "short_classifier", "predictions for"),
+    ],
+    ids=["mentions", "classify"],
+)
+def test_model_mentions_scorer_length_mismatch_raises(spark, seam, factory, match):
+    """A scorer returning fewer span lists (a classifier fewer predictions)
+    than input rows must fail loudly (a bare zip silently truncated —
+    trailing sentences lost all mentions)."""
+    from otar3088_spark.operators import inference
+    from tests.scorer_factories import spec
 
     sents = spark.createDataFrame(
         [("c0", 0, i, f"text {i}") for i in range(4)],
         ["conv_id", "turn_idx", "sent_idx", "sent_text"],
     )
 
-    def bad_scorer(texts):
-        return [[] for _ in range(len(texts) - 1)]  # one short
-
-    with pytest.raises(Exception, match="span lists"):
-        model_mentions(sents, scorer=bad_scorer, batch_key="bad-scorer").collect()
+    with pytest.raises(Exception, match=match):
+        getattr(inference, seam)(sents, spec(factory)).collect()
 
 
 def test_lsh_index_dirty_vectors_degrade_to_null(spark):

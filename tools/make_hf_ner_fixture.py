@@ -2,7 +2,7 @@
 """Materialize the recorded-HF-NER output fixture:
 tests/fixtures/hf_ner_output.json.
 
-Pins the production model seam (inference.model_mentions ``scorer=`` ->
+Pins the production model seam (inference.model_mentions with a replay ``ModelSpec`` ->
 link_model_mentions -> merge_spans_with_model) against output shaped exactly
 like a real HF token-classification pipeline with
 ``aggregation_strategy="simple"`` (reference lineage: model_tests.ipynb
